@@ -478,6 +478,11 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
             for i in range(ncomp):
                 cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]
                 hc, vc = hv >> 4, hv & 0x0F
+                if ncomp == 1 and 1 <= hc <= 4 and 1 <= vc <= 4:
+                    # a single-component scan is non-interleaved: one
+                    # block per MCU whatever the declared sampling
+                    # (T.81 A.2.2)
+                    hc = vc = 1
                 if hc not in (1, 2) or vc not in (1, 2):
                     raise NotImplementedError("sampling factors 1-2 only")
                 comps.append((cid, hc, vc, tq))

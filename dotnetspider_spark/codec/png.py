@@ -101,30 +101,37 @@ def decode_png(data: bytes) -> np.ndarray:
     8-bit non-interlaced grayscale (color type 0, replicated to RGB),
     truecolor (2) and truecolor+alpha (6, alpha dropped — payload
     validation compares color, compositing is a training-time choice).
-    Palette/16-bit/interlaced raise NotImplementedError loudly.
+    Palette/16-bit/interlaced raise NotImplementedError loudly; a
+    truncated or corrupt chunk header or IDAT stream raises ValueError.
     """
     if data[:8] != _PNG_SIG:
         raise ValueError("not a PNG")
     pos, w = 8, 0
     h = bitdepth = coltype = interlace = 0
     idat = b""
-    while pos < len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        tag = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + length]
-        if tag == b"IHDR":
-            w, h, bitdepth, coltype, _, _, interlace = struct.unpack(">IIBBBBB", body)
-        elif tag == b"IDAT":
-            idat += body
-        elif tag == b"IEND":
-            break
-        pos += 12 + length
-    if bitdepth != 8 or interlace != 0 or coltype not in (0, 2, 6):
-        raise NotImplementedError(
-            "only 8-bit non-interlaced gray/RGB/RGBA PNG supported"
-        )
+    try:
+        while pos < len(data):
+            (length,) = struct.unpack(">I", data[pos : pos + 4])
+            tag = data[pos + 4 : pos + 8]
+            body = data[pos + 8 : pos + 8 + length]
+            if tag == b"IHDR":
+                w, h, bitdepth, coltype, _, _, interlace = struct.unpack(
+                    ">IIBBBBB", body
+                )
+            elif tag == b"IDAT":
+                idat += body
+            elif tag == b"IEND":
+                break
+            pos += 12 + length
+        if bitdepth != 8 or interlace != 0 or coltype not in (0, 2, 6):
+            raise NotImplementedError(
+                "only 8-bit non-interlaced gray/RGB/RGBA PNG supported"
+            )
+        raw = np.frombuffer(zlib.decompress(idat), np.uint8)
+    except (struct.error, zlib.error) as e:
+        # network bytes fail closed: the validate UDFs catch ValueError
+        raise ValueError(f"corrupt PNG: {e}") from e
     ch = {0: 1, 2: 3, 6: 4}[coltype]
-    raw = np.frombuffer(zlib.decompress(idat), np.uint8)
     out = _unfilter(raw, h, w, ch)
     if coltype == 0:
         return np.repeat(out, 3, axis=2)

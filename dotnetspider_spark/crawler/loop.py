@@ -1,33 +1,55 @@
-"""The crawl engine: an iterative-batch (BSP) frontier loop.
+"""The crawl engine: an iterative-batch (BSP) frontier loop, written as
+state -> step -> phases.
 
 Replaces the reference's thread-poll loop (Spider.cs:753-831,
 HandleRequest :1095-1210) with one deterministic DataFrame job per crawl
-iteration (SURVEY §3.1/§7):
+iteration (SURVEY §3.1/§7).
 
-    frontier ──rank(politeness, DFS/BFS)──► batch
-    batch ──robots gate──► allowed (denied rows are consumed, not fetched)
-    allowed ──join corpus──► outcomes: success / transient / permanent
-    transient ──retried+1 (NEW identity)──► retry candidates
-    success ──extract links (pandas UDF) ─ canonicalize ─ filters──► children
-    (children ∪ retries) ──dedup_push vs seen──► frontier(i+1) ∪ rest
+State. :class:`CrawlState` is everything one iteration hands the next.
+The crawl's tables live as DELTA parquet snapshots under the checkpoint
+root, and the state holds their live part lists: the frontier is the
+union of additive parts (``frontier/init``/``frontier/compact=N`` plus
+``fresh/iter=N`` appends) anti-joined against consumed batch identities
+(``consumed/iter=N``), compacted every ``compact_every`` iterations;
+``seen`` is the identity column of its parts (plus a bucketed compact
+table under ``bucketed_seen``); ``fetched/iter=N``, ``errors/iter=N``
+(the failing.log analog, Spider.cs:993-994) and ``downloads/iter=N`` are
+append-only fact logs. Per-iteration I/O is therefore O(batch + new
+links), not O(frontier) — the property that matters at the 10^10-row
+design point. The frontier size is tracked arithmetically (n - consumed
++ fresh), so no count scan of the frontier exists at all. The state's
+fields ARE the checkpoint manifest: :meth:`CrawlState.to_manifest` /
+:meth:`CrawlState.from_manifest` are its only codec, shared by the fresh
+start, resume, :class:`Checkpointer` and ``crawler.timetravel``. The
+manifest is atomically renamed after each iteration's state dirs, so a
+killed crawl resumes exactly (north rule: snapshot + per-partition
+lineage; Iceberg in production — the sandbox ships no Iceberg runtime
+jar, so the delta layout emulates its manifest/snapshot/delete-file
+model over plain parquet).
 
-State lives in two tables — ``frontier`` (live requests) and ``seen``
-(identities) — kept as DELTA parquet snapshots: the frontier is the
-union of additive parts (``frontier/init``/``frontier/compact=N``
-plus ``fresh/iter=N`` appends) anti-joined against consumed batch
-identities (``consumed/iter=N``), compacted every ``compact_every``
-iterations. Per-iteration I/O is therefore O(batch + new links), not
-O(frontier) — the property that matters at the 10^10-row design point,
-where rewriting the whole remaining frontier each iteration would be
-the dominant cost. ``seen/iter=N`` deltas, ``fetched/iter=N``,
-``errors/iter=N`` (the failing.log analog, Spider.cs:993-994) and
-``metrics/iter=N`` (per-host lineage rows, written DISTRIBUTED — never
-collected) complete the snapshot set; an atomically-renamed
-``_MANIFEST.json`` records the last complete iteration plus the live
-part lists, so a killed crawl resumes exactly (north rule: snapshot +
-per-partition lineage; Iceberg in production — the sandbox ships no
-Iceberg runtime jar, so the delta layout emulates its
-manifest/snapshot/delete-file model over plain parquet).
+Step. :func:`crawl` validates its arguments, builds or restores the
+state, then repeats ``state, row = _step(ctx, state, it)`` until the
+frontier is empty or ``max_iterations`` is reached. Each row (the
+iteration's scalar metrics) goes to ``CrawlRunResult.metrics`` and to
+this module's logger at INFO.
+
+Phases. ``_step`` runs one ``_phase_*`` function per stage, in order:
+
+    backoff     last iteration's throttle statuses -> budget multipliers
+    rank        frontier --politeness, DFS/BFS--> batch (= consumed delta)
+    robots      batch -> allowed / denied (denied rows consumed + logged)
+    fetch       allowed --fetcher (corpus join or HTTP)--> outcomes
+    redirects   final URLs of redirected fetches -> seen
+    media       file-type successes -> downloads (never parsed)
+    processor   page-processor hook (n_results, proc_error)
+    retries     transient / processor failures -> retried+1 (NEW identity)
+    discover    successes --extract links, canonicalize, filters--> children
+    dedup       (children ∪ retries) --dedup_push vs seen--> fresh
+    write       fresh + fetched deltas
+    errors      errors delta
+    metrics     per-host lineage (written DISTRIBUTED, never collected)
+    compact     frontier/seen compaction every ``compact_every``
+    checkpoint  manifest
 
 Ordering fidelity (SURVEY §7.3): every request carries a monotone
 total-order key ``seq``. ``global_limit=1`` reproduces the reference's
@@ -51,23 +73,39 @@ Scale design (10^10-URL design point):
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
+import logging
 import os
+import tempfile
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dotnetspider_spark.crawler.parse import extract_canonical_links_udf
+from dotnetspider_spark.functions.content import download_file_path, is_media_type
 from dotnetspider_spark.functions.identity import request_identity
+from dotnetspider_spark.functions.linkpolicy import extract_policy_links_udf
 from dotnetspider_spark.functions.urlops import is_fetchable, url_host
+from dotnetspider_spark.operators.bloom import (
+    BloomParams,
+    build_blooms,
+    dedup_push_bloom,
+)
 from dotnetspider_spark.operators.frontier import (
+    adaptive_backoff,
     dedup_push,
     politeness_budget,
     poll_order,
     select_fetch_batch,
 )
+from dotnetspider_spark.operators.traps import trap_detection
+from dotnetspider_spark.sources.fetchers import CorpusFetcher
+
+_log = logging.getLogger(__name__)
 
 FRONTIER_SCHEMA = (
     "url string, host string, method string, referer string, origin string, "
@@ -84,6 +122,7 @@ _FRONTIER_COLS = [
 _ITER_SHIFT = 45  # (iter+1) << 45; block*2^20+pos stays under 2^45
 _BLOCK_BITS = 24  # parent block
 _POS_BITS = 20  # link position / retry marker
+_MAX_LINK_POS = (1 << _POS_BITS) - 2  # link positions clamp here
 
 
 @dataclass
@@ -94,13 +133,11 @@ class CrawlConfig:
     per_host_limit: int | None = 8  # politeness budget per iteration (SURVEY §2.2)
     iter_wall_ms: int = 1000  # iteration wall budget for delay-derived k
     global_limit: int | None = None  # exact-order emulation; 1 = reference poll
-    robots_enabled: bool = True  # north-rule addition (absent in reference)
     use_bloom: bool = False  # bloom-pruned dedup (§7.4 hybrid — exact either way)
     bloom_expected_per_bucket: int = 1_000_000
     bloom_n_buckets: int = 32
     max_iterations: int = 100_000
     checkpoint_dir: str | None = None
-    checkpoint_every: int = 1  # snapshot cadence (1 = every iteration)
     compact_every: int = 8  # frontier delta-compaction cadence (iterations)
     seen_compact_parts: int = 32  # fold seen deltas when parts exceed this
     #: store the compacted seen table BUCKETED by identity (catalog
@@ -112,9 +149,6 @@ class CrawlConfig:
     #: tests/test_plans.py::test_bucketed_seen_join_skips_seen_side_shuffle.
     bucketed_seen: bool = False
     seen_buckets: int = 32
-    salt_buckets: int = 16
-    max_link_pos: int = (1 << _POS_BITS) - 2
-    verbose: bool = False  # print each iteration's metrics row
     #: SkipTargetRequestsWhenResultIsEmpty (Spider.cs:397,1155): when a
     #: processor reports zero result items for a page, do not extract its
     #: target links. Only meaningful with a ``processor``.
@@ -211,6 +245,17 @@ class CrawlRunResult:
         ]
 
 
+def _identity(**cols: Column) -> Column:
+    """``request_identity`` over the row's own request columns; ``cols``
+    replaces some of them (e.g. ``url=F.col("target_url")``)."""
+    args = {
+        c: F.col(c)
+        for c in ("url", "method", "referer", "origin", "content", "retried", "headers")
+    }
+    args.update(cols)
+    return request_identity(args.pop("url"), **args)
+
+
 def _dense_seq_by_url(df: DataFrame) -> DataFrame:
     """Dense 0-based seq in url order WITHOUT a single-partition window.
 
@@ -287,12 +332,7 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
             )
         )
     df = df.withColumn("host", url_host(F.col("url"))).withColumn(
-        "identity",
-        request_identity(
-            F.col("url"), method=F.col("method"), referer=F.col("referer"),
-            origin=F.col("origin"), content=F.col("content"),
-            retried=F.col("retried"), headers=F.col("headers"),
-        ),
+        "identity", _identity()
     )
     return dedup_push(df.select(*_FRONTIER_COLS), seen=None)
 
@@ -400,10 +440,6 @@ def _discover_children(success: DataFrame, cfg: CrawlConfig, iter_base) -> DataF
         else F.col("url")
     )
     if cfg.honor_link_policy:
-        from dotnetspider_spark.functions.linkpolicy import (
-            extract_policy_links_udf,
-        )
-
         pol = extract_policy_links_udf(F.col("html"), base)
         # canonical target appended after the followed links (position
         # order of real links preserved for seq); array_distinct keeps
@@ -441,19 +477,12 @@ def _discover_children(success: DataFrame, cfg: CrawlConfig, iter_base) -> DataF
         (
             iter_base
             + F.col("__block") * (1 << _POS_BITS)
-            + F.least(F.col("__pos") + 1, F.lit(cfg.max_link_pos))
+            + F.least(F.col("__pos") + 1, F.lit(_MAX_LINK_POS))
         ).cast("long").alias("seq"),
     )
     if cfg.max_depth is not None:
         child = child.filter(F.col("depth") <= cfg.max_depth)
-    return child.withColumn(
-        "identity",
-        request_identity(
-            F.col("url"), method=F.col("method"), referer=F.col("referer"),
-            origin=F.col("origin"), content=F.col("content"),
-            retried=F.col("retried"), headers=F.col("headers"),
-        ),
-    )
+    return child.withColumn("identity", _identity())
 
 
 def _with_block(batch: DataFrame) -> DataFrame:
@@ -509,6 +538,8 @@ class Checkpointer:
         self.root = root
 
     def save_manifest(self, it: int, state: dict) -> None:
+        """Mark iteration ``it`` complete; ``state`` is
+        :meth:`CrawlState.to_manifest`."""
         payload = {"last_iter": it, "ts": time.time(), **state}
         tmp = f"{self.root}/_MANIFEST.json.tmp"
         with open(tmp, "w") as f:
@@ -542,6 +573,643 @@ class Checkpointer:
         return None if m is None else m["last_iter"]
 
 
+_FETCHED_SCHEMA = (
+    FRONTIER_SCHEMA + ", status int, rank int, target_url string, iter int"
+)
+
+
+def _read(spark: SparkSession, schema: str, paths: list[str]) -> DataFrame:
+    """Parquet ``paths`` under an explicit schema (an iteration dir may
+    hold no part files; a narrower schema is a column-pruned read), or
+    an empty frame when there are none."""
+    if not paths:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*paths)
+
+
+@dataclass(kw_only=True)
+class CrawlState:
+    """Everything one crawl iteration hands the next.
+
+    Every field but ``blooms`` is a checkpoint-manifest key, in manifest
+    order: the live part lists of the delta tables (module docstring),
+    the frontier size, and the bucketed compact of ``seen`` under
+    ``bucketed_seen`` (catalog name, the bucket count its files were
+    written with, and its path). ``blooms`` is the in-memory handle of
+    the bloom filters (``use_bloom``); a resumed crawl rebuilds it from
+    ``seen`` on first use.
+
+    Cross-iteration state lives in parquet, NOT in checkpointed RDDs.
+    Spark 4's ``localCheckpoint`` copies the pre-checkpoint plan's
+    statistics onto the truncated node
+    (``LogicalRDD.rewriteStatsAndConstraints``), so size estimates
+    compound multiplicatively across iterations until the driver stalls
+    multiplying million-digit BigIntegers (observed via jstack; iteration
+    walls grew ~3x per iteration). Parquet round-trips reset stats to
+    file-size reality and ARE the engine's table design anyway (Iceberg
+    snapshots in production). ``localCheckpoint`` is still used WITHIN an
+    iteration, where plans are bounded.
+    """
+
+    frontier_parts: list[str]
+    consumed_parts: list[str]
+    seen_parts: list[str]
+    fetched_paths: list[str]
+    #: absent from manifests written before these logs existed
+    errors_paths: list[str] = field(default_factory=list)
+    downloads_paths: list[str] = field(default_factory=list)
+    n_frontier: int
+    seen_table: str | None = None
+    seen_table_buckets: int | None = None
+    seen_table_path: str | None = None
+    blooms: DataFrame | None = None
+
+    @classmethod
+    def from_manifest(cls, m: dict) -> CrawlState:
+        return cls(**{k: m[k] for k in _MANIFEST_KEYS if k in m})
+
+    def to_manifest(self) -> dict:
+        return {k: getattr(self, k) for k in _MANIFEST_KEYS}
+
+    def paths(self) -> list[str]:
+        """Every parquet dir this state references."""
+        lists = [k for k in _MANIFEST_KEYS if k.endswith(("_parts", "_paths"))]
+        table = [self.seen_table_path] if self.seen_table_path else []
+        return [p for k in lists for p in getattr(self, k)] + table
+
+    def frontier(self, spark: SparkSession) -> DataFrame:
+        """The live frontier: its parts anti-joined against the consumed
+        batch identities."""
+        fr = _read(spark, FRONTIER_SCHEMA, self.frontier_parts)
+        if self.consumed_parts:
+            cons = _read(spark, "identity string", self.consumed_parts)
+            fr = fr.join(cons, "identity", "left_anti")
+        return fr
+
+    def seen(self, spark: SparkSession) -> DataFrame:
+        """Every seen identity (1 column). The bucketed compact is read by
+        PATH, so a snapshot whose table name the crawl has since dropped
+        (metadata only — the table is external) still reads."""
+        table = [self.seen_table_path] if self.seen_table_path else []
+        return _read(spark, "identity string", table + self.seen_parts)
+
+
+_MANIFEST_KEYS = [f.name for f in fields(CrawlState) if f.name != "blooms"]
+
+
+@dataclass
+class _Ctx:
+    """What the phases of one ``crawl()`` call share and never change."""
+
+    spark: SparkSession
+    cfg: CrawlConfig
+    root: str
+    ckpt: Checkpointer
+    fetcher: object
+    robots: DataFrame | None
+    host_delays: DataFrame | None
+    processor: object
+    bloom_params: BloomParams | None
+
+
+def _write_seen_table(
+    ctx: _Ctx, state: CrawlState, seen: DataFrame, version: int
+) -> None:
+    """Fold ``seen`` (every identity) into a NEW bucketed catalog table,
+    emptying the seen deltas. The superseded table's name is dropped;
+    the table is external, so its files stay for time travel."""
+    cfg = ctx.cfg
+    name = f"seen_{hashlib.md5(ctx.root.encode()).hexdigest()[:10]}_v{version}"
+    path = f"{ctx.root}/seen_bucketed/v={version}"
+    (
+        seen.select("identity")
+        .write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(cfg.seen_buckets, "identity")
+        .sortBy("identity")
+        .option("path", path)
+        .saveAsTable(name)
+    )
+    old = state.seen_table
+    state.seen_table, state.seen_table_buckets, state.seen_table_path = (
+        name, cfg.seen_buckets, path,
+    )
+    state.seen_parts = []
+    if old is not None:
+        ctx.spark.sql(f"DROP TABLE IF EXISTS {old}")
+
+
+def _initial_state(ctx: _Ctx, seeds: DataFrame, resume: bool) -> tuple[CrawlState, int]:
+    """The state of the last complete iteration (``resume``) or of the
+    seeds, with the first iteration to run."""
+    spark, cfg = ctx.spark, ctx.cfg
+    if resume:
+        m = ctx.ckpt.load_manifest()
+        if m is None:
+            raise ValueError(f"no manifest under {ctx.root}")
+        state = CrawlState.from_manifest(m)
+        if state.seen_table is not None:
+            # the bucket count MUST be the one the files were written
+            # with — re-declaring with the current cfg.seen_buckets would
+            # mis-declare the layout and the bucketed anti-join would
+            # silently miss seen identities (re-crawling duplicates)
+            state.seen_table_buckets = int(state.seen_table_buckets or cfg.seen_buckets)
+            if not spark.catalog.tableExists(state.seen_table):
+                spark.sql(
+                    f"CREATE TABLE {state.seen_table} (identity STRING) USING parquet "
+                    f"CLUSTERED BY (identity) SORTED BY (identity) "
+                    f"INTO {state.seen_table_buckets} BUCKETS "
+                    f"LOCATION '{state.seen_table_path}'"
+                )
+        return state, m["last_iter"] + 1
+    init = f"{ctx.root}/frontier/init"
+    seeds_to_frontier(seeds).write.mode("overwrite").parquet(init)
+    state = CrawlState(
+        frontier_parts=[init], consumed_parts=[], seen_parts=[init], fetched_paths=[],
+        # parquet footer metadata, no scan
+        n_frontier=_read(spark, FRONTIER_SCHEMA, [init]).count(),
+    )
+    if cfg.bucketed_seen:
+        _write_seen_table(ctx, state, _read(spark, "identity string", [init]), 0)
+    return state, 0
+
+
+def _add_seen(ctx: _Ctx, state: CrawlState, part: str, bloom_path: str) -> None:
+    """Append a seen delta part; when bloom filters are live, fold its
+    identities into them (persisted under ``bloom_path``)."""
+    state.seen_parts.append(part)
+    if state.blooms is not None:
+        build_blooms(
+            _read(ctx.spark, "identity string", [part]),
+            ctx.bloom_params,
+            existing=state.blooms,
+        ).write.mode("overwrite").parquet(bloom_path)
+        state.blooms = ctx.spark.read.parquet(bloom_path)
+
+
+# ------------------------------------------------------------------ phases
+
+
+def _phase_backoff(ctx: _Ctx, it: int) -> DataFrame | None:
+    """Opt-in adaptive backoff: per-host budget multipliers from the
+    PREVIOUS iteration's fetch statuses (column-pruned host+status
+    reads); None when off. The one-iteration window keeps the control
+    loop self-correcting (see ``CrawlConfig.adaptive_backoff``)."""
+    if not ctx.cfg.adaptive_backoff or it == 0:
+        return None
+    # throttle statuses (429/503) are NOT successes, so the observation
+    # log is fetched (2xx/media) UNION errors. Robots-denied rows log
+    # status NULL and were never SENT — counting them dilutes the
+    # throttle rate and can suppress a deserved cooldown
+    logs = [
+        ctx.spark.read.parquet(p)
+        .select("host", "status")
+        .filter(F.col("status").isNotNull())
+        for p in (
+            f"{ctx.root}/fetched/iter={it - 1}", f"{ctx.root}/errors/iter={it - 1}"
+        )
+        if os.path.isdir(p)
+    ]
+    if not logs:
+        return None
+    return F.broadcast(
+        adaptive_backoff(
+            functools.reduce(lambda a, b: a.unionByName(b), logs),
+            min_observations=ctx.cfg.backoff_min_observations,
+        ).select("host", "multiplier", "cooldown")
+    )
+
+
+def _with_budget(ctx: _Ctx, frontier: DataFrame, backoff) -> DataFrame:
+    """Add the per-host poll budget column ``__budget`` when budgets
+    differ by host: robots crawl delays (k = ⌈iter_wall/delay⌉, the
+    reference's SleepTime made per-host, capped by ``per_host_limit``)
+    and/or backoff, which shrinks them. Otherwise the frontier comes
+    back as is and the batch uses the literal ``per_host_limit``."""
+    cfg = ctx.cfg
+    if ctx.host_delays is not None:
+        budget = politeness_budget(
+            cfg.iter_wall_ms, F.coalesce(F.col("crawl_delay_ms"), F.lit(0))
+        )
+        if cfg.per_host_limit is not None:
+            budget = F.least(budget, F.lit(cfg.per_host_limit))
+        delays = F.broadcast(ctx.host_delays.select("host", "crawl_delay_ms"))
+        frontier = frontier.join(delays, "host", "left").withColumn(
+            "__budget", budget
+        ).drop("crawl_delay_ms")
+    elif backoff is not None:
+        frontier = frontier.withColumn("__budget", F.lit(cfg.per_host_limit))
+    else:
+        return frontier
+    return _apply_backoff(frontier, backoff)
+
+
+def _phase_rank(
+    ctx: _Ctx, state: CrawlState, it: int, frontier: DataFrame, backoff
+) -> tuple[DataFrame, int]:
+    """Select this iteration's batch and persist it as the consumed delta
+    in ONE job: the parquet write is the checkpoint (the batch is re-read
+    from it, truncating the rank plan) and its identity column IS the
+    consumed anti-join part. O(batch) I/O; the frontier is NOT rewritten.
+    Returns the batch and its size (parquet footer metadata, no scan)."""
+    cfg = ctx.cfg
+    if cfg.global_limit is not None:
+        # exact reference poll order — ONE global window; test scale only
+        w = Window.orderBy(*poll_order(cfg.dfs, cfg.priority_first), F.col("url").asc())
+        batch = (
+            frontier.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= cfg.global_limit)
+            .withColumn("__block", F.col("rank"))
+        )
+    else:
+        fr = _with_budget(ctx, frontier, backoff)
+        if "__budget" in fr.columns:
+            limit = {"budget_col": "__budget"}
+        else:
+            limit = {"per_host_limit": cfg.per_host_limit}
+        batch = _with_block(
+            select_fetch_batch(
+                fr, dfs=cfg.dfs, priority_first=cfg.priority_first, **limit
+            )
+            .withColumnRenamed("host_rank", "rank")
+            .drop("__budget")
+        )
+    path = f"{ctx.root}/consumed/iter={it}"
+    batch.write.mode("overwrite").parquet(path)
+    batch = ctx.spark.read.parquet(path)
+    state.consumed_parts.append(path)
+    return batch, batch.count()
+
+
+def _phase_robots(ctx: _Ctx, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(allowed, denied): denied rows are consumed, not fetched, and
+    logged to the errors table."""
+    flagged = _robots_flag(batch, ctx.robots)
+    return (
+        flagged.filter(F.col("__allowed")).drop("__allowed"),
+        flagged.filter(~F.col("__allowed")).drop("__allowed"),
+    )
+
+
+def _phase_fetch(ctx: _Ctx, allowed: DataFrame) -> tuple[DataFrame, bool]:
+    """Fetch via the pluggable fetcher (corpus-join replay or mapInPandas
+    HTTP per host-partition), checkpointed because later phases re-read
+    it. Also says whether the fetcher can redirect (emits ``target_url``);
+    when it cannot, the redirect phase (a count job and maybe a delta
+    write) is skipped."""
+    fetched = ctx.fetcher.fetch(allowed)
+    redirects = "target_url" in fetched.columns
+    if not redirects:
+        fetched = fetched.withColumn("target_url", F.col("url"))
+    return fetched.localCheckpoint(eager=True), redirects
+
+
+def _phase_redirects(ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame) -> None:
+    """Post-redirect dedup (page.TargetUrl, Downloader.cs:211-220):
+    successful fetches that landed elsewhere mark the FINAL url's
+    identity seen — a virgin GET with the metadata the row's children
+    would inherit — so later links to it are not fetched twice. Runs
+    before this iteration's dedup (children may already link to it)."""
+    redirected = fetched.filter(_status_ok() & (F.col("target_url") != F.col("url")))
+    if "redirect_hops" in fetched.columns:
+        # multi-hop chains: EVERY visited hop (intermediates + final) is
+        # marked seen, so a later link to any point of the chain is a
+        # dup (Downloader.cs:57-64 follows the whole chain in one request)
+        redirected = redirected.select(
+            F.explode("redirect_hops").alias("target_url"),
+            "referer", "origin", "headers",
+        )
+    extra = redirected.select(
+        _identity(
+            url=F.col("target_url"), method=F.lit("GET"),
+            content=F.lit(None).cast("string"), retried=F.lit(0),
+        ).alias("identity")
+    ).distinct()
+    # write first, count from parquet footers — ONE job instead of a
+    # count job plus a second job recomputing the same filter+distinct
+    path = f"{ctx.root}/seen_extra/iter={it}"
+    extra.write.mode("overwrite").parquet(path)
+    if _read(ctx.spark, "identity string", [path]).count() > 0:
+        _add_seen(ctx, state, path, f"{ctx.root}/blooms/iter={it}_redir")
+
+
+def _phase_media(
+    ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame
+) -> tuple[DataFrame, DataFrame | None]:
+    """(successes to parse, media successes or None). Media-type file
+    gate (HttpClientDownloader.cs:130-140): successes whose Content-Type
+    marks a FILE payload are never decoded, parsed or extracted.
+    ``download_files`` stores them under downloads/iter=N with the
+    reference's host+path file_path (Downloader.cs:390-395; its "file
+    already exists" skip is the upstream identity dedup); otherwise (the
+    DownloadFiles default) they are ignored. Either way they remain
+    fetched successes and yield no children."""
+    success = fetched.filter(_status_ok())
+    if "content_type" not in fetched.columns:
+        if ctx.cfg.download_files:
+            # the config asked for media downloads but this fetcher
+            # cannot say what is media — completing the crawl with
+            # downloads=None and no diagnostic hides real behavior
+            raise ValueError(
+                "download_files=True needs a fetcher that emits "
+                "content_type (HttpFetcher, or CorpusFetcher with "
+                "content_cols including 'content_type') — this fetcher "
+                f"returned columns {fetched.columns}"
+            )
+        return success, None
+    is_media = is_media_type(F.col("content_type"))
+    media = success.filter(is_media)
+    if ctx.cfg.download_files:
+        path = f"{ctx.root}/downloads/iter={it}"
+        media.select(
+            "url", "host", "identity", "target_url", "content_type",
+            *(["bytes"] if "bytes" in media.columns else []),
+            download_file_path(F.col("target_url")).alias("file_path"),
+        ).withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(path)
+        state.downloads_paths.append(path)
+    return success.filter(~is_media), media
+
+
+def _phase_processor(
+    ctx: _Ctx, success: DataFrame
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """Page-processor hook (Spider.cs:1129-1163): (successes, successes
+    to extract links from, processor failures or None)."""
+    if ctx.processor is None:
+        return success, success, None
+    proc = ctx.processor(success).localCheckpoint(eager=True)
+    success = proc.filter(~F.col("proc_error"))
+    linkable = success
+    if ctx.cfg.skip_targets_when_result_empty:
+        # SkipTargetRequestsWhenResultIsEmpty (Spider.cs:397,1155)
+        linkable = success.filter(F.col("n_results") > 0)
+    return success, linkable, proc.filter(F.col("proc_error"))
+
+
+def _phase_retries(
+    ctx: _Ctx, fetched: DataFrame, proc_failed: DataFrame | None, iter_base: Column
+) -> DataFrame:
+    """Transient fetches (5xx) and processor failures within the retry
+    budget come back with retried+1, i.e. a NEW identity."""
+    retry = F.col("retried") < ctx.cfg.cycle_retry_times
+    src = fetched.filter(F.col("status") >= 500).filter(retry)
+    if proc_failed is not None:
+        src = src.unionByName(proc_failed.filter(retry), allowMissingColumns=True)
+    return src.select(
+        "url", "host", "method", "referer", "origin", "content", "headers",
+        "priority", "depth",
+        (F.col("retried") + 1).alias("retried"),
+        (iter_base + F.col("__block") * (1 << _POS_BITS)).cast("long").alias("seq"),
+    ).withColumn("identity", _identity())
+
+
+def _phase_discover(
+    ctx: _Ctx, linkable: DataFrame, iter_base: Column
+) -> tuple[DataFrame, int, DataFrame | None]:
+    """Child requests of the successes, then the opt-in trap guard, which
+    drops the children of hosts whose discovered-URL/template ratio
+    exploded in this batch. Returns (children, number of trap hosts, the
+    persisted children to release once the fresh delta is written)."""
+    cfg = ctx.cfg
+    children = _discover_children(linkable, cfg, iter_base)
+    if not cfg.trap_guard:
+        return children, 0, None
+    # persist: the guard's profile aggregate is an extra action over the
+    # parse-UDF lineage, which must not re-extract every page's links
+    children = cached = children.persist()
+    # flagged hosts are tiny by construction (hosts flagged THIS batch);
+    # collecting them lets the drop be a literal filter — no second
+    # evaluation of the profile aggregate on the anti-join's build side
+    flagged = [
+        r.host
+        for r in trap_detection(
+            children, min_urls=cfg.trap_min_urls, max_ratio=cfg.trap_max_ratio,
+            host_col="host",
+        )
+        .filter(F.col("trap"))
+        .select("host")
+        .collect()
+    ]
+    if flagged:
+        # NULL-safe: `~NULL.isin(...)` is NULL under 3VL and a bare
+        # filter would silently drop unparseable-host children (the
+        # try_parse_url degradation path) any iteration the guard fires
+        children = children.filter(
+            F.col("host").isNull() | ~F.col("host").isin(flagged)
+        )
+    return children, len(flagged), cached
+
+
+def _phase_dedup(
+    ctx: _Ctx, state: CrawlState, it: int, children: DataFrame, retries: DataFrame
+) -> DataFrame:
+    """(children ∪ retries) minus every seen identity: the fresh rows."""
+    spark = ctx.spark
+    candidates = children.select(*_FRONTIER_COLS).unionByName(
+        retries.select(*_FRONTIER_COLS)
+    )
+    if ctx.cfg.use_bloom:
+        seen = state.seen(spark)
+        if state.blooms is None:  # fold the seed identities in on first use
+            path = f"{ctx.root}/blooms/iter={it}"
+            build_blooms(seen, ctx.bloom_params).write.mode("overwrite").parquet(path)
+            state.blooms = spark.read.parquet(path)
+        return dedup_push_bloom(candidates, seen, state.blooms, ctx.bloom_params)
+    if state.seen_table is not None:
+        # LSM read path: within-batch + recent-delta dedup first (small
+        # side), then anti-join the bucketed compact — the big seen side
+        # is read in place, no exchange
+        deltas = None
+        if state.seen_parts:
+            deltas = _read(spark, "identity string", state.seen_parts)
+        return dedup_push(candidates, deltas).join(
+            spark.table(state.seen_table).hint("merge").select("identity"),
+            "identity",
+            "left_anti",
+        )
+    return dedup_push(candidates, state.seen(spark))
+
+
+def _phase_write(
+    ctx: _Ctx, state: CrawlState, it: int, fresh: DataFrame,
+    trap_cached: DataFrame | None, success: DataFrame, media: DataFrame | None,
+) -> int:
+    """Persist the fresh delta and append it to the frontier and seen,
+    then persist the fetched delta; returns the fresh row count. The
+    write IS the materialization (one job); the count is a parquet-footer
+    lookup."""
+    spark, root = ctx.spark, ctx.root
+    path = f"{root}/fresh/iter={it}"
+    fresh.write.mode("overwrite").parquet(path)
+    if trap_cached is not None:  # parse lineage materialized; release
+        trap_cached.unpersist()
+    n_fresh = spark.read.parquet(path).count()
+    if n_fresh > 0:
+        state.frontier_parts.append(path)
+        _add_seen(ctx, state, path, f"{root}/blooms/iter={it + 1}")
+    cols = [*_FRONTIER_COLS, "status", "rank", "target_url", F.lit(it).alias("iter")]
+    fetched_out = success.select(*cols)
+    if media is not None:
+        fetched_out = fetched_out.unionByName(media.select(*cols))
+    path = f"{root}/fetched/iter={it}"
+    fetched_out.write.mode("overwrite").parquet(path)
+    state.fetched_paths.append(path)
+    return n_fresh
+
+
+def _phase_errors(
+    ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame,
+    denied: DataFrame, proc_failed: DataFrame | None,
+) -> None:
+    """The failing.log analog (Spider.cs:993-994): failed rows PERSISTED,
+    not just counted — missing / retries exhausted / unclassified status
+    / robots-denied / processor exception."""
+    crt = ctx.cfg.cycle_retry_times
+    reason = (
+        F.when(F.col("status") == 404, F.lit("missing"))
+        .when(
+            (F.col("status") >= 500) & (F.col("retried") >= crt),
+            F.lit("retries_exhausted"),
+        )
+        .when(
+            ~_status_ok() & (F.col("status") < 500),
+            F.concat(F.lit("http_"), F.col("status").cast("string")),
+        )
+    )
+    cols = ["url", "host", "identity", "depth", "retried"]
+    errs = (
+        fetched.withColumn("reason", reason)
+        .filter(F.col("reason").isNotNull())
+        .select(*cols, "status", "reason")
+    )
+    errs = errs.unionByName(
+        denied.select(
+            *cols,
+            F.lit(None).cast("int").alias("status"),
+            F.lit("robots_denied").alias("reason"),
+        )
+    )
+    if proc_failed is not None:
+        errs = errs.unionByName(
+            proc_failed.filter(F.col("retried") >= crt).select(
+                *cols, "status", F.lit("processor_exception").alias("reason")
+            )
+        )
+    path = f"{ctx.root}/errors/iter={it}"
+    errs.withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(path)
+    state.errors_paths.append(path)
+
+
+def _phase_metrics(ctx: _Ctx, it: int, fetched: DataFrame, n_consumed: int) -> dict:
+    """Per-host lineage rows written DISTRIBUTED to metrics/iter=N (north
+    rule: per-partition lineage; never collected — at 10^6+ hosts a
+    collect here is a driver bottleneck). The iteration's scalars
+    piggyback on the SAME job via observe(); n_hosts is the per-host
+    table's row count (footer metadata). Returns those scalars."""
+    ok = _status_ok().cast("int")
+    transient = (F.col("status") >= 500).cast("int")
+    missing = (F.col("status") == 404).cast("int")
+    obs = Observation(f"crawl-iter-{it}")
+    src = fetched
+    if n_consumed > 0:
+        # a zero-row batch (every host parked by adaptive backoff) runs
+        # the write as a zero-task job, so the Observation never fires
+        # and .get ASSERTS instead of returning zeros — observe only
+        # when there is something to observe
+        src = src.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_fetch"),
+            F.sum(ok).alias("n_ok"),
+            F.sum(transient).alias("n_transient"),
+            F.sum(missing).alias("n_missing"),
+        )
+    path = f"{ctx.root}/metrics/iter={it}"
+    src.groupBy("host").agg(
+        F.count("*").alias("n_batch"),
+        F.sum(ok).alias("n_ok"),
+        F.sum(transient).alias("n_transient"),
+        F.sum(missing).alias("n_missing"),
+    ).withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(path)
+    n_hosts = _read(ctx.spark, "host string", [path]).count()
+    scal = obs.get if n_consumed > 0 else {}
+    n_fetch, n_ok, n_tr, n_miss = (
+        int(scal.get(k) or 0) for k in ("n_fetch", "n_ok", "n_transient", "n_missing")
+    )
+    return {
+        "n_batch": n_fetch,
+        "n_ok": n_ok,
+        "n_transient": n_tr,
+        "n_missing": n_miss,
+        # unclassified statuses (3xx/4xx≠404)
+        "n_other": n_fetch - n_ok - n_tr - n_miss,
+        "n_denied": n_consumed - n_fetch,
+        "n_hosts": n_hosts,
+    }
+
+
+def _phase_compact(ctx: _Ctx, state: CrawlState, it: int) -> None:
+    """Every ``compact_every`` iterations, rewrite the live frontier as
+    ONE part, bounding the part lists and plan depth. Past
+    ``seen_compact_parts`` seen deltas, fold those too (LSM-style
+    tiering: an O(seen) rewrite amortized over >=32 iterations keeps the
+    dedup anti-join a bounded-fan-in union at the 1000-iteration design
+    point)."""
+    cfg, spark = ctx.cfg, ctx.spark
+    if (it + 1) % cfg.compact_every or state.n_frontier == 0:
+        return
+    path = f"{ctx.root}/frontier/compact={it}"
+    state.frontier(spark).write.mode("overwrite").parquet(path)
+    state.frontier_parts, state.consumed_parts = [path], []
+    if len(state.seen_parts) <= cfg.seen_compact_parts:
+        return
+    if cfg.bucketed_seen:
+        _write_seen_table(ctx, state, state.seen(spark), it)
+    else:
+        path = f"{ctx.root}/seen/compact={it}"
+        state.seen(spark).write.mode("overwrite").parquet(path)
+        state.seen_parts = [path]
+
+
+def _phase_checkpoint(ctx: _Ctx, state: CrawlState, it: int) -> None:
+    """Mark iteration ``it`` complete: written after all its state dirs,
+    so a crash mid-iteration resumes from the previous snapshot."""
+    ctx.ckpt.save_manifest(it, state.to_manifest())
+
+
+def _step(ctx: _Ctx, state: CrawlState, it: int) -> tuple[CrawlState, dict]:
+    """Iteration ``it``: every phase, in order. Advances ``state`` in
+    place and returns it with the iteration's metrics row."""
+    t0 = time.monotonic()
+    n_start = state.n_frontier
+    iter_base = F.lit((it + 1) << _ITER_SHIFT)
+    frontier = state.frontier(ctx.spark)
+    backoff = _phase_backoff(ctx, it)
+    batch, n_consumed = _phase_rank(ctx, state, it, frontier, backoff)
+    allowed, denied = _phase_robots(ctx, batch)
+    fetched, redirects = _phase_fetch(ctx, allowed)
+    if redirects:
+        _phase_redirects(ctx, state, it, fetched)
+    success, media = _phase_media(ctx, state, it, fetched)
+    success, linkable, proc_failed = _phase_processor(ctx, success)
+    retries = _phase_retries(ctx, fetched, proc_failed, iter_base)
+    children, n_trap_hosts, trap_cached = _phase_discover(ctx, linkable, iter_base)
+    fresh = _phase_dedup(ctx, state, it, children, retries)
+    n_fresh = _phase_write(ctx, state, it, fresh, trap_cached, success, media)
+    state.n_frontier += n_fresh - n_consumed
+    _phase_errors(ctx, state, it, fetched, denied, proc_failed)
+    row = {
+        "iter": it,
+        "n_frontier": n_start,
+        **_phase_metrics(ctx, it, fetched, n_consumed),
+        "n_new": n_fresh,
+        "n_trap_hosts": n_trap_hosts,
+        "wall_ms": int((time.monotonic() - t0) * 1000),
+    }
+    _phase_compact(ctx, state, it)
+    _phase_checkpoint(ctx, state, it)
+    return state, row
+
+
 def crawl(
     spark: SparkSession,
     corpus: DataFrame | None,
@@ -558,18 +1226,10 @@ def crawl(
     ``fetcher``: optional fetch stage (sources.fetchers protocol: a
     ``fetch(batch) -> DataFrame`` adding ``status``/``html`` and
     optionally ``target_url``/``content_type``/``encoding``/``bytes``).
-    Default: ``CorpusFetcher(corpus)`` — offline replay. Pass
-    ``HttpFetcher(transport_factory)`` for the live mapInPandas HTTP
-    stage (Downloader.cs:57-64 mapping; tests drive it with
-    ``DictTransport``).
-
-    Post-redirect dedup (Downloader.cs:211-220 ``page.TargetUrl``): when
-    a fetch lands on ``target_url != url``, the identity of a virgin GET
-    for the final URL (same referer/origin/headers metadata the row's
-    children would inherit) is recorded in ``seen``, so a later
-    discovered link to the final URL is not fetched twice. Links are
-    resolved against ``target_url``, and it is carried in the fetched
-    output.
+    Default: ``CorpusFetcher(corpus)`` — offline replay;
+    ``HttpFetcher(transport_factory)`` is the live mapInPandas HTTP stage
+    (Downloader.cs:57-64 mapping). After a redirect, links resolve
+    against ``target_url`` and the final URL counts as seen.
 
     ``host_delays``: optional (host, crawl_delay_ms) table — per-host
     politeness budgets k=⌈iter_wall/delay⌉ (the reference's SleepTime
@@ -586,32 +1246,10 @@ def crawl(
     exhausted; ``n_results == 0`` rows skip target-link extraction when
     ``cfg.skip_targets_when_result_empty`` (SpiderTest.cs:162-174).
 
-    State model: cross-iteration state lives in parquet DELTA snapshot
-    tables under ``checkpoint_dir`` (or a temp dir) — NOT in checkpointed
-    RDDs. Spark 4's ``localCheckpoint`` copies the pre-checkpoint plan's
-    statistics onto the truncated node
-    (``LogicalRDD.rewriteStatsAndConstraints``), so size estimates
-    compound multiplicatively across iterations until the driver stalls
-    multiplying million-digit BigIntegers (observed via jstack; iteration
-    walls grew ~3x per iteration). Parquet round-trips reset stats to
-    file-size reality and ARE the engine's table design anyway (Iceberg
-    snapshots in production). ``localCheckpoint`` is still used WITHIN an
-    iteration, where plans are bounded.
-
-    Delta layout: the live frontier is ``union(frontier_parts) ANTI JOIN
-    union(consumed_parts)`` where frontier_parts = seeds (or last
-    compaction) + per-iteration ``fresh/iter=N`` appends and
-    consumed_parts = per-iteration batch identities. Per-iteration write
-    volume is O(batch + new links), not O(frontier); every
-    ``cfg.compact_every`` iterations the view is materialized to
-    ``frontier/compact=N`` and both part lists reset, bounding plan
-    depth. ``seen`` is ``seen/init`` + the identity column of every
-    fresh part (column-pruned parquet read — no second write). The
-    frontier size is tracked arithmetically (n - consumed + fresh), so
-    no per-iteration count scan of the frontier exists at all.
+    State (:class:`CrawlState`, module docstring) lives under
+    ``cfg.checkpoint_dir`` (or a temp dir); ``resume=True`` continues
+    from its last complete iteration.
     """
-    import tempfile
-
     cfg = cfg or CrawlConfig()
     if cfg.adaptive_backoff and (
         cfg.global_limit is not None
@@ -626,17 +1264,6 @@ def crawl(
             "per_host_limit (or pass host_delays) and do not combine "
             "with global_limit"
         )
-    root = cfg.checkpoint_dir or tempfile.mkdtemp(prefix="spark-crawl-state-")
-    ckpt = Checkpointer(spark, root)
-    bloom_params = None
-    blooms = None
-    if cfg.use_bloom:
-        from dotnetspider_spark.operators.bloom import BloomParams, build_blooms
-
-        bloom_params = BloomParams(
-            expected_per_bucket=cfg.bloom_expected_per_bucket,
-            n_buckets=cfg.bloom_n_buckets,
-        )
     if fetcher is None:
         if corpus is None:
             # fail fast with configuration context — CorpusFetcher(None)
@@ -646,653 +1273,39 @@ def crawl(
                 "crawl() needs a corpus DataFrame or an explicit fetcher "
                 "(no ambient network in this engine)"
             )
-        from dotnetspider_spark.sources.fetchers import CorpusFetcher
-
-        # the scheduling path must never scan payload columns: the
-        # fetcher projects (url, status, html) only
-        fetcher = CorpusFetcher(corpus)
-
-    metrics: list[dict] = []
-    start_iter = 0
-
-    import hashlib
-
-    _tag = hashlib.md5(root.encode()).hexdigest()[:10]
-    seen_table: str | None = None  # catalog name of the bucketed compact
-    seen_table_buckets = cfg.seen_buckets  # layout of the LIVE table's files
-
-    def write_seen_table(df: DataFrame, version: int) -> str:
-        name = f"seen_{_tag}_v{version}"
-        (
-            df.select("identity")
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(cfg.seen_buckets, "identity")
-            .sortBy("identity")
-            .option("path", f"{root}/seen_bucketed/v={version}")
-            .saveAsTable(name)
-        )
-        return name
-
-    def restore_seen_table(name: str, path: str, buckets: int) -> None:
-        # the bucket count MUST be the one the files were written with —
-        # re-declaring with the current cfg.seen_buckets would mis-declare
-        # the layout and the bucketed anti-join would silently miss seen
-        # identities (re-crawling duplicates); the manifest persists it
-        if not spark.catalog.tableExists(name):
-            spark.sql(
-                f"CREATE TABLE {name} (identity STRING) USING parquet "
-                f"CLUSTERED BY (identity) SORTED BY (identity) "
-                f"INTO {buckets} BUCKETS LOCATION '{path}'"
-            )
-
-    if resume:
-        m = ckpt.load_manifest()
-        if m is None:
-            raise ValueError(f"no manifest under {root}")
-        start_iter = m["last_iter"] + 1
-        frontier_parts = list(m["frontier_parts"])
-        consumed_parts = list(m["consumed_parts"])
-        seen_parts = list(m["seen_parts"])
-        fetched_paths = list(m["fetched_paths"])
-        errors_paths = list(m.get("errors_paths", []))
-        downloads_paths = list(m.get("downloads_paths", []))
-        n_frontier = int(m["n_frontier"])
-        seen_table = m.get("seen_table")
-        if seen_table is not None:
-            seen_table_buckets = int(m.get("seen_table_buckets") or cfg.seen_buckets)
-            restore_seen_table(seen_table, m["seen_table_path"], seen_table_buckets)
-    else:
-        seeds_to_frontier(seeds).write.mode("overwrite").parquet(
-            f"{root}/frontier/init"
-        )
-        init = spark.read.schema(FRONTIER_SCHEMA).parquet(f"{root}/frontier/init")
-        frontier_parts = [f"{root}/frontier/init"]
-        consumed_parts = []
-        fetched_paths = []
-        errors_paths = []
-        downloads_paths = []
-        n_frontier = init.count()  # parquet footer metadata, no scan
-        if cfg.bucketed_seen:
-            seen_table = write_seen_table(
-                spark.read.schema("identity string").parquet(
-                    f"{root}/frontier/init"
-                ),
-                0,
-            )
-            seen_parts = []
-        else:
-            seen_parts = [f"{root}/frontier/init"]
-
-    def frontier_view() -> DataFrame:
-        fr = spark.read.schema(FRONTIER_SCHEMA).parquet(*frontier_parts)
-        if consumed_parts:
-            cons = spark.read.schema("identity string").parquet(*consumed_parts)
-            fr = fr.join(cons, "identity", "left_anti")
-        return fr
-
-    def seen_deltas() -> DataFrame | None:
-        if not seen_parts:
-            return None
-        # seen/identity lives inside frontier-schema parts: explicit
-        # 1-column schema = column-pruned footer+identity read only
-        return spark.read.schema("identity string").parquet(*seen_parts)
-
-    def seen_view() -> DataFrame:
-        d = seen_deltas()
-        if seen_table is None:
-            assert d is not None
-            return d
-        big = spark.table(seen_table).select("identity")
-        return big if d is None else big.unionByName(d)
-
-    seen = seen_view()
-    robots_cfg = robots if cfg.robots_enabled else None
-
-    it = start_iter
-    exhausted = False
-    while it < cfg.max_iterations and not exhausted:
-        t0 = time.monotonic()
-        if n_frontier == 0:
-            break
-        frontier = frontier_view()
-        iter_base = F.lit((it + 1) << _ITER_SHIFT)
-
-        # --- 1a. opt-in adaptive backoff: read LAST iteration's fetch
-        #         statuses (column-pruned parquet read, host+status
-        #         only) and derive per-host budget multipliers. The
-        #         one-iteration window keeps the control loop
-        #         self-correcting (see CrawlConfig.adaptive_backoff).
-        backoff = None
-        if cfg.adaptive_backoff and it > 0:
-            # throttle statuses (429/503) are NOT successes, so the
-            # observation log is fetched (2xx/media) UNION errors —
-            # both persisted per iteration with host + status
-            logs = [
-                # robots-denied rows log status NULL and were never
-                # SENT — counting them dilutes the throttle rate and
-                # can suppress a deserved cooldown
-                spark.read.parquet(p)
-                .select("host", "status")
-                .filter(F.col("status").isNotNull())
-                for p in (
-                    f"{root}/fetched/iter={it - 1}",
-                    f"{root}/errors/iter={it - 1}",
-                )
-                if os.path.isdir(p)
-            ]
-            if logs:
-                from dotnetspider_spark.operators.frontier import (
-                    adaptive_backoff as _adaptive_backoff,
-                )
-
-                log = logs[0]
-                for extra in logs[1:]:
-                    log = log.unionByName(extra)
-                backoff = F.broadcast(
-                    _adaptive_backoff(
-                        log,
-                        min_observations=cfg.backoff_min_observations,
-                    ).select("host", "multiplier", "cooldown")
-                )
-
-        # --- 1. poll: select this iteration's batch ------------------
-        order = poll_order(cfg.dfs, cfg.priority_first) + [F.col("url").asc()]
-        if cfg.global_limit is not None:
-            # exact reference poll order — ONE global window; test scale only
-            w = Window.orderBy(*order)
-            batch = (
-                frontier.withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= cfg.global_limit)
-                .withColumn("__block", F.col("rank"))
-            )
-        elif host_delays is not None:
-            delays = F.broadcast(host_delays.select("host", "crawl_delay_ms"))
-            budget = politeness_budget(
-                cfg.iter_wall_ms, F.coalesce(F.col("crawl_delay_ms"), F.lit(0))
-            )
-            if cfg.per_host_limit is not None:
-                budget = F.least(budget, F.lit(cfg.per_host_limit))
-            fr_b = frontier.join(delays, "host", "left").withColumn(
-                "__budget", budget
-            ).drop("crawl_delay_ms")
-            fr_b = _apply_backoff(fr_b, backoff)
-            batch = select_fetch_batch(
-                fr_b, dfs=cfg.dfs, budget_col="__budget",
-                salt_buckets=cfg.salt_buckets,
-                priority_first=cfg.priority_first,
-            ).withColumnRenamed("host_rank", "rank").drop("__budget")
-            batch = _with_block(batch)
-        elif backoff is not None and cfg.per_host_limit is not None:
-            # backoff without per-host robots delays: the static limit
-            # becomes the budget column so the multiplier can shrink it
-            fr_b = _apply_backoff(
-                frontier.withColumn(
-                    "__budget", F.lit(cfg.per_host_limit)
-                ),
-                backoff,
-            )
-            batch = select_fetch_batch(
-                fr_b, dfs=cfg.dfs, budget_col="__budget",
-                salt_buckets=cfg.salt_buckets,
-                priority_first=cfg.priority_first,
-            ).withColumnRenamed("host_rank", "rank").drop("__budget")
-            batch = _with_block(batch)
-        else:
-            batch = select_fetch_batch(
-                frontier, dfs=cfg.dfs, per_host_limit=cfg.per_host_limit,
-                salt_buckets=cfg.salt_buckets,
-                priority_first=cfg.priority_first,
-            ).withColumnRenamed("host_rank", "rank")
-            batch = _with_block(batch)
-        # --- 1b+2 fused: ONE job materializes the batch AND persists the
-        #        consumed delta. The parquet write is the checkpoint (the
-        #        batch is re-read from it, truncating the rank plan) and
-        #        its identity column IS the consumed anti-join part
-        #        (column-pruned read, like the seen deltas) — previously
-        #        a localCheckpoint job + a separate identity write.
-        #        O(batch) I/O either way; the frontier is NOT rewritten.
-        batch.write.mode("overwrite").parquet(f"{root}/consumed/iter={it}")
-        batch = spark.read.parquet(f"{root}/consumed/iter={it}")
-        consumed_parts.append(f"{root}/consumed/iter={it}")
-        n_consumed = batch.count()  # parquet footer metadata, no scan
-
-        # --- 3. robots gate (denied rows are consumed AND logged) ----
-        flagged = _robots_flag(batch, robots_cfg)
-        allowed = flagged.filter(F.col("__allowed")).drop("__allowed")
-        denied = flagged.filter(~F.col("__allowed")).drop("__allowed")
-
-        # --- 4. fetch via the pluggable fetcher (corpus join replay or
-        #        mapInPandas HTTP per host-partition). In-iteration
-        #        checkpoint: the result is re-read by later stages -----
-        fetched_raw = fetcher.fetch(allowed)
-        # only fetchers that can redirect emit target_url; skip the whole
-        # redirect bookkeeping (one count job + possible delta write per
-        # iteration) when the stage can't produce one
-        track_redirects = "target_url" in fetched_raw.columns
-        if not track_redirects:
-            fetched_raw = fetched_raw.withColumn("target_url", F.col("url"))
-        fetched_raw = fetched_raw.localCheckpoint(eager=True)
-
-        # --- 4b. post-redirect dedup (page.TargetUrl, Downloader.cs:
-        #         211-220): successful fetches that landed elsewhere mark
-        #         the FINAL url's identity seen, so later links to it are
-        #         not fetched twice. Must land before this iteration's
-        #         dedup-push (children may already link to the target) --
-        if track_redirects:
-            redirected = fetched_raw.filter(
-                _status_ok() & (F.col("target_url") != F.col("url"))
-            )
-            if "redirect_hops" in fetched_raw.columns:
-                # multi-hop chains: EVERY visited hop (intermediates +
-                # final) is marked seen, so a later link to any point of
-                # the chain is a dup (Downloader.cs:57-64 follows the
-                # whole chain in one request)
-                hop_url = F.explode("redirect_hops").alias("__hop")
-                redirected = redirected.select(
-                    hop_url, "referer", "origin", "headers"
-                ).withColumnRenamed("__hop", "target_url")
-            extra_seen = (
-                redirected.select(
-                    request_identity(
-                        F.col("target_url"), method=F.lit("GET"),
-                        referer=F.col("referer"), origin=F.col("origin"),
-                        content=F.lit(None).cast("string"),
-                        retried=F.lit(0), headers=F.col("headers"),
-                    ).alias("identity")
-                )
-                .distinct()
-            )
-            # write first, count from parquet footers — ONE job instead
-            # of a count job plus a second job recomputing the same
-            # filter+distinct for the write (the fresh-delta pattern)
-            extra_seen.write.mode("overwrite").parquet(
-                f"{root}/seen_extra/iter={it}"
-            )
-            if (
-                spark.read.schema("identity string")
-                .parquet(f"{root}/seen_extra/iter={it}")
-                .count()
-                > 0
-            ):
-                seen_parts.append(f"{root}/seen_extra/iter={it}")
-                seen = seen_view()
-                if cfg.use_bloom and blooms is not None:
-                    from dotnetspider_spark.operators.bloom import build_blooms
-
-                    build_blooms(
-                        spark.read.schema("identity string").parquet(
-                            f"{root}/seen_extra/iter={it}"
-                        ),
-                        bloom_params,
-                        existing=blooms,
-                    ).write.mode("overwrite").parquet(
-                        f"{root}/blooms/iter={it}_redir"
-                    )
-                    blooms = spark.read.parquet(f"{root}/blooms/iter={it}_redir")
-
-        success = fetched_raw.filter(_status_ok())
-        transient = fetched_raw.filter(F.col("status") >= 500)
-        retryable = transient.filter(F.col("retried") < cfg.cycle_retry_times)
-
-        # --- 4c. media-type file gate (HttpClientDownloader.cs:130-140):
-        #         successes whose Content-Type marks a FILE payload are
-        #         not decoded/parsed/extracted. download_files=True
-        #         stores them under downloads/iter=N with the
-        #         reference's host+path file_path (Downloader.cs:390-395
-        #         CreateFilePath; its "file already exists" skip is the
-        #         upstream identity dedup); False (the DownloadFiles
-        #         default) ignores them. Either way they remain fetched
-        #         successes and yield no children -------------------
-        media = None
-        if cfg.download_files and "content_type" not in fetched_raw.columns:
-            # same loudness contract as the use_bloom/bucketed_seen
-            # check: the config asked for media downloads but this
-            # fetcher cannot say what is media — completing the crawl
-            # with downloads=None and no diagnostic hides real behavior
-            raise ValueError(
-                "download_files=True needs a fetcher that emits "
-                "content_type (HttpFetcher, or CorpusFetcher with "
-                "content_cols including 'content_type') — this fetcher "
-                f"returned columns {fetched_raw.columns}"
-            )
-        if "content_type" in fetched_raw.columns:
-            from dotnetspider_spark.functions.content import (
-                download_file_path,
-                is_media_type,
-            )
-
-            m_flag = is_media_type(F.col("content_type"))
-            media = success.filter(m_flag)
-            success = success.filter(~m_flag)
-            if cfg.download_files:
-                media.select(
-                    "url", "host", "identity", "target_url", "content_type",
-                    *(["bytes"] if "bytes" in media.columns else []),
-                    download_file_path(F.col("target_url")).alias("file_path"),
-                ).withColumn("iter", F.lit(it)).write.mode(
-                    "overwrite"
-                ).parquet(f"{root}/downloads/iter={it}")
-                downloads_paths.append(f"{root}/downloads/iter={it}")
-
-        # --- 5. page processor hook (Spider.cs:1129-1163) ------------
-        if processor is not None:
-            proc = processor(success).localCheckpoint(eager=True)
-            proc_failed = proc.filter(F.col("proc_error"))
-            success = proc.filter(~F.col("proc_error"))
-            proc_retryable = proc_failed.filter(
-                F.col("retried") < cfg.cycle_retry_times
-            )
-            linkable = success
-            if cfg.skip_targets_when_result_empty:
-                # SkipTargetRequestsWhenResultIsEmpty (Spider.cs:397,1155)
-                linkable = success.filter(F.col("n_results") > 0)
-        else:
-            proc_failed = None
-            proc_retryable = None
-            linkable = success
-
-        # --- 6. retry candidates: retried+1 => NEW identity ----------
-        retry_src = retryable if proc_retryable is None else retryable.unionByName(
-            proc_retryable, allowMissingColumns=True
-        )
-        retries = retry_src.select(
-            "url", "host", "method", "referer", "origin", "content", "headers",
-            "priority", "depth",
-            (F.col("retried") + 1).alias("retried"),
-            (iter_base + F.col("__block") * (1 << _POS_BITS)).cast("long").alias("seq"),
-        ).withColumn(
-            "identity",
-            request_identity(
-                F.col("url"), method=F.col("method"), referer=F.col("referer"),
-                origin=F.col("origin"), content=F.col("content"),
-                retried=F.col("retried"), headers=F.col("headers"),
-            ),
-        )
-
-        # --- 7. link discovery from successes ------------------------
-        children = _discover_children(linkable, cfg, iter_base)
-
-        # --- 7b. opt-in trap guard: drop children of hosts whose
-        #         discovered-URL/template ratio exploded this batch ----
-        n_trap_hosts = 0
-        trap_cached = None
-        if cfg.trap_guard:
-            from dotnetspider_spark.operators.traps import trap_detection
-
-            # persist children: the guard's profile aggregate is an
-            # extra action over the parse-UDF lineage, which must not
-            # re-extract every page's links (the loop's fetched_raw
-            # pattern); unpersisted after the fresh write materializes
-            trap_cached = children.persist()
-            children = trap_cached
-            # flagged hosts are tiny by construction (hosts flagged
-            # THIS batch); collecting them lets the drop be a literal
-            # filter — no second evaluation of the profile aggregate
-            # on the anti-join's build side
-            flagged_hosts = [
-                r.host
-                for r in trap_detection(
-                    children,
-                    min_urls=cfg.trap_min_urls,
-                    max_ratio=cfg.trap_max_ratio,
-                    host_col="host",
-                )
-                .filter(F.col("trap"))
-                .select("host")
-                .collect()
-            ]
-            n_trap_hosts = len(flagged_hosts)
-            if flagged_hosts:
-                # NULL-safe: `~NULL.isin(...)` is NULL under 3VL and a
-                # bare filter would silently drop unparseable-host
-                # children (the try_parse_url degradation path) any
-                # iteration the guard fires
-                children = children.filter(
-                    F.col("host").isNull()
-                    | ~F.col("host").isin(flagged_hosts)
-                )
-
-        # --- 8. dedup-push into next frontier ------------------------
-        candidates = children.select(*_FRONTIER_COLS).unionByName(
-            retries.select(*_FRONTIER_COLS)
-        )
-        if cfg.use_bloom:
-            from dotnetspider_spark.operators.bloom import (
-                build_blooms,
-                dedup_push_bloom,
-            )
-
-            if blooms is None:  # fold the seed identities in on first use
-                build_blooms(seen, bloom_params).write.mode("overwrite").parquet(
-                    f"{root}/blooms/iter={it}"
-                )
-                blooms = spark.read.parquet(f"{root}/blooms/iter={it}")
-            fresh = dedup_push_bloom(candidates, seen, blooms, bloom_params)
-        elif seen_table is not None:
-            # LSM read path: within-batch + recent-delta dedup first
-            # (small side), then anti-join the bucketed compact — the
-            # big seen side is read in place, no exchange
-            fresh = dedup_push(candidates, seen_deltas()).join(
-                spark.table(seen_table).hint("merge").select("identity"),
-                "identity",
-                "left_anti",
-            )
-        else:
-            fresh = dedup_push(candidates, seen)
-        # --- 9. persist deltas — the write IS the materialization (one
-        #        job, replacing localCheckpoint + count + write); the
-        #        count is a parquet-footer metadata lookup -------------
-        fresh.write.mode("overwrite").parquet(f"{root}/fresh/iter={it}")
-        if trap_cached is not None:  # parse lineage materialized; release
-            trap_cached.unpersist()
-        n_fresh = spark.read.parquet(f"{root}/fresh/iter={it}").count()
-        if n_fresh > 0:
-            frontier_parts.append(f"{root}/fresh/iter={it}")
-            seen_parts.append(f"{root}/fresh/iter={it}")
-            seen = seen_view()
-            if cfg.use_bloom:
-                delta = spark.read.schema("identity string").parquet(
-                    f"{root}/fresh/iter={it}"
-                )
-                build_blooms(
-                    delta, bloom_params, existing=blooms
-                ).write.mode("overwrite").parquet(f"{root}/blooms/iter={it + 1}")
-                blooms = spark.read.parquet(f"{root}/blooms/iter={it + 1}")
-        n_frontier = n_frontier - n_consumed + n_fresh
-        if n_frontier == 0:
-            exhausted = True
-
-        fetched_out = success.select(
-            *_FRONTIER_COLS, "status", "rank", "target_url",
-            F.lit(it).alias("iter"),
-        )
-        if media is not None:
-            fetched_out = fetched_out.unionByName(
-                media.select(
-                    *_FRONTIER_COLS, "status", "rank", "target_url",
-                    F.lit(it).alias("iter"),
-                )
-            )
-        fetched_out.write.mode("overwrite").parquet(f"{root}/fetched/iter={it}")
-        fetched_paths.append(f"{root}/fetched/iter={it}")
-
-        # --- 10. errors table: the failing.log analog ----------------
-        #         (Spider.cs:993-994) — failed rows PERSISTED, not just
-        #         counted: denied / missing / retries-exhausted /
-        #         unclassified status / processor-exception ----------
-        reason = (
-            F.when(F.col("status") == 404, F.lit("missing"))
-            .when(
-                (F.col("status") >= 500)
-                & (F.col("retried") >= cfg.cycle_retry_times),
-                F.lit("retries_exhausted"),
-            )
-            .when(
-                ~_status_ok() & (F.col("status") < 500),
-                F.concat(F.lit("http_"), F.col("status").cast("string")),
-            )
-        )
-        err_cols = [
-            "url", "host", "identity", "depth", "retried", "status", "reason",
-        ]
-        errs = (
-            fetched_raw.withColumn("reason", reason)
-            .filter(F.col("reason").isNotNull())
-            .select(*err_cols)
-        )
-        errs = errs.unionByName(
-            denied.select(
-                "url", "host", "identity", "depth", "retried",
-                F.lit(None).cast("int").alias("status"),
-                F.lit("robots_denied").alias("reason"),
-            )
-        )
-        if proc_failed is not None:
-            errs = errs.unionByName(
-                proc_failed.filter(
-                    F.col("retried") >= cfg.cycle_retry_times
-                ).select(
-                    "url", "host", "identity", "depth", "retried", "status",
-                    F.lit("processor_exception").alias("reason"),
-                )
-            )
-        errs.withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(
-            f"{root}/errors/iter={it}"
-        )
-        errors_paths.append(f"{root}/errors/iter={it}")
-
-        # --- 11. metrics: per-host lineage written DISTRIBUTED (north
-        #         rule: per-partition lineage; never collected — at
-        #         10^6+ hosts a collect here is a driver bottleneck).
-        #         Iteration scalars piggyback on the SAME job via
-        #         observe() (previously a second agg+collect job);
-        #         n_hosts falls out of the per-host table's own row
-        #         count (footer metadata) ----------------------------
-        from pyspark.sql import Observation
-
-        obs = Observation(f"crawl-iter-{it}")
-        metrics_src = fetched_raw
-        if n_consumed > 0:
-            # a zero-row batch (every host parked by adaptive backoff)
-            # runs the write as a zero-task job, so the Observation
-            # never fires and .get ASSERTS instead of returning zeros —
-            # observe only when there is something to observe
-            metrics_src = metrics_src.observe(
-                obs,
-                F.count(F.lit(1)).alias("n_fetch"),
-                F.sum(_status_ok().cast("int")).alias("n_ok"),
-                F.sum((F.col("status") >= 500).cast("int")).alias(
-                    "n_transient"
-                ),
-                F.sum((F.col("status") == 404).cast("int")).alias(
-                    "n_missing"
-                ),
-            )
-        metrics_src.groupBy("host").agg(
-            F.count("*").alias("n_batch"),
-            F.sum(_status_ok().cast("int")).alias("n_ok"),
-            F.sum((F.col("status") >= 500).cast("int")).alias("n_transient"),
-            F.sum((F.col("status") == 404).cast("int")).alias("n_missing"),
-        ).withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(
-            f"{root}/metrics/iter={it}"
-        )
-        n_hosts = spark.read.schema("host string").parquet(
-            f"{root}/metrics/iter={it}"
-        ).count()
-        if n_consumed > 0:
-            scal = obs.get
-            n_fetch = int(scal["n_fetch"] or 0)
-            n_ok = int(scal["n_ok"] or 0)
-            n_tr = int(scal["n_transient"] or 0)
-            n_miss = int(scal["n_missing"] or 0)
-        else:
-            n_fetch = n_ok = n_tr = n_miss = 0
-        row = {
-            "iter": it,
-            "n_frontier": n_frontier + n_consumed - n_fresh,  # at iteration start
-            "n_batch": n_fetch,
-            "n_ok": n_ok,
-            "n_transient": n_tr,
-            "n_missing": n_miss,
-            # unclassified statuses (3xx/4xx≠404) — previously silent
-            "n_other": n_fetch - n_ok - n_tr - n_miss,
-            "n_denied": n_consumed - n_fetch,
-            "n_new": n_fresh,
-            "n_hosts": n_hosts,
-            "n_trap_hosts": n_trap_hosts,
-            "wall_ms": int((time.monotonic() - t0) * 1000),
-        }
-        metrics.append(row)
-        if cfg.verbose:
-            print(f"[crawl] {row}", flush=True)
-
-        # --- 12. compaction: bound the part-list / plan depth --------
-        if (it + 1) % cfg.compact_every == 0 and not exhausted:
-            frontier_view().write.mode("overwrite").parquet(
-                f"{root}/frontier/compact={it}"
-            )
-            frontier_parts = [f"{root}/frontier/compact={it}"]
-            consumed_parts = []
-            # seen accretes one delta part per iteration; above the part
-            # budget, fold them into one identity-only part (LSM-style
-            # tiering: O(seen) rewrite amortized over >=32 iterations,
-            # keeps the dedup anti-join a bounded-fan-in union at the
-            # 1000-iteration design point)
-            if len(seen_parts) > cfg.seen_compact_parts:
-                if cfg.bucketed_seen:
-                    old = seen_table
-                    seen_table = write_seen_table(seen_view(), it)
-                    seen_table_buckets = cfg.seen_buckets
-                    seen_parts = []
-                    if old is not None:
-                        spark.sql(f"DROP TABLE IF EXISTS {old}")
-                else:
-                    seen_view().write.mode("overwrite").parquet(
-                        f"{root}/seen/compact={it}"
-                    )
-                    seen_parts = [f"{root}/seen/compact={it}"]
-                seen = seen_view()
-
-        if it % cfg.checkpoint_every == 0:
-            ckpt.save_manifest(
-                it,
-                {
-                    "frontier_parts": frontier_parts,
-                    "consumed_parts": consumed_parts,
-                    "seen_parts": seen_parts,
-                    "fetched_paths": fetched_paths,
-                    "errors_paths": errors_paths,
-                    "downloads_paths": downloads_paths,
-                    "n_frontier": n_frontier,
-                    "seen_table": seen_table,
-                    # layout the CURRENT table's files were written with
-                    "seen_table_buckets": seen_table_buckets if seen_table else None,
-                    "seen_table_path": (
-                        f"{root}/seen_bucketed/v={seen_table.rsplit('_v', 1)[1]}"
-                        if seen_table
-                        else None
-                    ),
-                },
-            )
-        it += 1
-
-    fetched_schema = (
-        FRONTIER_SCHEMA + ", status int, rank int, target_url string, iter int"
+        fetcher = CorpusFetcher(corpus)  # projects (url, status, html) only
+    root = cfg.checkpoint_dir or tempfile.mkdtemp(prefix="spark-crawl-state-")
+    ctx = _Ctx(
+        spark=spark, cfg=cfg, root=root, ckpt=Checkpointer(spark, root),
+        fetcher=fetcher, robots=robots, host_delays=host_delays,
+        processor=processor,
+        bloom_params=BloomParams(
+            expected_per_bucket=cfg.bloom_expected_per_bucket,
+            n_buckets=cfg.bloom_n_buckets,
+        ) if cfg.use_bloom else None,
     )
-    empty = spark.createDataFrame([], fetched_schema)
-    empty_frontier = spark.createDataFrame([], FRONTIER_SCHEMA)
+    state, start_iter = _initial_state(ctx, seeds, resume)
+    metrics: list[dict] = []
+    it = start_iter
+    while it < cfg.max_iterations and state.n_frontier > 0:
+        state, row = _step(ctx, state, it)
+        _log.info("crawl %s", row)
+        metrics.append(row)
+        it += 1
     return CrawlRunResult(
-        # explicit schema: iteration dirs may be empty (no part files)
-        fetched=spark.read.schema(fetched_schema).parquet(*fetched_paths)
-        if fetched_paths
-        else empty,
-        seen=seen,
-        frontier=frontier_view() if not exhausted else empty_frontier,
-        errors=spark.read.schema(ERRORS_SCHEMA).parquet(*errors_paths)
-        if errors_paths
-        else spark.createDataFrame([], ERRORS_SCHEMA),
-        downloads=spark.read.parquet(*downloads_paths) if downloads_paths else None,
+        fetched=_read(spark, _FETCHED_SCHEMA, state.fetched_paths),
+        seen=state.seen(spark),
+        frontier=(
+            state.frontier(spark)
+            if state.n_frontier
+            else spark.createDataFrame([], FRONTIER_SCHEMA)
+        ),
+        errors=_read(spark, ERRORS_SCHEMA, state.errors_paths),
+        downloads=(
+            spark.read.parquet(*state.downloads_paths)
+            if state.downloads_paths
+            else None
+        ),
         metrics=metrics,
         iterations=it - start_iter,
     )

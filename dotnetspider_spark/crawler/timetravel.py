@@ -37,7 +37,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dotnetspider_spark.crawler.loop import FRONTIER_SCHEMA
+from dotnetspider_spark.crawler.loop import CrawlState
 
 __all__ = [
     "list_snapshots",
@@ -78,10 +78,10 @@ def list_snapshots(root: str) -> list[int]:
 
 
 def load_snapshot_manifest(root: str, iteration: int) -> dict:
-    """The exact manifest checkpointed at ``iteration`` (no
-    nearest-match fallback: with the default checkpoint_every=1 every
-    iteration has one, and a sparser cadence should fail loudly rather
-    than silently answer for a different iteration)."""
+    """The exact manifest checkpointed at ``iteration``. No nearest-match
+    fallback: the crawl checkpoints every iteration, so a missing one was
+    expired (or never ran) and must fail loudly rather than silently
+    answer for a different iteration."""
     path = f"{root}/manifests/iter={iteration}.json"
     try:
         with open(path) as f:
@@ -94,45 +94,24 @@ def load_snapshot_manifest(root: str, iteration: int) -> dict:
         ) from None
 
 
+def _state_as_of(root: str, iteration: int) -> CrawlState:
+    return CrawlState.from_manifest(load_snapshot_manifest(root, iteration))
+
+
 def frontier_as_of(
     spark: SparkSession, root: str, iteration: int
 ) -> DataFrame:
     """The PENDING frontier exactly as iteration ``iteration+1`` would
     have seen it: fresh parts anti-joined against consumed identities,
     the same reconstruction a resume performs."""
-    m = load_snapshot_manifest(root, iteration)
-    fr = spark.read.schema(FRONTIER_SCHEMA).parquet(*m["frontier_parts"])
-    if m["consumed_parts"]:
-        cons = spark.read.schema("identity string").parquet(
-            *m["consumed_parts"]
-        )
-        fr = fr.join(cons, "identity", "left_anti")
-    return fr
+    return _state_as_of(root, iteration).frontier(spark)
 
 
 def seen_as_of(spark: SparkSession, root: str, iteration: int) -> DataFrame:
-    """The seen identity set after iteration ``iteration`` (1 column).
-
-    Bucketed-seen snapshots are read by PATH, not via the catalog: the
-    loop drops superseded table NAMES (metadata only — the tables are
-    external, files stay), and a path read needs no bucket metadata
-    because time travel only unions/inspects, it doesn't anti-join."""
-    m = load_snapshot_manifest(root, iteration)
-    parts: list[DataFrame] = []
-    if m.get("seen_table_path"):
-        parts.append(
-            spark.read.schema("identity string").parquet(m["seen_table_path"])
-        )
-    if m["seen_parts"]:
-        parts.append(
-            spark.read.schema("identity string").parquet(*m["seen_parts"])
-        )
-    if not parts:
-        return spark.createDataFrame([], "identity string")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """The seen identity set after iteration ``iteration`` (1 column),
+    bucketed compact included (read by path, as the crawl drops
+    superseded table names)."""
+    return _state_as_of(root, iteration).seen(spark)
 
 
 def fetched_as_of(
@@ -141,10 +120,8 @@ def fetched_as_of(
     """All rows fetched in iterations <= ``iteration`` (the fact log's
     prefix, read from the manifest's path list); None before the first
     fetch."""
-    m = load_snapshot_manifest(root, iteration)
-    if not m["fetched_paths"]:
-        return None
-    return spark.read.parquet(*m["fetched_paths"])
+    paths = _state_as_of(root, iteration).fetched_paths
+    return spark.read.parquet(*paths) if paths else None
 
 
 def expire_snapshots(root: str, keep_last: int = 2) -> dict:
@@ -168,30 +145,15 @@ def expire_snapshots(root: str, keep_last: int = 2) -> dict:
 
     referenced: set[str] = set()
     for it in keep:
-        m = load_snapshot_manifest(root, it)
-        for key in (
-            "frontier_parts",
-            "consumed_parts",
-            "seen_parts",
-            "fetched_paths",
-            "errors_paths",
-            "downloads_paths",
-        ):
-            # realpath, not normpath: manifests may record the root as
-            # written at CRAWL time ("./ckpt") while expire is called
-            # with an absolute or symlinked spelling — a string compare
-            # would find nothing referenced and delete state the kept
-            # snapshots still need. realpath alone cannot anchor a
-            # RELATIVE manifest path recorded under a different cwd, so
-            # the (state-subdir, child) suffix rides along as a second
-            # key — under-deleting is the safe direction here.
-            for p in m.get(key) or []:
-                referenced.add(os.path.realpath(p))
-                parts = os.path.normpath(p).split(os.sep)
-                if len(parts) >= 2:
-                    referenced.add((parts[-2], parts[-1]))
-        if m.get("seen_table_path"):
-            p = m["seen_table_path"]
+        # realpath, not normpath: manifests may record the root as
+        # written at CRAWL time ("./ckpt") while expire is called with an
+        # absolute or symlinked spelling — a string compare would find
+        # nothing referenced and delete state the kept snapshots still
+        # need. realpath alone cannot anchor a RELATIVE manifest path
+        # recorded under a different cwd, so the (state-subdir, child)
+        # suffix rides along as a second key — under-deleting is the
+        # safe direction here.
+        for p in _state_as_of(root, it).paths():
             referenced.add(os.path.realpath(p))
             parts = os.path.normpath(p).split(os.sep)
             if len(parts) >= 2:

@@ -170,7 +170,7 @@ class IcebergTable:
 
 
 class TableCheckpointer:
-    """``Checkpointer``-interface twin (crawler/loop.py:495) that stores
+    """``Checkpointer``-interface twin (crawler/loop.py) that stores
     the per-iteration manifests as ROWS of a keyed table instead of
     ``_MANIFEST.json`` files — the backend comes from :func:`open_table`,
     so on an Iceberg-equipped cluster each ``save_manifest`` is a native

@@ -510,7 +510,7 @@ def test_bucketed_seen_crawl_matches_oracle(spark, small_corpus, tmp_path_factor
     crawl(spark, small_corpus, seeds, CrawlConfig(max_iterations=3, **kw), robots=robots)
     # simulate a NEW session: drop the catalog registration (files stay —
     # the table is external). Without this the shared pytest session
-    # still holds phase 1's saveAsTable entry, restore_seen_table's
+    # still holds phase 1's saveAsTable entry, the resume path's
     # tableExists short-circuits, and the manifest-bucket-count CREATE
     # path this test exists to pin never executes (vacuous test).
     import hashlib

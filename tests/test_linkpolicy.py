@@ -136,7 +136,7 @@ def _seeds(spark):
 
 
 def test_crawl_honor_link_policy_delta(spark):
-    kw = dict(robots_enabled=False, max_depth=4)
+    kw = dict(max_depth=4)
     base = crawl(spark, _policy_corpus(spark), _seeds(spark),
                  CrawlConfig(**kw))
     pol = crawl(spark, _policy_corpus(spark), _seeds(spark),

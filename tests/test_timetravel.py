@@ -8,7 +8,10 @@ snapshots must remain fully readable afterwards.
 
 from __future__ import annotations
 
+import json
+
 import pytest
+from pyspark.sql import functions as F
 
 from dotnetspider_spark.crawler.loop import Checkpointer, CrawlConfig, crawl
 from dotnetspider_spark.crawler.timetravel import (
@@ -37,7 +40,7 @@ def corpus(spark):
     df.unpersist()
 
 
-def _run(spark, corpus, ck, max_iterations=None):
+def _run(spark, corpus, ck, max_iterations=None, resume=False):
     kw = dict(dfs=True, max_depth=3, per_host_limit=8, checkpoint_dir=ck)
     if max_iterations is not None:
         kw["max_iterations"] = max_iterations
@@ -47,6 +50,7 @@ def _run(spark, corpus, ck, max_iterations=None):
         gen_seeds(spark, TINY, k=4),
         CrawlConfig(**kw),
         robots=gen_robots(spark, TINY),
+        resume=resume,
     )
 
 
@@ -152,3 +156,37 @@ def test_expire_with_different_root_spelling_keeps_state(
     assert _ids(seen_as_of(spark, ck, snaps[-1])) == before == _ids(res.seen)
     f = fetched_as_of(spark, ck, snaps[-1])
     assert f is not None and f.count() > 0
+
+
+#: the manifest is an on-disk format: old checkpoints and perfbench's
+#: replay read these keys, and they are written in this order
+MANIFEST_KEYS = [
+    "last_iter", "ts", "frontier_parts", "consumed_parts", "seen_parts",
+    "fetched_paths", "errors_paths", "downloads_paths", "n_frontier",
+    "seen_table", "seen_table_buckets", "seen_table_path",
+]
+
+
+def test_manifest_format_pinned_and_old_manifest_resumes(
+    spark, corpus, tmp_path_factory
+):
+    ck = str(tmp_path_factory.mktemp("tt_fmt"))
+    _run(spark, corpus, ck, max_iterations=2)
+    m = Checkpointer(spark, ck).load_manifest()
+    assert list(m) == MANIFEST_KEYS
+    assert m["last_iter"] == 1
+
+    # a manifest written before the errors/downloads logs existed
+    for key in ("errors_paths", "downloads_paths"):
+        del m[key]
+    with open(f"{ck}/_MANIFEST.json", "w") as f:
+        json.dump(m, f)
+    res = _run(spark, corpus, ck, resume=True)
+    full = _run(spark, corpus, str(tmp_path_factory.mktemp("tt_fmt_full")))
+    assert {r.url for r in res.fetched.select("url").collect()} == {
+        r.url for r in full.fetched.select("url").collect()
+    }
+    assert _ids(res.seen) == _ids(full.seen)
+    # the errors of the two iterations before the resume are unlisted
+    assert res.errors.filter(F.col("iter") < 2).count() == 0
+    assert res.errors.count() > 0
