@@ -55,27 +55,27 @@ def load_config(path: str) -> dict:
     return json.loads(text)
 
 
+#: config keys that set the ``CrawlConfig`` field of the same name, by
+#: coercion (``strategy`` sets ``dfs``)
+_AS_GIVEN = ("max_depth", "per_host_limit", "checkpoint_dir")
+_INTS = ("cycle_retry_times", "seen_buckets", "max_iterations")
+_BOOLS = (
+    "priority_first", "bucketed_seen", "use_bloom", "download_files",
+    "honor_link_policy", "trap_guard", "adaptive_backoff",
+)
+
+
 def build_spider(spark, cfg: dict):
     from dotnetspider_spark.crawler.loop import CrawlConfig
     from dotnetspider_spark.spider import Spider
 
-    ccfg = CrawlConfig(
-        dfs=cfg.get("strategy", "dfs").lower() != "bfs",
-        max_depth=cfg.get("max_depth"),
-        cycle_retry_times=int(cfg.get("cycle_retry_times", 5)),
-        per_host_limit=cfg.get("per_host_limit", 8),
-        priority_first=bool(cfg.get("priority_first", False)),
-        bucketed_seen=bool(cfg.get("bucketed_seen", False)),
-        seen_buckets=int(cfg.get("seen_buckets", 32)),
-        use_bloom=bool(cfg.get("use_bloom", False)),
-        download_files=bool(cfg.get("download_files", False)),
-        checkpoint_dir=cfg.get("checkpoint_dir"),
-        max_iterations=int(cfg.get("max_iterations", 100_000)),
-        honor_link_policy=bool(cfg.get("honor_link_policy", False)),
-        trap_guard=bool(cfg.get("trap_guard", False)),
-        adaptive_backoff=bool(cfg.get("adaptive_backoff", False)),
-    )
-    spider = Spider(spark, ccfg)
+    # only what the file sets: every other field keeps CrawlConfig's default
+    kw = {k: cfg[k] for k in _AS_GIVEN if k in cfg}
+    kw |= {k: int(cfg[k]) for k in _INTS if k in cfg}
+    kw |= {k: bool(cfg[k]) for k in _BOOLS if k in cfg}
+    if "strategy" in cfg:
+        kw["dfs"] = cfg["strategy"].lower() != "bfs"
+    spider = Spider(spark, CrawlConfig(**kw))
     if "corpus" in cfg:
         corpus_df = spark.read.parquet(cfg["corpus"])
         spider.set_corpus(corpus_df)

@@ -17,15 +17,19 @@ table under ``bucketed_seen``); ``fetched/iter=N``, ``errors/iter=N``
 append-only fact logs. Per-iteration I/O is therefore O(batch + new
 links), not O(frontier) — the property that matters at the 10^10-row
 design point. The frontier size is tracked arithmetically (n - consumed
-+ fresh), so no count scan of the frontier exists at all. The state's
-fields ARE the checkpoint manifest: :meth:`CrawlState.to_manifest` /
++ fresh), so no count scan of the frontier exists at all. Every state
+dir is written by :func:`_write_state`, counted (where a count is used)
+from the written files' parquet footers by :func:`_rows` (no count job),
+and re-read under an explicit schema (no schema-inference job). The
+state's fields ARE the checkpoint manifest: :meth:`CrawlState.to_manifest` /
 :meth:`CrawlState.from_manifest` are its only codec, shared by the fresh
-start, resume, :class:`Checkpointer` and ``crawler.timetravel``. The
-manifest is atomically renamed after each iteration's state dirs, so a
-killed crawl resumes exactly (north rule: snapshot + per-partition
-lineage; Iceberg in production — the sandbox ships no Iceberg runtime
-jar, so the delta layout emulates its manifest/snapshot/delete-file
-model over plain parquet).
+start, resume, :class:`Checkpointer` and ``crawler.timetravel``. Each
+iteration's manifest, ``manifests/iter=N.json``, is atomically renamed
+after that iteration's state dirs, so a killed crawl resumes exactly from
+the newest one; a fresh start clears them (north rule: snapshot +
+per-partition lineage; Iceberg in production — the sandbox ships no
+Iceberg runtime jar, so the delta layout emulates its
+manifest/snapshot/delete-file model over plain parquet).
 
 Step. :func:`crawl` validates its arguments, builds or restores the
 state, then repeats ``state, row = _step(ctx, state, it)`` until the
@@ -73,17 +77,20 @@ Scale design (10^10-URL design point):
 
 from __future__ import annotations
 
-import functools
 import hashlib
 import json
 import logging
 import os
+import re
+import shutil
 import tempfile
 import time
 from dataclasses import dataclass, field, fields
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dotnetspider_spark.crawler.parse import extract_canonical_links_udf
 from dotnetspider_spark.functions.content import download_file_path, is_media_type
@@ -91,6 +98,7 @@ from dotnetspider_spark.functions.identity import request_identity
 from dotnetspider_spark.functions.linkpolicy import extract_policy_links_udf
 from dotnetspider_spark.functions.urlops import is_fetchable, url_host
 from dotnetspider_spark.operators.bloom import (
+    BLOOM_SCHEMA,
     BloomParams,
     build_blooms,
     dedup_push_bloom,
@@ -521,16 +529,45 @@ def _apply_backoff(fr_b: DataFrame, backoff) -> DataFrame:
     )
 
 
+_MANIFEST_RE = re.compile(r"^iter=(\d+)\.json$")
+
+
+def manifest_path(root: str, it: int) -> str:
+    """Where iteration ``it``'s manifest lives under checkpoint ``root``."""
+    return f"{root}/manifests/iter={it}.json"
+
+
+def list_snapshots(root: str) -> list[int]:
+    """Iterations with a retained manifest under checkpoint ``root``,
+    ascending (``crawler.timetravel`` re-exports this)."""
+    d = f"{root}/manifests"
+    names = os.listdir(d) if os.path.isdir(d) else []
+    return sorted(int(m.group(1)) for m in map(_MANIFEST_RE.match, names) if m)
+
+
+def read_manifest(root: str, it: int) -> dict | None:
+    """Iteration ``it``'s manifest, or None when there is none."""
+    try:
+        with open(manifest_path(root, it)) as f:
+            return json.load(f)
+    except (FileNotFoundError, json.JSONDecodeError):
+        return None
+
+
 class Checkpointer:
     """Manifest writer over the parquet delta-snapshot layout.
 
     The crawl loop writes the state tables (fresh/consumed/seen/blooms/
     fetched/errors/metrics as ``<root>/<table>/iter=N`` parquet dirs,
-    frontier compactions as ``frontier/compact=N``); this class adds the
-    atomically-renamed ``_MANIFEST.json`` marking the last COMPLETE
-    iteration plus the live state-part lists (written after that
-    iteration's state dirs, so a crash mid-iteration resumes from the
-    previous consistent snapshot) — the Iceberg-manifest analog.
+    frontier compactions as ``frontier/compact=N``); this class adds one
+    atomically-renamed ``manifests/iter=N.json`` per COMPLETE iteration
+    holding the live state-part lists (written after that iteration's
+    state dirs, so a crash mid-iteration resumes from the previous
+    consistent snapshot) — the Iceberg-manifest analog. Manifests are
+    never overwritten by later iterations, so each one stays a readable
+    snapshot (data parts are append-only too: compaction writes NEW dirs)
+    until ``crawler.timetravel.expire_snapshots`` reclaims it; the newest
+    is the one a resume continues from.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -541,36 +578,28 @@ class Checkpointer:
         """Mark iteration ``it`` complete; ``state`` is
         :meth:`CrawlState.to_manifest`."""
         payload = {"last_iter": it, "ts": time.time(), **state}
-        tmp = f"{self.root}/_MANIFEST.json.tmp"
+        os.makedirs(f"{self.root}/manifests", exist_ok=True)
+        tmp = f"{self.root}/manifests/.iter={it}.json.tmp"
         with open(tmp, "w") as f:
             json.dump(payload, f)
-        os.replace(tmp, f"{self.root}/_MANIFEST.json")
-        # append-only versioned twin: one manifest per checkpointed
-        # iteration, never overwritten — the Iceberg snapshot-list
-        # analog. Data parts are themselves append-only (compaction
-        # writes NEW dirs and drops old ones from the CURRENT lists
-        # without deleting files), so any retained manifest remains a
-        # consistent, readable snapshot until crawler.timetravel
-        # .expire_snapshots reclaims it. Bytes are trivial: one small
-        # JSON per iteration vs the iteration's parquet.
-        os.makedirs(f"{self.root}/manifests", exist_ok=True)
-        vtmp = f"{self.root}/manifests/.iter={it}.json.tmp"
-        with open(vtmp, "w") as f:
-            json.dump(payload, f)
-        os.replace(vtmp, f"{self.root}/manifests/iter={it}.json")
+        os.replace(tmp, manifest_path(self.root, it))
 
     def load_manifest(self) -> dict | None:
-        try:
-            with open(f"{self.root}/_MANIFEST.json") as f:
-                m = json.load(f)
-            m["last_iter"]
-            return m
-        except (FileNotFoundError, json.JSONDecodeError, KeyError):
-            return None
+        """The newest manifest, or None before the first checkpoint."""
+        its = list_snapshots(self.root)
+        return read_manifest(self.root, its[-1]) if its else None
 
     def last_iter(self) -> int | None:
         m = self.load_manifest()
         return None if m is None else m["last_iter"]
+
+    def clear(self) -> None:
+        """Forget every manifest, so a fresh crawl into a reused root
+        serves none of the earlier crawl's snapshots (older versions also
+        kept the newest one as ``_MANIFEST.json``)."""
+        shutil.rmtree(f"{self.root}/manifests", ignore_errors=True)
+        if os.path.exists(f"{self.root}/_MANIFEST.json"):
+            os.remove(f"{self.root}/_MANIFEST.json")
 
 
 _FETCHED_SCHEMA = (
@@ -578,13 +607,31 @@ _FETCHED_SCHEMA = (
 )
 
 
-def _read(spark: SparkSession, schema: str, paths: list[str]) -> DataFrame:
-    """Parquet ``paths`` under an explicit schema (an iteration dir may
-    hold no part files; a narrower schema is a column-pruned read), or
-    an empty frame when there are none."""
+def _read(spark: SparkSession, schema: str | StructType, paths: list[str]) -> DataFrame:
+    """Parquet ``paths`` under an explicit schema (no schema-inference
+    job; an iteration dir may hold no part files; a narrower schema is a
+    column-pruned read), or an empty frame when there are none."""
     if not paths:
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(*paths)
+
+
+def _write_state(df: DataFrame, path: str) -> None:
+    """Write ``df`` as the parquet state dir ``path``, replacing it.
+    Every state-dir write goes through here; the one other state write
+    is the bucketed-seen catalog table (:func:`_write_seen_table`)."""
+    df.write.mode("overwrite").parquet(path)
+
+
+def _rows(path: str) -> int:
+    """Row count of the state dir ``path``, summed on the driver from its
+    part files' parquet footers, so it runs no Spark job (an
+    ``Observation`` would not do: it never fires on a zero-task write)."""
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if not f.startswith(("_", "."))
+    )
 
 
 @dataclass(kw_only=True)
@@ -645,6 +692,10 @@ class CrawlState:
             cons = _read(spark, "identity string", self.consumed_parts)
             fr = fr.join(cons, "identity", "left_anti")
         return fr
+
+    def fetched(self, spark: SparkSession) -> DataFrame:
+        """Every fetched row of the fact log's listed iterations."""
+        return _read(spark, _FETCHED_SCHEMA, self.fetched_paths)
 
     def seen(self, spark: SparkSession) -> DataFrame:
         """Every seen identity (1 column). The bucketed compact is read by
@@ -722,12 +773,12 @@ def _initial_state(ctx: _Ctx, seeds: DataFrame, resume: bool) -> tuple[CrawlStat
                     f"LOCATION '{state.seen_table_path}'"
                 )
         return state, m["last_iter"] + 1
+    ctx.ckpt.clear()
     init = f"{ctx.root}/frontier/init"
-    seeds_to_frontier(seeds).write.mode("overwrite").parquet(init)
+    _write_state(seeds_to_frontier(seeds), init)
     state = CrawlState(
         frontier_parts=[init], consumed_parts=[], seen_parts=[init], fetched_paths=[],
-        # parquet footer metadata, no scan
-        n_frontier=_read(spark, FRONTIER_SCHEMA, [init]).count(),
+        n_frontier=_rows(init),
     )
     if cfg.bucketed_seen:
         _write_seen_table(ctx, state, _read(spark, "identity string", [init]), 0)
@@ -739,43 +790,33 @@ def _add_seen(ctx: _Ctx, state: CrawlState, part: str, bloom_path: str) -> None:
     identities into them (persisted under ``bloom_path``)."""
     state.seen_parts.append(part)
     if state.blooms is not None:
-        build_blooms(
-            _read(ctx.spark, "identity string", [part]),
-            ctx.bloom_params,
-            existing=state.blooms,
-        ).write.mode("overwrite").parquet(bloom_path)
-        state.blooms = ctx.spark.read.parquet(bloom_path)
+        delta = _read(ctx.spark, "identity string", [part])
+        blooms = build_blooms(delta, ctx.bloom_params, existing=state.blooms)
+        _write_state(blooms, bloom_path)
+        state.blooms = _read(ctx.spark, BLOOM_SCHEMA, [bloom_path])
 
 
 # ------------------------------------------------------------------ phases
 
 
-def _phase_backoff(ctx: _Ctx, it: int) -> DataFrame | None:
+def _phase_backoff(ctx: _Ctx, state: CrawlState) -> DataFrame | None:
     """Opt-in adaptive backoff: per-host budget multipliers from the
     PREVIOUS iteration's fetch statuses (column-pruned host+status
     reads); None when off. The one-iteration window keeps the control
     loop self-correcting (see ``CrawlConfig.adaptive_backoff``)."""
-    if not ctx.cfg.adaptive_backoff or it == 0:
-        return None
     # throttle statuses (429/503) are NOT successes, so the observation
-    # log is fetched (2xx/media) UNION errors. Robots-denied rows log
-    # status NULL and were never SENT — counting them dilutes the
-    # throttle rate and can suppress a deserved cooldown
-    logs = [
-        ctx.spark.read.parquet(p)
-        .select("host", "status")
-        .filter(F.col("status").isNotNull())
-        for p in (
-            f"{ctx.root}/fetched/iter={it - 1}", f"{ctx.root}/errors/iter={it - 1}"
-        )
-        if os.path.isdir(p)
-    ]
-    if not logs:
+    # log is fetched (2xx/media) UNION errors: the last part of each
+    logs = state.fetched_paths[-1:] + state.errors_paths[-1:]
+    if not ctx.cfg.adaptive_backoff or not logs:
         return None
+    # robots-denied rows log status NULL and were never SENT — counting
+    # them dilutes the throttle rate and can suppress a deserved cooldown
+    sent = _read(ctx.spark, "host string, status int", logs).filter(
+        F.col("status").isNotNull()
+    )
     return F.broadcast(
         adaptive_backoff(
-            functools.reduce(lambda a, b: a.unionByName(b), logs),
-            min_observations=ctx.cfg.backoff_min_observations,
+            sent, min_observations=ctx.cfg.backoff_min_observations
         ).select("host", "multiplier", "cooldown")
     )
 
@@ -811,7 +852,7 @@ def _phase_rank(
     in ONE job: the parquet write is the checkpoint (the batch is re-read
     from it, truncating the rank plan) and its identity column IS the
     consumed anti-join part. O(batch) I/O; the frontier is NOT rewritten.
-    Returns the batch and its size (parquet footer metadata, no scan)."""
+    Returns the batch and its size."""
     cfg = ctx.cfg
     if cfg.global_limit is not None:
         # exact reference poll order — ONE global window; test scale only
@@ -835,10 +876,9 @@ def _phase_rank(
             .drop("__budget")
         )
     path = f"{ctx.root}/consumed/iter={it}"
-    batch.write.mode("overwrite").parquet(path)
-    batch = ctx.spark.read.parquet(path)
+    _write_state(batch, path)
     state.consumed_parts.append(path)
-    return batch, batch.count()
+    return _read(ctx.spark, batch.schema, [path]), _rows(path)
 
 
 def _phase_robots(ctx: _Ctx, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -885,11 +925,9 @@ def _phase_redirects(ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame) 
             content=F.lit(None).cast("string"), retried=F.lit(0),
         ).alias("identity")
     ).distinct()
-    # write first, count from parquet footers — ONE job instead of a
-    # count job plus a second job recomputing the same filter+distinct
     path = f"{ctx.root}/seen_extra/iter={it}"
-    extra.write.mode("overwrite").parquet(path)
-    if _read(ctx.spark, "identity string", [path]).count() > 0:
+    _write_state(extra, path)
+    if _rows(path) > 0:
         _add_seen(ctx, state, path, f"{ctx.root}/blooms/iter={it}_redir")
 
 
@@ -921,11 +959,12 @@ def _phase_media(
     media = success.filter(is_media)
     if ctx.cfg.download_files:
         path = f"{ctx.root}/downloads/iter={it}"
-        media.select(
+        downloads = media.select(
             "url", "host", "identity", "target_url", "content_type",
             *(["bytes"] if "bytes" in media.columns else []),
             download_file_path(F.col("target_url")).alias("file_path"),
-        ).withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(path)
+        ).withColumn("iter", F.lit(it))
+        _write_state(downloads, path)
         state.downloads_paths.append(path)
     return success.filter(~is_media), media
 
@@ -1012,8 +1051,8 @@ def _phase_dedup(
         seen = state.seen(spark)
         if state.blooms is None:  # fold the seed identities in on first use
             path = f"{ctx.root}/blooms/iter={it}"
-            build_blooms(seen, ctx.bloom_params).write.mode("overwrite").parquet(path)
-            state.blooms = spark.read.parquet(path)
+            _write_state(build_blooms(seen, ctx.bloom_params), path)
+            state.blooms = _read(spark, BLOOM_SCHEMA, [path])
         return dedup_push_bloom(candidates, seen, state.blooms, ctx.bloom_params)
     if state.seen_table is not None:
         # LSM read path: within-batch + recent-delta dedup first (small
@@ -1036,14 +1075,13 @@ def _phase_write(
 ) -> int:
     """Persist the fresh delta and append it to the frontier and seen,
     then persist the fetched delta; returns the fresh row count. The
-    write IS the materialization (one job); the count is a parquet-footer
-    lookup."""
-    spark, root = ctx.spark, ctx.root
+    write IS the materialization (one job)."""
+    root = ctx.root
     path = f"{root}/fresh/iter={it}"
-    fresh.write.mode("overwrite").parquet(path)
+    _write_state(fresh, path)
+    n_fresh = _rows(path)
     if trap_cached is not None:  # parse lineage materialized; release
         trap_cached.unpersist()
-    n_fresh = spark.read.parquet(path).count()
     if n_fresh > 0:
         state.frontier_parts.append(path)
         _add_seen(ctx, state, path, f"{root}/blooms/iter={it + 1}")
@@ -1052,7 +1090,7 @@ def _phase_write(
     if media is not None:
         fetched_out = fetched_out.unionByName(media.select(*cols))
     path = f"{root}/fetched/iter={it}"
-    fetched_out.write.mode("overwrite").parquet(path)
+    _write_state(fetched_out, path)
     state.fetched_paths.append(path)
     return n_fresh
 
@@ -1096,7 +1134,7 @@ def _phase_errors(
             )
         )
     path = f"{ctx.root}/errors/iter={it}"
-    errs.withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(path)
+    _write_state(errs.withColumn("iter", F.lit(it)), path)
     state.errors_paths.append(path)
 
 
@@ -1105,7 +1143,7 @@ def _phase_metrics(ctx: _Ctx, it: int, fetched: DataFrame, n_consumed: int) -> d
     rule: per-partition lineage; never collected — at 10^6+ hosts a
     collect here is a driver bottleneck). The iteration's scalars
     piggyback on the SAME job via observe(); n_hosts is the per-host
-    table's row count (footer metadata). Returns those scalars."""
+    table's row count. Returns those scalars."""
     ok = _status_ok().cast("int")
     transient = (F.col("status") >= 500).cast("int")
     missing = (F.col("status") == 404).cast("int")
@@ -1124,13 +1162,14 @@ def _phase_metrics(ctx: _Ctx, it: int, fetched: DataFrame, n_consumed: int) -> d
             F.sum(missing).alias("n_missing"),
         )
     path = f"{ctx.root}/metrics/iter={it}"
-    src.groupBy("host").agg(
+    per_host = src.groupBy("host").agg(
         F.count("*").alias("n_batch"),
         F.sum(ok).alias("n_ok"),
         F.sum(transient).alias("n_transient"),
         F.sum(missing).alias("n_missing"),
-    ).withColumn("iter", F.lit(it)).write.mode("overwrite").parquet(path)
-    n_hosts = _read(ctx.spark, "host string", [path]).count()
+    ).withColumn("iter", F.lit(it))
+    _write_state(per_host, path)
+    n_hosts = _rows(path)
     scal = obs.get if n_consumed > 0 else {}
     n_fetch, n_ok, n_tr, n_miss = (
         int(scal.get(k) or 0) for k in ("n_fetch", "n_ok", "n_transient", "n_missing")
@@ -1158,7 +1197,7 @@ def _phase_compact(ctx: _Ctx, state: CrawlState, it: int) -> None:
     if (it + 1) % cfg.compact_every or state.n_frontier == 0:
         return
     path = f"{ctx.root}/frontier/compact={it}"
-    state.frontier(spark).write.mode("overwrite").parquet(path)
+    _write_state(state.frontier(spark), path)
     state.frontier_parts, state.consumed_parts = [path], []
     if len(state.seen_parts) <= cfg.seen_compact_parts:
         return
@@ -1166,7 +1205,7 @@ def _phase_compact(ctx: _Ctx, state: CrawlState, it: int) -> None:
         _write_seen_table(ctx, state, state.seen(spark), it)
     else:
         path = f"{ctx.root}/seen/compact={it}"
-        state.seen(spark).write.mode("overwrite").parquet(path)
+        _write_state(state.seen(spark), path)
         state.seen_parts = [path]
 
 
@@ -1183,7 +1222,7 @@ def _step(ctx: _Ctx, state: CrawlState, it: int) -> tuple[CrawlState, dict]:
     n_start = state.n_frontier
     iter_base = F.lit((it + 1) << _ITER_SHIFT)
     frontier = state.frontier(ctx.spark)
-    backoff = _phase_backoff(ctx, it)
+    backoff = _phase_backoff(ctx, state)
     batch, n_consumed = _phase_rank(ctx, state, it, frontier, backoff)
     allowed, denied = _phase_robots(ctx, batch)
     fetched, redirects = _phase_fetch(ctx, allowed)
@@ -1293,7 +1332,7 @@ def crawl(
         metrics.append(row)
         it += 1
     return CrawlRunResult(
-        fetched=_read(spark, _FETCHED_SCHEMA, state.fetched_paths),
+        fetched=state.fetched(spark),
         seen=state.seen(spark),
         frontier=(
             state.frontier(spark)

@@ -5,9 +5,12 @@ state layout.
 The loop checkpoints every iteration: state tables are append-only
 parquet part dirs (compaction writes NEW dirs and merely drops old
 ones from the CURRENT manifest's lists — files stay), and
-``Checkpointer.save_manifest`` now also writes an append-only
-``manifests/iter=N.json`` per checkpoint. Together those give real
-snapshot isolation: any retained manifest reconstructs the exact
+``Checkpointer.save_manifest`` writes one ``manifests/iter=N.json`` per
+checkpoint, never overwritten by a later iteration (a fresh crawl into
+the same root clears them). The newest is the one a resume reads; this
+module reads the same files through the same reader
+(``crawler.loop.read_manifest``). Together those give real snapshot
+isolation: any retained manifest reconstructs the exact
 frontier / seen / fetched state after iteration N, long after the
 crawl moved on — audits ("what did the frontier look like when the
 trap hit?"), incremental diffing (:func:`operators.frontier
@@ -30,14 +33,17 @@ delete-by-age-of-file, so a kept manifest can never dangle.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dotnetspider_spark.crawler.loop import CrawlState
+from dotnetspider_spark.crawler.loop import (
+    CrawlState,
+    list_snapshots,
+    manifest_path,
+    read_manifest,
+)
 
 __all__ = [
     "list_snapshots",
@@ -47,8 +53,6 @@ __all__ = [
     "fetched_as_of",
     "expire_snapshots",
 ]
-
-_MANIFEST_RE = re.compile(r"^iter=(\d+)\.json$")
 
 #: state-table subdirs that compaction supersedes (expiry candidates);
 #: fact logs (fetched/errors/metrics/downloads) are never compacted
@@ -64,34 +68,18 @@ _STATE_SUBDIRS = (
 )
 
 
-def list_snapshots(root: str) -> list[int]:
-    """Iterations with a retained versioned manifest, ascending."""
-    d = f"{root}/manifests"
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in os.listdir(d):
-        m = _MANIFEST_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
 def load_snapshot_manifest(root: str, iteration: int) -> dict:
     """The exact manifest checkpointed at ``iteration``. No nearest-match
     fallback: the crawl checkpoints every iteration, so a missing one was
     expired (or never ran) and must fail loudly rather than silently
     answer for a different iteration."""
-    path = f"{root}/manifests/iter={iteration}.json"
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        have = list_snapshots(root)
+    m = read_manifest(root, iteration)
+    if m is None:
         raise ValueError(
             f"no snapshot manifest for iteration {iteration} under {root} "
-            f"(retained: {have})"
-        ) from None
+            f"(retained: {list_snapshots(root)})"
+        )
+    return m
 
 
 def _state_as_of(root: str, iteration: int) -> CrawlState:
@@ -120,15 +108,15 @@ def fetched_as_of(
     """All rows fetched in iterations <= ``iteration`` (the fact log's
     prefix, read from the manifest's path list); None before the first
     fetch."""
-    paths = _state_as_of(root, iteration).fetched_paths
-    return spark.read.parquet(*paths) if paths else None
+    state = _state_as_of(root, iteration)
+    return state.fetched(spark) if state.fetched_paths else None
 
 
 def expire_snapshots(root: str, keep_last: int = 2) -> dict:
-    """Reclaim history: keep the newest ``keep_last`` versioned
-    manifests (the current ``_MANIFEST.json`` twin is always among
-    them — it is the newest), delete older manifest files, then delete
-    any STATE part dir no kept manifest references. Fact-log dirs
+    """Reclaim history: keep the newest ``keep_last`` manifests (the
+    one a resume reads is always among them — it is the newest), delete
+    older manifest files, then delete any STATE part dir no kept
+    manifest references. Fact-log dirs
     (fetched/errors/metrics/downloads) are only ever deleted if
     unreferenced too — which, being append-only lists, cannot happen
     while any manifest survives.
@@ -175,7 +163,7 @@ def expire_snapshots(root: str, keep_last: int = 2) -> dict:
 
     for it in drop:
         try:
-            os.remove(f"{root}/manifests/iter={it}.json")
+            os.remove(manifest_path(root, it))
         except FileNotFoundError:
             pass
 

@@ -698,7 +698,11 @@ def exif_extract(
     ``normalize_orientation=True`` additionally rewrites ``bytes`` so
     pixels are orientation-1 (decode -> apply_orientation -> re-encode
     PNG) — opt-in because it trades a full transcode for viewer
-    correctness; the metadata pass alone stays header-only cheap.
+    correctness; the metadata pass alone stays header-only cheap. A
+    transcoded row then says what its bytes hold: ``fmt`` 'png',
+    ``exif_orientation`` 1 and, when the frame has ``w``/``h`` columns,
+    the new pixel dimensions (a 90° rotation swaps them). A row whose
+    transcode fails keeps all of these as they were.
     Arrow-batched pandas UDFs; no per-row Python at the Spark API
     level.
     """
@@ -745,27 +749,26 @@ def exif_extract(
         )
         from dotnetspider_spark.codec.png import encode_png
 
-        fixed, fmts = [], []
+        rows = []
         for b, f, o in zip(data, fmt, ori):
+            # w/h stay NULL unless the row is transcoded
+            row = (None if b is None else bytes(b), f, None, None)
             # NULL ints arrive as NaN in the Arrow->pandas series
-            if f != "jpeg" or b is None or pd.isna(o) or int(o) <= 1:
-                fixed.append(None if b is None else bytes(b))
-                fmts.append(f)
-                continue
-            try:
-                px = apply_orientation(decode_jpeg(bytes(b)), int(o))
-                fixed.append(encode_png(np.ascontiguousarray(px)))
-                fmts.append("png")
-            except (ValueError, NotImplementedError):
-                # corrupt/unsupported: keep ORIGINAL bytes AND fmt —
-                # the fmt flip must track transcode success, a 'png'
-                # label over jpeg bytes would poison decode dispatch
-                fixed.append(bytes(b))
-                fmts.append(f)
-        return pd.DataFrame({"b": fixed, "f": fmts})
+            if f == "jpeg" and b is not None and not pd.isna(o) and int(o) > 1:
+                try:
+                    px = apply_orientation(decode_jpeg(bytes(b)), int(o))
+                    png = encode_png(np.ascontiguousarray(px))
+                    row = (png, "png", px.shape[1], px.shape[0])
+                except (ValueError, NotImplementedError):
+                    # corrupt/unsupported: keep ORIGINAL bytes AND fmt —
+                    # the fmt flip must track transcode success, a 'png'
+                    # label over jpeg bytes would poison decode dispatch
+                    pass
+            rows.append(row)
+        return pd.DataFrame(rows, columns=["b", "f", "w", "h"])
 
-    fix_udf = pandas_udf(fix, "b binary, f string")
-    return (
+    fix_udf = pandas_udf(fix, "b binary, f string, w int, h int")
+    out = (
         out.withColumn(
             "__fx",
             fix_udf(F.col(bytes_col), F.col(fmt_col),
@@ -773,5 +776,17 @@ def exif_extract(
         )
         .withColumn(bytes_col, F.col("__fx.b"))
         .withColumn(fmt_col, F.col("__fx.f"))
-        .drop("__fx")
     )
+    done = F.col("__fx.w").isNotNull()  # transcoded: pixels are upright
+    out = out.withColumn(
+        "exif_orientation",
+        F.when(done, F.lit(1)).otherwise(F.col("exif_orientation")),
+    )
+    for c in ("w", "h"):
+        if c in df.columns:
+            out = out.withColumn(
+                c,
+                F.when(done, F.col(f"__fx.{c}").cast(df.schema[c].dataType))
+                .otherwise(F.col(c)),
+            )
+    return out.drop("__fx")

@@ -37,6 +37,8 @@ delta-parquet manifests.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 
 from dotnetspider_spark.sinks.tables import ParquetTable
@@ -125,12 +127,17 @@ class IcebergTable:
         return ParquetTable._first_per_key(self, df, seq_col, last)
 
     def _merge(self, batch: DataFrame, clauses: str) -> None:
-        batch.createOrReplaceTempView("__iceberg_merge_src")
+        # a view per call: two merges running at once on one session
+        # must not replace each other's source
+        src = f"__iceberg_merge_src_{uuid.uuid4().hex}"
+        batch.createOrReplaceTempView(src)
         on = " AND ".join(f"t.{k} = s.{k}" for k in self.key_cols)
-        self.spark.sql(
-            f"MERGE INTO {self.ident} t USING __iceberg_merge_src s "
-            f"ON {on} {clauses}"
-        )
+        try:
+            self.spark.sql(
+                f"MERGE INTO {self.ident} t USING {src} s ON {on} {clauses}"
+            )
+        finally:
+            self.spark.catalog.dropTempView(src)
 
     # ------------------------------------------------------------- modes
 
@@ -172,11 +179,12 @@ class IcebergTable:
 class TableCheckpointer:
     """``Checkpointer``-interface twin (crawler/loop.py) that stores
     the per-iteration manifests as ROWS of a keyed table instead of
-    ``_MANIFEST.json`` files — the backend comes from :func:`open_table`,
-    so on an Iceberg-equipped cluster each ``save_manifest`` is a native
-    ``MERGE INTO`` commit (snapshot history = Iceberg's own snapshot
-    list), while the sandbox leg runs on the atomic-swap parquet table
-    and is fully testable offline. The manifest payload layout is
+    ``manifests/iter=N.json`` files — the backend comes from
+    :func:`open_table`, so on an Iceberg-equipped cluster each
+    ``save_manifest`` is a native ``MERGE INTO`` commit (snapshot
+    history = Iceberg's own snapshot list), while the sandbox leg runs
+    on the atomic-swap parquet table and is fully testable offline. The
+    manifest payload layout is
     byte-identical to the file-based Checkpointer's JSON, so
     ``crawler/timetravel.py`` consumers can parse either source.
     """

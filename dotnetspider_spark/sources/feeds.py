@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from dotnetspider_spark.functions.urlops import is_fetchable
+
 ENTRY_TYPE = (
     "array<struct<url:string, title:string, published:bigint, "
     "guid:string, kind:string>>"
@@ -181,4 +183,29 @@ def parse_feeds(
         F.col("e.guid").alias("guid"),
         F.col("e.kind").alias("kind"),
         F.col("pos").cast("int").alias("pos"),
+    )
+
+
+def feed_seeds(feeds: DataFrame, xml_col: str = "feed_xml") -> DataFrame:
+    """(host, feed_xml) -> seed rows, one per fetchable entry.
+
+    Wild feeds carry relative paths (Atom xml:base) and non-http schemes
+    (mailto:) in ``<link>``, so entries gate on fetchability exactly like
+    crawl discovery. ``seq`` is the published epoch (0 when unknown):
+    fresher entries poll first under the default DFS order.
+    """
+    entries = parse_feeds(feeds, xml_col, keep_cols=("host",)).filter(
+        is_fetchable(F.col("url"))
+    )
+    return entries.select(
+        "url",
+        F.lit("GET").alias("method"),
+        F.lit(None).cast("string").alias("referer"),
+        F.lit(None).cast("string").alias("origin"),
+        F.lit(None).cast("string").alias("content"),
+        F.lit(None).cast("map<string,string>").alias("headers"),
+        F.lit(0).alias("priority"),
+        F.lit(1).alias("depth"),
+        F.lit(0).alias("retried"),
+        F.coalesce(F.col("published"), F.lit(0)).cast("long").alias("seq"),
     )

@@ -93,34 +93,9 @@ class Spider:
         crawl discovery, and enter as seed rows with the published
         epoch as seq — fresher entries poll first under the default
         DFS order. Composable with add_seeds/add_seed_df (union)."""
-        from pyspark.sql import functions as F
+        from dotnetspider_spark.sources.feeds import feed_seeds
 
-        from dotnetspider_spark.functions.urlops import is_fetchable
-        from dotnetspider_spark.sources.feeds import parse_feeds
-
-        entries = parse_feeds(feeds, keep_cols=("host",)).filter(
-            is_fetchable(F.col("url"))
-        )
-        seeds = entries.select(
-            "url",
-            F.lit("GET").alias("method"),
-            F.lit(None).cast("string").alias("referer"),
-            F.lit(None).cast("string").alias("origin"),
-            F.lit(None).cast("string").alias("content"),
-            F.lit(None).cast("map<string,string>").alias("headers"),
-            F.lit(0).alias("priority"),
-            F.lit(1).alias("depth"),
-            F.lit(0).alias("retried"),
-            F.coalesce(F.col("published"), F.lit(0)).cast("long").alias(
-                "seq"
-            ),
-        )
-        self._seed_df = (
-            seeds
-            if self._seed_df is None
-            else self._seed_df.unionByName(seeds, allowMissingColumns=True)
-        )
-        return self
+        return self.add_seed_df(feed_seeds(feeds))
 
     # ----------------------------------------------------------- config
 

@@ -20,7 +20,6 @@ the engine's snapshot tables, so a restart resumes both sides.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dotnetspider_spark.crawler.loop import seeds_to_frontier
 from dotnetspider_spark.operators.frontier import dedup_push
@@ -141,32 +140,12 @@ def stream_feeds_into_frontier(
     through the same exactly-once dedup path as seed reload. A URL
     announced by two feeds (or already crawled) is dropped exactly like
     a re-``Push``."""
-    from dotnetspider_spark.sources.feeds import parse_feeds
+    from dotnetspider_spark.sources.feeds import feed_seeds
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        from dotnetspider_spark.functions.urlops import is_fetchable
-
-        # wild feeds carry relative paths (Atom xml:base) and non-http
-        # schemes (mailto:) in <link> — gate exactly like the crawl
-        # discovery path so garbage never pollutes frontier/seen
-        entries = parse_feeds(batch_df, keep_cols=("host",)).filter(
-            is_fetchable(F.col("url"))
+        _ingest_seed_batch(
+            feed_seeds(batch_df), batch_id, frontier_path, seen_path
         )
-        seeds = entries.select(
-            "url",
-            F.lit("GET").alias("method"),
-            F.lit(None).cast("string").alias("referer"),
-            F.lit(None).cast("string").alias("origin"),
-            F.lit(None).cast("string").alias("content"),
-            F.lit(None).cast("map<string,string>").alias("headers"),
-            F.lit(0).alias("priority"),
-            F.lit(1).alias("depth"),
-            F.lit(0).alias("retried"),
-            F.coalesce(F.col("published"), F.lit(0)).cast("long").alias(
-                "seq"
-            ),
-        )
-        _ingest_seed_batch(seeds, batch_id, frontier_path, seen_path)
 
     return (
         stream_feeds(spark, feed_dir)

@@ -68,3 +68,22 @@ def test_config_maps_opt_in_crawl_flags(spark):
     )
     cfg = spider.config
     assert cfg.honor_link_policy and cfg.trap_guard and cfg.adaptive_backoff
+
+
+def test_config_sets_only_what_the_file_sets(spark):
+    from dotnetspider_spark.__main__ import build_spider
+    from dotnetspider_spark.crawler.loop import CrawlConfig
+
+    seeds = {"seeds": ["http://h.example/"]}
+    assert build_spider(spark, seeds).config == CrawlConfig()
+    cfg = build_spider(
+        spark,
+        {
+            **seeds,
+            "strategy": "BFS",
+            "per_host_limit": 3,
+            "max_iterations": "7",  # a quoted number is still coerced
+            "compact_every": 1,  # not a CLI key: ignored
+        },
+    ).config
+    assert cfg == CrawlConfig(dfs=False, per_host_limit=3, max_iterations=7)

@@ -10,6 +10,8 @@ future cluster run starts from a known-correct statement shape).
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -103,13 +105,20 @@ def test_merge_statement_shapes(spark, monkeypatch):
     it.insert_ignore(df, seq_col="seq")
     it.upsert(df, seq_col="seq")
     it.update(df, update_cols=["v"], seq_col="seq")
+    # each call merges from its own temp view, dropped afterwards, so
+    # concurrent merges cannot replace each other's source
+    srcs = [re.search(r"USING (\S+) s ", q).group(1) for q in issued]
+    assert len(set(srcs)) == 3
+    for src in srcs:
+        assert re.fullmatch(r"__iceberg_merge_src_[0-9a-f]{32}", src)
+        assert not spark.catalog.tableExists(src)
     on = "ON t.k = s.k AND t.host = s.host"
     assert issued == [
-        f"MERGE INTO cat.db.frontier t USING __iceberg_merge_src s {on} "
+        f"MERGE INTO cat.db.frontier t USING {srcs[0]} s {on} "
         "WHEN NOT MATCHED THEN INSERT *",
-        f"MERGE INTO cat.db.frontier t USING __iceberg_merge_src s {on} "
+        f"MERGE INTO cat.db.frontier t USING {srcs[1]} s {on} "
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
-        f"MERGE INTO cat.db.frontier t USING __iceberg_merge_src s {on} "
+        f"MERGE INTO cat.db.frontier t USING {srcs[2]} s {on} "
         "WHEN MATCHED THEN UPDATE SET t.v = s.v",
     ]
 

@@ -501,3 +501,31 @@ def test_exif_normalize_keeps_fmt_when_transcode_fails(spark):
     row = exif_extract(df, normalize_orientation=True).collect()[0]
     assert row.exif_orientation == 6  # metadata still parsed
     assert row.fmt == "jpeg" and bytes(row.bytes) == corrupt
+
+
+def test_exif_normalize_updates_orientation_and_dims(spark):
+    # after a successful transcode the row describes its NEW bytes:
+    # orientation 1, and w/h of the rotated pixels; an untouched row and
+    # a failed transcode keep their orientation and w/h
+    from dotnetspider_spark.codec.jpeg import build_exif, encode_jpeg
+    from dotnetspider_spark.operators.images import exif_extract
+
+    base = np.zeros((8, 12, 3), np.uint8)
+    rot = encode_jpeg(base, 90, exif=build_exif(6))
+    df = spark.createDataFrame(
+        [
+            ("rot", rot, "jpeg", 12, 8),
+            ("corrupt", rot[:60], "jpeg", 12, 8),
+            ("plain", encode_jpeg(base, 90), "jpeg", 12, 8),
+        ],
+        "image_id string, bytes binary, fmt string, w int, h int",
+    )
+    got = {
+        r.image_id: (r.fmt, r.exif_orientation, r.w, r.h)
+        for r in exif_extract(df, normalize_orientation=True).collect()
+    }
+    assert got == {
+        "rot": ("png", 1, 8, 12),
+        "corrupt": ("jpeg", 6, 12, 8),
+        "plain": ("jpeg", None, 12, 8),
+    }

@@ -179,7 +179,7 @@ def test_manifest_format_pinned_and_old_manifest_resumes(
     # a manifest written before the errors/downloads logs existed
     for key in ("errors_paths", "downloads_paths"):
         del m[key]
-    with open(f"{ck}/_MANIFEST.json", "w") as f:
+    with open(f"{ck}/manifests/iter=1.json", "w") as f:
         json.dump(m, f)
     res = _run(spark, corpus, ck, resume=True)
     full = _run(spark, corpus, str(tmp_path_factory.mktemp("tt_fmt_full")))
@@ -190,3 +190,40 @@ def test_manifest_format_pinned_and_old_manifest_resumes(
     # the errors of the two iterations before the resume are unlisted
     assert res.errors.filter(F.col("iter") < 2).count() == 0
     assert res.errors.count() > 0
+
+
+def test_fresh_crawl_into_reused_dir_drops_old_snapshots(
+    spark, corpus, tmp_path_factory
+):
+    """A fresh crawl into a checkpoint dir that holds an earlier crawl
+    serves none of its snapshots: their part dirs are being overwritten.
+    The new crawl then resumes exactly like a clean run."""
+    ck = str(tmp_path_factory.mktemp("tt_reuse"))
+    # the clean run; collected now, as the fresh crawl overwrites its files
+    clean = _run(spark, corpus, ck)
+    clean_urls = {r.url for r in clean.fetched.select("url").collect()}
+    clean_ids, clean_snaps = _ids(clean.seen), list_snapshots(ck)
+    assert len(clean_snaps) >= 3
+    _run(spark, corpus, ck, max_iterations=1)
+    assert list_snapshots(ck) == [0]
+    assert Checkpointer(spark, ck).last_iter() == 0
+
+    res = _run(spark, corpus, ck, resume=True)
+    assert {r.url for r in res.fetched.select("url").collect()} == clean_urls
+    assert _ids(res.seen) == clean_ids
+    assert list_snapshots(ck) == clean_snaps
+
+
+def test_state_writer_counts_rows_from_footers(spark, tmp_path):
+    """The footer count of a dir the one state writer wrote (no Spark
+    job) equals ``df.count()``, empty and multi-partition frames alike."""
+    from dotnetspider_spark.crawler.loop import _rows, _write_state
+
+    empty = spark.createDataFrame([], "identity string")
+    many = spark.range(0, 1000, numPartitions=7).selectExpr(
+        "cast(id as string) as identity"
+    )
+    for i, df in enumerate((empty, many, many.filter("identity < '5'"))):
+        path = str(tmp_path / f"t{i}")
+        _write_state(df, path)
+        assert _rows(path) == df.count()
