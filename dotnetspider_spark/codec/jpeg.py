@@ -9,6 +9,18 @@ quantization and Huffman tables are the example tables of T.81 Annex K
 (SOF2), arithmetic coding, 12-bit precision and hierarchical modes
 raise ``NotImplementedError`` loudly.
 
+The decoder is table-driven. Each DHT becomes one 2^16-entry lookahead
+table (T.81 F.2.2.3, cached per worker on its bytes), so a Huffman
+symbol is one lookup on the next 16 bits, read from a 32-bit window
+precomputed per byte of the destuffed restart interval. A component's
+coefficients go into one flat index/value list pair, are dequantized by
+one numpy scatter and inverse-transformed by one batched matrix product.
+It fails closed: every malformed stream raises ``ValueError`` (the
+signal the validate UDFs map to ``valid=false``), including an
+over-subscribed Huffman table, a DC table with a symbol above 11, a code
+no table holds, an AC run past the block end, and a block that ends
+past its interval's last bit (a truncated stream).
+
 Everything returns/accepts ``numpy uint8 (h, w, 3)`` arrays like the
 PNG codec; called from pandas UDFs over whole Arrow batches, so there
 is no per-row Python at the Spark API level. This closes the round-4
@@ -24,6 +36,8 @@ from __future__ import annotations
 
 import re
 import struct
+from array import array
+from functools import lru_cache
 
 import numpy as np
 
@@ -134,12 +148,26 @@ def _canonical_codes(bits, values):
     return out
 
 
-def _decode_table(bits, values):
-    """(BITS, HUFFVAL) -> {(length, code): symbol}."""
-    return {
-        (length, code): sym
-        for sym, (code, length) in _canonical_codes(bits, values).items()
-    }
+@lru_cache(maxsize=16)
+def _lookup_table(bits: bytes, values: bytes) -> array:
+    """(BITS, HUFFVAL) -> 2^16-entry lookahead table (T.81 F.2.2.3):
+    entry ``(symbol << 5) | code_length`` for every 16-bit window that
+    starts with a code, 0 where none does. Over-subscribed code counts
+    raise ``ValueError``."""
+    lut = array("H", bytes(2 << 16))
+    code = idx = 0
+    for length in range(1, 17):
+        span = 1 << (16 - length)
+        for _ in range(bits[length - 1]):
+            if code >= 1 << length:
+                raise ValueError("over-subscribed JPEG Huffman table")
+            lut[code * span : (code + 1) * span] = array(
+                "H", [(values[idx] << 5) | length]
+            ) * span
+            code += 1
+            idx += 1
+        code <<= 1
+    return lut
 
 
 def _quality_scale(table: np.ndarray, quality: int) -> np.ndarray:
@@ -346,68 +374,88 @@ def encode_jpeg(
 # ------------------------------------------------------------------ decoder
 
 
-class _BitReader:
-    """MSB-first reader over a destuffed entropy-coded interval."""
-
-    def __init__(self, data: bytes):
-        self.bits = np.unpackbits(np.frombuffer(data, np.uint8))
-        self.pos = 0
-
-    def read_bit(self) -> int:
-        if self.pos >= len(self.bits):
-            raise ValueError("truncated JPEG entropy stream")
-        b = int(self.bits[self.pos])
-        self.pos += 1
-        return b
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.read_bit()
-        return v
+# natural (row-major) index of each zigzag position, as Python ints for
+# the entropy loop
+_ZZ = ZIGZAG.tolist()
+# _MASK[s]: the low s bits set
+_MASK = [(1 << s) - 1 for s in range(16)]
 
 
-def _huff_decode(br: _BitReader, table) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | br.read_bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid Huffman code in JPEG stream")
+def _entropy_decode(intervals, comps, mcus_x, n_mcus, per_iv):
+    """Huffman-decode every block of the scan into one ``(indices,
+    values)`` pair of flat lists per component: ``indices`` address a
+    ``(n_blocks * 64)`` natural-order coefficient array (block-row major
+    over the component's grid), ``values`` are the quantized
+    coefficients. ``comps[ci]`` is the component's (DC lookahead table,
+    AC lookahead table, hc, vc).
 
-
-def _extend(v: int, size: int) -> int:
-    if size == 0:
-        return 0
-    return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-
-def _decode_block(br: _BitReader, dc_tab, ac_tab, q: np.ndarray,
-                  pred: int):
-    """-> (uint8-range 8x8 float sample block BEFORE level shift crop,
-    new DC predictor)."""
-    coef = np.zeros(64, np.float64)
-    t = _huff_decode(br, dc_tab)
-    pred += _extend(br.read(t), t)
-    coef[0] = pred * q[0]
-    k = 1
-    while k < 64:
-        rs = _huff_decode(br, ac_tab)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:
-                k += 16
-                continue
-            break  # EOB
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run past end of block")
-        coef[ZIGZAG[k]] = _extend(br.read(s), s) * q[ZIGZAG[k]]
-        k += 1
-    blk = _A.T @ coef.reshape(8, 8) @ _A + 128.0
-    return blk, pred
+    A symbol is one table lookup on the 16 bits at ``pos``, read from a
+    32-bit big-endian window per byte offset of the destuffed interval
+    (4 zero bytes appended); its magnitude bits are one more shift and
+    mask on the window at the advanced ``pos``.
+    """
+    zz, mask = _ZZ, _MASK  # locals: the loop below is the hot path
+    out = [([], []) for _ in comps]
+    adders = [(i.append, v.append) for i, v in out]
+    for m in range(n_mcus):
+        if m % per_iv == 0:
+            iv_idx = m // per_iv
+            if iv_idx >= len(intervals):
+                raise ValueError("JPEG missing restart interval data")
+            iv = intervals[iv_idx]
+            b = np.frombuffer(iv + bytes(4), np.uint8).astype(np.int64)
+            win = (
+                (b[:-3] << 24) | (b[1:-2] << 16) | (b[2:-1] << 8) | b[3:]
+            ).tolist()
+            nbits, pos, preds = 8 * len(iv), 0, [0] * len(comps)
+        my, mx = divmod(m, mcus_x)
+        for ci, (dc_lut, ac_lut, hc, vc) in enumerate(comps):
+            per_row = mcus_x * hc
+            add_idx, add_val = adders[ci]
+            pred = preds[ci]
+            for v in range(vc):
+                for hh in range(hc):
+                    base = ((my * vc + v) * per_row + mx * hc + hh) * 64
+                    e = dc_lut[(win[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF]
+                    if not e:
+                        raise ValueError("invalid Huffman code in JPEG stream")
+                    pos += e & 31
+                    t = e >> 5
+                    if t:
+                        d = (win[pos >> 3] >> (32 - (pos & 7) - t)) & mask[t]
+                        pos += t
+                        pred += d if d >> (t - 1) else d - mask[t]
+                    if pred:
+                        add_idx(base)
+                        add_val(pred)
+                    k = 1
+                    while k < 64:
+                        e = ac_lut[
+                            (win[pos >> 3] >> (16 - (pos & 7))) & 0xFFFF
+                        ]
+                        if not e:
+                            raise ValueError(
+                                "invalid Huffman code in JPEG stream"
+                            )
+                        pos += e & 31
+                        s = (e >> 5) & 15
+                        if not s:
+                            if e >> 5 == 0xF0:  # ZRL
+                                k += 16
+                                continue
+                            break  # EOB
+                        k += e >> 9
+                        if k > 63:
+                            raise ValueError("JPEG AC run past end of block")
+                        a = (win[pos >> 3] >> (32 - (pos & 7) - s)) & mask[s]
+                        pos += s
+                        add_idx(base + zz[k])
+                        add_val(a if a >> (s - 1) else a - mask[s])
+                        k += 1
+                    if pos > nbits:
+                        raise ValueError("truncated JPEG entropy stream")
+            preds[ci] = pred
+    return out
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
@@ -464,10 +512,12 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
             i = 0
             while i < len(body):
                 tc_th = body[i]
-                bits = list(body[i + 1 : i + 17])
+                bits = body[i + 1 : i + 17]
                 n = sum(bits)
-                values = list(body[i + 17 : i + 17 + n])
-                htables[tc_th] = _decode_table(bits, values)
+                values = body[i + 17 : i + 17 + n]
+                if tc_th >> 4 == 0 and max(values, default=0) > 11:
+                    raise ValueError("JPEG DC Huffman symbol above 11")
+                htables[tc_th] = _lookup_table(bits, values)
                 i += 17 + n
         elif marker in (0xC0, 0xC1):  # SOF0 / SOF1 (same decoding)
             prec, h, w, ncomp = struct.unpack(">BHHB", body[:6])
@@ -521,11 +571,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     n_mcus = mcus_x * mcus_y
     per_iv = restart_interval if restart_interval else n_mcus
 
-    planes = [
-        np.zeros((mcus_y * vc * 8, mcus_x * hc * 8), np.float64)
-        for (_, hc, vc, _) in comps
-    ]
-    dec_tabs = []
+    scan = []
     for cid, hc, vc, tq in comps:
         if cid not in scan_sel:
             raise ValueError(f"JPEG scan references unknown component {cid}")
@@ -534,28 +580,23 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
         ac = htables.get(0x10 | ta)
         if dc is None or ac is None or tq not in qtables:
             raise ValueError("JPEG scan references missing table")
-        dec_tabs.append((dc, ac, qtables[tq]))
+        scan.append((dc, ac, hc, vc))
+    coefs = _entropy_decode(intervals, scan, mcus_x, n_mcus, per_iv)
 
-    br = None
-    preds = [0] * len(comps)
-    for m in range(n_mcus):
-        if m % per_iv == 0:
-            iv_idx = m // per_iv
-            if iv_idx >= len(intervals):
-                raise ValueError("JPEG missing restart interval data")
-            br = _BitReader(intervals[iv_idx])
-            preds = [0] * len(comps)
-        my, mx = divmod(m, mcus_x)
-        for ci, (_, hc, vc, _) in enumerate(comps):
-            dc_tab, ac_tab, q = dec_tabs[ci]
-            for v in range(vc):
-                for hh in range(hc):
-                    blk, preds[ci] = _decode_block(
-                        br, dc_tab, ac_tab, q, preds[ci]
-                    )
-                    y0 = (my * vc + v) * 8
-                    x0 = (mx * hc + hh) * 8
-                    planes[ci][y0 : y0 + 8, x0 : x0 + 8] = blk
+    # dequantize with one scatter and inverse-DCT every block of a
+    # component in one batched product, then lay the blocks out as the
+    # component's sample plane
+    planes = []
+    for (_, hc, vc, tq), (idx, val) in zip(comps, coefs):
+        bh, bw_ = mcus_y * vc, mcus_x * hc
+        c = np.zeros(bh * bw_ * 64, np.float64)
+        idx = np.array(idx, np.int64)
+        c[idx] = np.array(val, np.int64) * qtables[tq][idx & 63]
+        blocks = _A.T @ c.reshape(-1, 8, 8) @ _A + 128.0
+        planes.append(
+            blocks.reshape(bh, bw_, 8, 8).transpose(0, 2, 1, 3)
+            .reshape(bh * 8, bw_ * 8)
+        )
 
     # crop each component to its nominal size, then upsample to (h, w)
     full = []

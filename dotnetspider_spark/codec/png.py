@@ -55,44 +55,45 @@ def encode_png(pixels: np.ndarray) -> bytes:
 
 
 def _unfilter(raw: np.ndarray, h: int, w: int, ch: int = 3) -> np.ndarray:
-    """Reverse PNG scanline filters 0-4 (bpp = ``ch`` bytes/pixel)."""
-    stride = w * ch + 1
-    rows = raw.reshape(h, stride)
-    out = np.zeros((h, w * ch), np.uint16)
-    bpp = ch
+    """Reverse PNG scanline filters 0-4 (bpp = ``ch`` bytes/pixel). Sub
+    is a per-channel running sum and Up one vector add (uint8 arithmetic
+    wraps mod 256); Average and Paeth depend on the byte just decoded, so
+    they run over Python ints."""
+    n, bpp = w * ch, ch
+    rows = raw.reshape(h, n + 1)
+    out = np.empty((h, n), np.uint8)
+    prev = np.zeros(n, np.uint8)
     for y in range(h):
-        ftype = rows[y, 0]
-        line = rows[y, 1:].astype(np.uint16)
-        prev = out[y - 1] if y > 0 else np.zeros(w * ch, np.uint16)
+        ftype, line = rows[y, 0], rows[y, 1:]
         if ftype == 0:
             out[y] = line
         elif ftype == 1:  # Sub
-            acc = line.copy()
-            for x in range(bpp, w * ch):
-                acc[x] = (acc[x] + acc[x - bpp]) & 0xFF
-            out[y] = acc
+            px = line.reshape(w, ch)
+            out[y] = np.cumsum(px, axis=0, dtype=np.uint8).reshape(n)
         elif ftype == 2:  # Up
-            out[y] = (line + prev) & 0xFF
-        elif ftype == 3:  # Average
-            acc = line.copy()
-            for x in range(w * ch):
-                left = acc[x - bpp] if x >= bpp else 0
-                acc[x] = (acc[x] + ((left + prev[x]) >> 1)) & 0xFF
-            out[y] = acc
-        elif ftype == 4:  # Paeth
-            acc = line.copy()
-            for x in range(w * ch):
-                a = int(acc[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                cc = int(out[y - 1, x - bpp]) if (y > 0 and x >= bpp) else 0
-                p = a + b - cc
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - cc)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else cc)
-                acc[x] = (acc[x] + pred) & 0xFF
-            out[y] = acc
+            out[y] = line + prev
+        elif ftype in (3, 4):
+            cur, up = line.tolist(), prev.tolist()
+            if ftype == 3:  # Average
+                for x in range(min(bpp, n)):
+                    cur[x] = (cur[x] + (up[x] >> 1)) & 0xFF
+                for x in range(bpp, n):
+                    cur[x] = (cur[x] + ((cur[x - bpp] + up[x]) >> 1)) & 0xFF
+            else:  # Paeth; with no left neighbour it predicts from above
+                for x in range(min(bpp, n)):
+                    cur[x] = (cur[x] + up[x]) & 0xFF
+                for x in range(bpp, n):
+                    a, b, c = cur[x - bpp], up[x], up[x - bpp]
+                    pa, pb, pc = abs(b - c), abs(a - c), abs(a + b - 2 * c)
+                    if pa <= pb and pa <= pc:
+                        cur[x] = (cur[x] + a) & 0xFF
+                    else:
+                        cur[x] = (cur[x] + (b if pb <= pc else c)) & 0xFF
+            out[y] = cur
         else:
             raise ValueError(f"bad PNG filter type {ftype}")
-    return out.astype(np.uint8).reshape(h, w, ch)
+        prev = out[y]
+    return out.reshape(h, w, ch)
 
 
 def decode_png(data: bytes) -> np.ndarray:

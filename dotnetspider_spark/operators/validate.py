@@ -10,7 +10,9 @@ the image-graft extension mandated by BASELINE.json.
 
 Implementation notes:
 - decode + PSNR run in an Arrow-batched pandas UDF over the engine's own
-  stdlib codec (codec/png.py); real-JPEG decode is stubbed there, loudly.
+  codecs (codec/png.py, and codec/jpeg.py for baseline JPEG); a row whose
+  fetched and reference payloads are the same bytes under the same format
+  tag is decoded once, and an undecodable payload still fails closed.
 - the scheduling path never sees ``bytes``; only this stage joins the
   payload columns, keyed on ``image_id`` (input_hint schema).
 - near-dup banding: a 64-bit phash splits into 5 disjoint 13-bit bands;
@@ -49,7 +51,9 @@ def _psnr_series(
             continue
         try:
             da = decode_image(bytes(ba), fa)
-            db = decode_image(bytes(bb), fb)
+            # decoding is deterministic: equal bytes under an equal tag
+            # decode to equal pixels, so decode them once
+            db = da if fa == fb and ba == bb else decode_image(bytes(bb), fb)
             out[n] = psnr(da, db)
         except (NotImplementedError, ValueError):
             out[n] = float("nan")

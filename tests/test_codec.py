@@ -24,30 +24,58 @@ def test_png_roundtrip_lossless():
     assert (decode_png(encode_png(img)) == img).all()
 
 
-def test_png_decode_filtered_rows():
-    # encoder always writes filter 0; decoder must handle 1-4 too
+def _filtered_png(img: np.ndarray, filters) -> bytes:
+    """PNG of a uint8 (h, w, ch) image, row y written with filter type
+    ``filters[y]`` (PNG spec section 9), by a plain per-byte encoder."""
     import struct
     import zlib
 
-    img = _img(7, (4, 5, 3))
-    h, w, _ = img.shape
-    # hand-build a PNG using filter type 2 (Up) for every row
-    lines = []
-    prev = np.zeros(w * 3, np.uint8)
-    for y in range(h):
-        cur = img[y].reshape(-1)
-        lines.append(b"\x02" + ((cur.astype(np.int16) - prev) % 256).astype(np.uint8).tobytes())
-        prev = cur
-    from dotnetspider_spark.codec.png import _chunk, _PNG_SIG
+    from dotnetspider_spark.codec.png import _PNG_SIG, _chunk
 
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    data = (
+    h, w, ch = img.shape
+    lines = []
+    prev = [0] * (w * ch)
+    for y, f in enumerate(filters):
+        cur = img[y].reshape(-1).tolist()
+        out = []
+        for x, v in enumerate(cur):
+            a = cur[x - ch] if x >= ch else 0
+            b = prev[x]
+            c = prev[x - ch] if x >= ch else 0
+            if f == 4:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+            else:
+                pred = (0, a, b, (a + b) // 2)[f]
+            out.append((v - pred) % 256)
+        lines.append(bytes([f] + out))
+        prev = cur
+    coltype = {1: 0, 3: 2, 4: 6}[ch]
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, coltype, 0, 0, 0)
+    return (
         _PNG_SIG
         + _chunk(b"IHDR", ihdr)
         + _chunk(b"IDAT", zlib.compress(b"".join(lines)))
         + _chunk(b"IEND", b"")
     )
-    assert (decode_png(data) == img).all()
+
+
+@pytest.mark.parametrize("bpp", [1, 3, 4], ids=lambda b: f"bpp{b}")
+@pytest.mark.parametrize(
+    "filters", [0, 1, 2, 3, 4, "mixed"],
+    ids=["none", "sub", "up", "average", "paeth", "mixed"],
+)
+def test_png_decode_filtered_rows(filters, bpp):
+    # the encoder always writes filter 0; real encoders pick one of the
+    # five filter types per row, so the decoder must reverse each
+    img = _img(7, (9, 11, bpp))
+    img[2:5, 3:8] = 250  # a flat patch: small residuals around it
+    row_filters = (
+        [y % 5 for y in range(9)] if filters == "mixed" else [filters] * 9
+    )
+    want = np.repeat(img, 3, axis=2) if bpp == 1 else img[:, :, :3]
+    assert (decode_png(_filtered_png(img, row_filters)) == want).all()
 
 
 def test_fakejpeg_lossy_psnr_band():
@@ -376,3 +404,111 @@ def test_jpeg_single_component_ignores_declared_sampling():
     assert data[i] == 0x11
     patched = data[:i] + b"\x22" + data[i + 1 :]
     assert (decode_jpeg(patched) == want).all()
+
+
+def _golden_streams():
+    """Seeded encoder streams: 4:4:4 and 4:2:0, restart intervals 0-3,
+    quality 5-100, 1-80 px, smooth and noise content, then one
+    grayscale stream."""
+    from dotnetspider_spark.codec.jpeg import encode_jpeg
+
+    rng = np.random.default_rng(20261017)
+    for k in range(16):
+        h, w = ((1, 1), (80, 80))[k] if k < 2 else rng.integers(1, 81, 2)
+        px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        if k % 4 != 3:
+            px = (_smooth((h, w, 3)) // 2 + px // 8).astype(np.uint8)
+        yield encode_jpeg(px, (5, 20, 50, 75, 92, 100)[k % 6],
+                          subsample=k % 2 == 1, restart_interval=k // 2 % 4)
+    yield _gray_jpeg(_smooth((20, 28, 3))[:, :, 0])
+
+
+# md5 of decode_jpeg's output for each of _golden_streams(), recorded
+# with the bit-serial decoder the table-driven one replaced
+_GOLDEN_MD5 = [
+    "a41c3a68337949f9d422e7c5469624e0",
+    "a0b64b5b3a398f913e1e75d0c5867c77",
+    "4e4da92253c93f5c1afe8d3601ba63e2",
+    "9e9ad60af6198b413f60f51b1a5b71be",
+    "5830d68b13aa4fd74163b6a7e1340d95",
+    "5f378058de9f65ce43b1209dc9fc6ddb",
+    "feedce7f363f544bf224945046cfbbec",
+    "d35903856610492ab7a0d83b26684f43",
+    "d4a9c588816404890e32f983424a9898",
+    "51cc3275b9ffa861563ce2ffdeaaf117",
+    "a2c7707510c4647a2d9b681ada162bca",
+    "cde5fffe82554dc0af095a98b30a07cd",
+    "fdcc3a0f5b3f2f7fa38e692ad2c9de59",
+    "ea943eb1a8ea8ba8823d173aefae1fe0",
+    "0ef1f5312f523f2875b882d0c3208ed2",
+    "2a9a8d864a7313a5d1bc92b937a5df71",
+    "7ab7a78258ded0f35560d21025a9da14",
+]
+
+
+def test_jpeg_decoder_matches_golden_pixels():
+    import hashlib
+
+    from dotnetspider_spark.codec.jpeg import decode_jpeg
+
+    got = [hashlib.md5(decode_jpeg(s).tobytes()).hexdigest()
+           for s in _golden_streams()]
+    assert got == _GOLDEN_MD5
+
+
+def _with_dht(data: bytes, table: int, bits=None, values=None) -> bytes:
+    """``data`` with the BITS and/or HUFFVAL of its ``table``-th DHT
+    segment replaced in place (same lengths)."""
+    i = -1
+    for _ in range(table + 1):
+        i = data.index(b"\xff\xc4", i + 1)
+    seglen = int.from_bytes(data[i + 2 : i + 4], "big")
+    body = bytearray(data[i + 4 : i + 2 + seglen])
+    if bits is not None:
+        assert len(bits) == 16 and sum(bits) == sum(body[1:17])
+        body[1:17] = bytes(bits)
+    if values is not None:
+        assert len(values) == sum(body[1:17])
+        body[17:] = bytes(values)
+    return data[: i + 4] + bytes(body) + data[i + 4 + len(body) :]
+
+
+def test_jpeg_malformed_huffman_tables_fail_closed():
+    from dotnetspider_spark.codec.jpeg import _DC_LUMA, decode_jpeg, encode_jpeg
+
+    data = encode_jpeg(_smooth((16, 16, 3)), 90)
+    assert (decode_jpeg(_with_dht(data, 0, values=_DC_LUMA[1]))
+            == decode_jpeg(data)).all()  # the splice itself is sound
+    # three 1-bit codes: only two exist
+    over = [3, 0, 3, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
+    with pytest.raises(ValueError, match="over-subscribed"):
+        decode_jpeg(_with_dht(data, 0, bits=over))
+    # a baseline DC difference has at most 11 magnitude bits
+    with pytest.raises(ValueError, match="above 11"):
+        decode_jpeg(_with_dht(data, 0, values=list(range(11)) + [12]))
+
+
+def test_jpeg_entropy_segment_fuzz_fails_closed():
+    """Bytes flipped only inside the entropy-coded segment of a 4:2:0
+    restart-interval stream: the decoder yields pixels of the right
+    shape or raises ValueError (invalid code, AC run past the block,
+    truncated interval, missing interval), or NotImplementedError when
+    a flip forms an unsupported SOF marker; never anything else."""
+    from dotnetspider_spark.codec.jpeg import decode_jpeg, encode_jpeg
+
+    base = encode_jpeg(_smooth((40, 56, 3)), 85, subsample=True,
+                       restart_interval=2)
+    sos = base.index(b"\xff\xda")
+    start = sos + 2 + int.from_bytes(base[sos + 2 : sos + 4], "big")
+    end = len(base) - 2  # EOI
+    rng = np.random.default_rng(99)
+    raised = 0
+    for _ in range(300):
+        data = bytearray(base)
+        for _ in range(rng.integers(1, 4)):
+            data[rng.integers(start, end)] = rng.integers(0, 256)
+        try:
+            assert decode_jpeg(bytes(data)).shape == (40, 56, 3)
+        except (ValueError, NotImplementedError):
+            raised += 1
+    assert 0 < raised < 300

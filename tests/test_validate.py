@@ -203,3 +203,63 @@ def test_real_jpeg_corpus_validates_via_psnr(spark):
         assert r["valid"], r
     assert not val["img6"]["valid"] and val["img6"]["psnr_db"] is None
     assert not val["img7"]["valid"] and val["img7"]["caption_ok"] is False
+
+
+def _decode_once_rows():
+    import numpy as np
+
+    from dotnetspider_spark.codec.jpeg import encode_jpeg
+    from dotnetspider_spark.codec.png import encode_png
+
+    px = np.random.default_rng(5).integers(0, 256, (24, 32, 3), dtype=np.uint8)
+    jpg, png = encode_jpeg(px, 92), encode_png(px)
+    # (id, fetched bytes, fetched fmt, reference bytes, reference fmt)
+    return [
+        ("trunc", jpg[: len(jpg) // 2], "jpeg", jpg[: len(jpg) // 2], "jpeg"),
+        ("garbage", png[:60] + b"garbage", "png", png[:60] + b"garbage", "png"),
+        ("same", jpg, "jpeg", jpg, "jpeg"),
+        ("png_as_jpeg_ref", png, "png", png, "jpeg"),
+        ("jpeg_as_png_ref", jpg, "jpeg", jpg, "png"),
+    ]
+
+
+def test_identical_payloads_still_validated(spark):
+    """Equal fetched and reference bytes are decoded once, not skipped:
+    an undecodable payload still fails closed on both sides, a valid one
+    scores inf, and equal bytes under different format tags decode
+    separately (one side fails to decode, so the row is invalid)."""
+    rows = _decode_once_rows()
+    schema = "image_id string, bytes binary, fmt string, caption string"
+    fetched = spark.createDataFrame(
+        [(i, fb, ff, "c") for i, fb, ff, _, _ in rows], schema
+    )
+    ref = spark.createDataFrame(
+        [(i, rb, rf, "c") for i, _, _, rb, rf in rows], schema
+    )
+    val = {r["image_id"]: r for r in validate_payloads(fetched, ref).collect()}
+    for i in ("trunc", "garbage", "png_as_jpeg_ref", "jpeg_as_png_ref"):
+        assert val[i]["psnr_db"] is None and not val[i]["valid"], val[i]
+    assert val["same"]["psnr_db"] == float("inf") and val["same"]["valid"]
+
+
+def test_psnr_decodes_equal_payloads_once(monkeypatch):
+    import pandas as pd
+
+    from dotnetspider_spark.codec import png
+    from dotnetspider_spark.operators.validate import _psnr_series
+
+    calls = []
+    real = png.decode_image
+
+    def counting(data, fmt):
+        calls.append(fmt)
+        return real(data, fmt)
+
+    monkeypatch.setattr(png, "decode_image", counting)
+    rows = _decode_once_rows()
+    got = _psnr_series(*(pd.Series([r[k] for r in rows]) for k in (1, 2, 3, 4)))
+    # one decode per equal-bytes, equal-tag row (the first two fail on
+    # it); the mixed-tag rows decode both sides, the second one failing
+    assert calls == ["jpeg", "png", "jpeg", "png", "jpeg", "jpeg", "png"]
+    assert got.isna().tolist() == [True, True, False, True, True]
+    assert got[2] == float("inf")
