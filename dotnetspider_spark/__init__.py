@@ -7,8 +7,10 @@ crawler (0XC8/DotnetSpider, C#) as idiomatic Spark DataFrame programs:
   snapshot-versioned parquet tables (``dotnetspider_spark.tables``)
 - politeness / DFS / BFS ordering -> salted group-by-host windows
   (``dotnetspider_spark.operators.frontier``)
-- bloom/cuckoo URL-seen sets      -> vectorized Arrow UDFs
-  (``dotnetspider_spark.operators.bloom``)
+- URL-seen set                    -> exact identity anti-join in the
+  crawl loop (``dotnetspider_spark.crawler.loop``); a partitioned bloom
+  filter over vectorized Arrow UDFs (``dotnetspider_spark.operators.bloom``)
+  remains as a standalone membership operator
 - selectors & formatters          -> built-in column expressions
   (``dotnetspider_spark.functions``)
 - image payload validation        -> pandas UDFs over binary columns

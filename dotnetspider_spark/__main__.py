@@ -30,7 +30,6 @@ Config (YAML or JSON) — every key optional unless marked:
                                 # (or an HTTP fetcher) to have any effect
     bucketed_seen: false
     seen_buckets: 32
-    use_bloom: false
     checkpoint_dir: state/      # enables --resume
     output: out/                # fetched/, errors/ parquet + metrics.json
 
@@ -60,7 +59,7 @@ def load_config(path: str) -> dict:
 _AS_GIVEN = ("max_depth", "per_host_limit", "checkpoint_dir")
 _INTS = ("cycle_retry_times", "seen_buckets", "max_iterations")
 _BOOLS = (
-    "priority_first", "bucketed_seen", "use_bloom", "download_files",
+    "priority_first", "bucketed_seen", "download_files",
     "honor_link_policy", "trap_guard", "adaptive_backoff",
 )
 

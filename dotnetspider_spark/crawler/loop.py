@@ -12,11 +12,12 @@ union of additive parts (``frontier/init``/``frontier/compact=N`` plus
 ``fresh/iter=N`` appends) anti-joined against consumed batch identities
 (``consumed/iter=N``), compacted every ``compact_every`` iterations;
 ``seen`` is the identity column of its parts (plus a bucketed compact
-table under ``bucketed_seen``); ``fetched/iter=N``, ``errors/iter=N``
-(the failing.log analog, Spider.cs:993-994) and ``downloads/iter=N`` are
-append-only fact logs. Per-iteration I/O is therefore O(batch + new
-links), not O(frontier) — the property that matters at the 10^10-row
-design point. The frontier size is tracked arithmetically (n - consumed
+table under ``bucketed_seen``), and the dedup phase checks candidates
+against it with one exact anti-join (``operators.frontier.dedup_push``);
+``fetched/iter=N``, ``errors/iter=N`` (the failing.log analog,
+Spider.cs:993-994) and ``downloads/iter=N`` are append-only fact logs.
+Per-iteration I/O is therefore O(batch + new links), not O(frontier) —
+the property that matters at the 10^10-row design point. The frontier size is tracked arithmetically (n - consumed
 + fresh), so no count scan of the frontier exists at all. Every state
 dir is written by :func:`_write_state`, counted (where a count is used)
 from the written files' parquet footers by :func:`_rows` (no count job),
@@ -48,7 +49,7 @@ Phases. ``_step`` runs one ``_phase_*`` function per stage, in order:
     processor   page-processor hook (n_results, proc_error)
     retries     transient / processor failures -> retried+1 (NEW identity)
     discover    successes --extract links, canonicalize, filters--> children
-    dedup       (children ∪ retries) --dedup_push vs seen--> fresh
+    dedup       (children ∪ retries) --exact anti-join vs seen--> fresh
     write       fresh + fetched deltas
     errors      errors delta
     metrics     per-host lineage (written DISTRIBUTED, never collected)
@@ -97,12 +98,6 @@ from dotnetspider_spark.functions.content import download_file_path, is_media_ty
 from dotnetspider_spark.functions.identity import request_identity
 from dotnetspider_spark.functions.linkpolicy import extract_policy_links_udf
 from dotnetspider_spark.functions.urlops import is_fetchable, url_host
-from dotnetspider_spark.operators.bloom import (
-    BLOOM_SCHEMA,
-    BloomParams,
-    build_blooms,
-    dedup_push_bloom,
-)
 from dotnetspider_spark.operators.frontier import (
     adaptive_backoff,
     dedup_push,
@@ -141,9 +136,6 @@ class CrawlConfig:
     per_host_limit: int | None = 8  # politeness budget per iteration (SURVEY §2.2)
     iter_wall_ms: int = 1000  # iteration wall budget for delay-derived k
     global_limit: int | None = None  # exact-order emulation; 1 = reference poll
-    use_bloom: bool = False  # bloom-pruned dedup (§7.4 hybrid — exact either way)
-    bloom_expected_per_bucket: int = 1_000_000
-    bloom_n_buckets: int = 32
     max_iterations: int = 100_000
     checkpoint_dir: str | None = None
     compact_every: int = 8  # frontier delta-compaction cadence (iterations)
@@ -215,16 +207,6 @@ class CrawlConfig:
     #: one-crossing parse budget as the default path. Default OFF:
     #: policy intentionally diverges from reference crawl results.
     honor_link_policy: bool = False
-
-    def __post_init__(self):
-        if self.use_bloom and self.bucketed_seen:
-            # the dedup step can take only one path; silently dropping
-            # the bucketed table the config asked for hid real behavior
-            raise ValueError(
-                "use_bloom and bucketed_seen are mutually exclusive: the "
-                "dedup stage uses the bloom prune OR the bucketed-seen "
-                "anti-join, not both — pick one"
-            )
 
 
 ERRORS_SCHEMA = (
@@ -424,13 +406,6 @@ def _robots_flag(batch: DataFrame, robots: DataFrame | None) -> DataFrame:
     ).drop("__rules", "__path")
 
 
-def _robots_gate(batch: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Filtering wrapper over :func:`_robots_flag` (kept for plan tests)."""
-    if robots is None:
-        return batch
-    return _robots_flag(batch, robots).filter(F.col("__allowed")).drop("__allowed")
-
-
 def _discover_children(success: DataFrame, cfg: CrawlConfig, iter_base) -> DataFrame:
     """success(frontier cols + html + __block) -> child frontier rows.
 
@@ -557,7 +532,7 @@ def read_manifest(root: str, it: int) -> dict | None:
 class Checkpointer:
     """Manifest writer over the parquet delta-snapshot layout.
 
-    The crawl loop writes the state tables (fresh/consumed/seen/blooms/
+    The crawl loop writes the state tables (fresh/consumed/seen_extra/
     fetched/errors/metrics as ``<root>/<table>/iter=N`` parquet dirs,
     frontier compactions as ``frontier/compact=N``); this class adds one
     atomically-renamed ``manifests/iter=N.json`` per COMPLETE iteration
@@ -638,13 +613,11 @@ def _rows(path: str) -> int:
 class CrawlState:
     """Everything one crawl iteration hands the next.
 
-    Every field but ``blooms`` is a checkpoint-manifest key, in manifest
-    order: the live part lists of the delta tables (module docstring),
-    the frontier size, and the bucketed compact of ``seen`` under
-    ``bucketed_seen`` (catalog name, the bucket count its files were
-    written with, and its path). ``blooms`` is the in-memory handle of
-    the bloom filters (``use_bloom``); a resumed crawl rebuilds it from
-    ``seen`` on first use.
+    Every field is a checkpoint-manifest key, in manifest order: the
+    live part lists of the delta tables (module docstring), the frontier
+    size, and the bucketed compact of ``seen`` under ``bucketed_seen``
+    (catalog name, the bucket count its files were written with, and
+    its path).
 
     Cross-iteration state lives in parquet, NOT in checkpointed RDDs.
     Spark 4's ``localCheckpoint`` copies the pre-checkpoint plan's
@@ -669,7 +642,6 @@ class CrawlState:
     seen_table: str | None = None
     seen_table_buckets: int | None = None
     seen_table_path: str | None = None
-    blooms: DataFrame | None = None
 
     @classmethod
     def from_manifest(cls, m: dict) -> CrawlState:
@@ -705,7 +677,7 @@ class CrawlState:
         return _read(spark, "identity string", table + self.seen_parts)
 
 
-_MANIFEST_KEYS = [f.name for f in fields(CrawlState) if f.name != "blooms"]
+_MANIFEST_KEYS = [f.name for f in fields(CrawlState)]
 
 
 @dataclass
@@ -720,7 +692,6 @@ class _Ctx:
     robots: DataFrame | None
     host_delays: DataFrame | None
     processor: object
-    bloom_params: BloomParams | None
 
 
 def _write_seen_table(
@@ -783,17 +754,6 @@ def _initial_state(ctx: _Ctx, seeds: DataFrame, resume: bool) -> tuple[CrawlStat
     if cfg.bucketed_seen:
         _write_seen_table(ctx, state, _read(spark, "identity string", [init]), 0)
     return state, 0
-
-
-def _add_seen(ctx: _Ctx, state: CrawlState, part: str, bloom_path: str) -> None:
-    """Append a seen delta part; when bloom filters are live, fold its
-    identities into them (persisted under ``bloom_path``)."""
-    state.seen_parts.append(part)
-    if state.blooms is not None:
-        delta = _read(ctx.spark, "identity string", [part])
-        blooms = build_blooms(delta, ctx.bloom_params, existing=state.blooms)
-        _write_state(blooms, bloom_path)
-        state.blooms = _read(ctx.spark, BLOOM_SCHEMA, [bloom_path])
 
 
 # ------------------------------------------------------------------ phases
@@ -928,7 +888,7 @@ def _phase_redirects(ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame) 
     path = f"{ctx.root}/seen_extra/iter={it}"
     _write_state(extra, path)
     if _rows(path) > 0:
-        _add_seen(ctx, state, path, f"{ctx.root}/blooms/iter={it}_redir")
+        state.seen_parts.append(path)
 
 
 def _phase_media(
@@ -1040,20 +1000,16 @@ def _phase_discover(
 
 
 def _phase_dedup(
-    ctx: _Ctx, state: CrawlState, it: int, children: DataFrame, retries: DataFrame
+    ctx: _Ctx, state: CrawlState, children: DataFrame, retries: DataFrame
 ) -> DataFrame:
-    """(children ∪ retries) minus every seen identity: the fresh rows."""
+    """(children ∪ retries) minus every seen identity: the fresh rows.
+    The seen check is the exact ``dedup_push`` anti-join; under
+    ``bucketed_seen`` the same exact set is read as recent deltas plus
+    the bucketed compact."""
     spark = ctx.spark
     candidates = children.select(*_FRONTIER_COLS).unionByName(
         retries.select(*_FRONTIER_COLS)
     )
-    if ctx.cfg.use_bloom:
-        seen = state.seen(spark)
-        if state.blooms is None:  # fold the seed identities in on first use
-            path = f"{ctx.root}/blooms/iter={it}"
-            _write_state(build_blooms(seen, ctx.bloom_params), path)
-            state.blooms = _read(spark, BLOOM_SCHEMA, [path])
-        return dedup_push_bloom(candidates, seen, state.blooms, ctx.bloom_params)
     if state.seen_table is not None:
         # LSM read path: within-batch + recent-delta dedup first (small
         # side), then anti-join the bucketed compact — the big seen side
@@ -1084,7 +1040,7 @@ def _phase_write(
         trap_cached.unpersist()
     if n_fresh > 0:
         state.frontier_parts.append(path)
-        _add_seen(ctx, state, path, f"{root}/blooms/iter={it + 1}")
+        state.seen_parts.append(path)
     cols = [*_FRONTIER_COLS, "status", "rank", "target_url", F.lit(it).alias("iter")]
     fetched_out = success.select(*cols)
     if media is not None:
@@ -1232,7 +1188,7 @@ def _step(ctx: _Ctx, state: CrawlState, it: int) -> tuple[CrawlState, dict]:
     success, linkable, proc_failed = _phase_processor(ctx, success)
     retries = _phase_retries(ctx, fetched, proc_failed, iter_base)
     children, n_trap_hosts, trap_cached = _phase_discover(ctx, linkable, iter_base)
-    fresh = _phase_dedup(ctx, state, it, children, retries)
+    fresh = _phase_dedup(ctx, state, children, retries)
     n_fresh = _phase_write(ctx, state, it, fresh, trap_cached, success, media)
     state.n_frontier += n_fresh - n_consumed
     _phase_errors(ctx, state, it, fetched, denied, proc_failed)
@@ -1318,10 +1274,6 @@ def crawl(
         spark=spark, cfg=cfg, root=root, ckpt=Checkpointer(spark, root),
         fetcher=fetcher, robots=robots, host_delays=host_delays,
         processor=processor,
-        bloom_params=BloomParams(
-            expected_per_bucket=cfg.bloom_expected_per_bucket,
-            n_buckets=cfg.bloom_n_buckets,
-        ) if cfg.use_bloom else None,
     )
     state, start_iter = _initial_state(ctx, seeds, resume)
     metrics: list[dict] = []

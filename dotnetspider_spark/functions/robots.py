@@ -4,7 +4,7 @@ The reference has NO robots handling anywhere (grep over src/**/*.cs = 0
 hits, SURVEY §2.2); the north rule adds it. This module parses raw
 robots.txt documents (one row per host) into the engine's rules schema
 ``(host, path_prefix, allow, crawl_delay_ms)`` which
-``crawler.loop._robots_gate`` broadcast-joins against the frontier.
+``crawler.loop._robots_flag`` broadcast-joins against each batch.
 
 Parsing follows the de-facto standard (REP, RFC 9309):
 - ``User-agent`` groups; a group applies if it names our agent or ``*``
@@ -27,6 +27,7 @@ Python pass per Arrow batch, one output row per rule.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
 
 import pandas as pd
@@ -37,6 +38,9 @@ RULES_SCHEMA = (
     "host string, path_prefix string, allow boolean, crawl_delay_ms int, "
     "path_re string"
 )
+
+
+_MAX_DELAY_S = (2**31 - 1) / 1000
 
 
 def pattern_to_regex(path: str) -> str:
@@ -85,9 +89,13 @@ def parse_robots_txt(text: str, agent: str = "dotnetspider") -> list[dict]:
         elif key == "crawl-delay":
             in_group_body = True
             try:
-                cur_delay = float(val)
+                delay = float(val)
             except ValueError:
-                pass
+                continue
+            if not math.isnan(delay):
+                # clamp into what an int crawl_delay_ms holds; a delay
+                # <= 0 already means "uncapped" to politeness_budget
+                cur_delay = min(max(delay, 0.0), _MAX_DELAY_S)
     flush()
 
     # most-specific agent match: exact name beats '*'

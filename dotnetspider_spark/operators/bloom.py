@@ -1,11 +1,11 @@
-"""Partitioned bloom-filter URL-seen set — the 10^10-scale dedup path.
+"""Partitioned bloom-filter URL-seen set — a vectorized membership filter.
 
 Reference: ``BloomFilterDuplicateRemover`` (BloomFilterDuplicateRemover
 .cs:26-58; default fpp 0.01) over ``BloomFilter`` (BloomFilter.cs:37-74,
 129-158) — a single in-memory c*n-bit array with k=⌈−log₂p⌉ salted
 HMACSHA1 hashes. One machine, one filter.
 
-Spark re-expression (SURVEY §2.1/§4.3/§7.4): the seen set is hash-
+Spark re-expression (SURVEY §2.1/§4.3): the seen set is hash-
 partitioned into N buckets by ``pmod(xxhash64(identity), N)``; each
 bucket owns an independent bloom filter stored as one binary row in a
 ``blooms`` table. Both 64-bit hash lanes (``xxhash64(identity)`` and
@@ -13,23 +13,21 @@ bucket owns an independent bloom filter stored as one binary row in a
 the Python side only does numpy bitset arithmetic over whole Arrow
 batches (input_hint: no per-row Python). Index derivation uses
 Kirsch–Mitzenmacher double hashing — FP-rate-equivalent to the
-reference's k independent HMACs, not bit-identical (the exact-oracle
-hybrid below keeps observable dedup exact regardless).
+reference's k independent HMACs, not bit-identical.
 
-Exactness contract (§7.4): bloom probes PRUNE, never DROP. Candidates
-whose probe says "definitely new" skip the expensive anti-join; the
-"maybe seen" remainder — ~fpp of the truly-new plus all the truly-seen —
-goes through the exact anti-join against the ``seen`` table. Net effect
-at 10^10 rows: the anti-join input shrinks from |candidates| to
-|dups| + fpp·|new|, while false-positive URL loss is impossible.
+``probe_blooms`` has no false negatives: ``maybe_seen`` False is
+definitive, True means "run an exact check". This is NOT a crawl-loop
+path. The loop's seen check is the exact anti-join
+(``operators.frontier.dedup_push``). A bloom prune in front of it
+measured 2.0–3.3x slower per iteration at every size from 10^4 to 10^7
+seen identities (4 vCPU): the "maybe seen" rows still need the O(seen)
+anti-join, so the prune shrinks only the candidate side, which is
+already small, and adds a filter build and probe on top.
 
-Scale notes: filters ride a broadcast-able table of N rows × m/8 bytes
-(256 buckets × 1.2 MB covers 10^9 seen at fpp 0.01; at 10^10 raise N,
-not m — buckets stay executor-cache-sized and build/probe stays
-embarrassingly parallel). Build is an incremental fold: ``build_blooms``
-can start from an existing blooms table and OR-in only the latest seen
-delta, which is exactly the per-iteration maintenance the crawl loop
-needs (Iceberg snapshot carries the blooms table forward).
+Scale notes: filters ride a table of N rows × m/8 bytes (256 buckets ×
+1.2 MB covers 10^9 seen at fpp 0.01; at 10^10 raise N, not m — buckets
+stay executor-cache-sized and build/probe stays embarrassingly
+parallel).
 """
 
 from __future__ import annotations
@@ -86,64 +84,29 @@ def build_blooms(
     seen: DataFrame,
     params: BloomParams | None = None,
     identity_col: str = "identity",
-    existing: DataFrame | None = None,
 ) -> DataFrame:
-    """Fold identities into per-bucket bloom rows.
-
-    ``existing`` (a prior blooms table) is OR-merged in, making the build
-    incremental: pass each iteration's seen *delta* plus last iteration's
-    blooms instead of rebuilding from the full 10^10-row seen table.
-    """
+    """Fold identities into per-bucket bloom rows (``BLOOM_SCHEMA``)."""
     params = params or BloomParams()
     m, k = params.m_bits, params.k_hashes
     lanes = _with_lanes(seen, params, identity_col).select("__bucket", "__h1", "__h2")
-    if existing is not None:
-        prior = existing.select(
-            F.col("bucket").alias("__bucket"),
-            F.col("n_items").alias("__prior_n"),
-            F.col("bits").alias("__prior_bits"),
-        )
-        lanes = lanes.join(prior, "__bucket", "left")
-    else:
-        lanes = lanes.withColumn("__prior_n", F.lit(None).cast("long")).withColumn(
-            "__prior_bits", F.lit(None).cast("binary")
-        )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-        bucket = int(pdf["__bucket"].iloc[0])
-        prior_bits = pdf["__prior_bits"].iloc[0]
-        if prior_bits is not None:
-            bits = np.frombuffer(bytes(prior_bits), dtype=np.uint8).copy()
-            n_items = int(pdf["__prior_n"].iloc[0] or 0)
-        else:
-            bits = np.zeros((m + 7) // 8, dtype=np.uint8)
-            n_items = 0
+        bits = np.zeros((m + 7) // 8, dtype=np.uint8)
         idx = _indices(
             pdf["__h1"].to_numpy(), pdf["__h2"].to_numpy(), k, m
         ).reshape(-1)
         np.bitwise_or.at(bits, idx >> 3, (1 << (idx & 7)).astype(np.uint8))
         return pd.DataFrame(
             {
-                "bucket": [bucket],
+                "bucket": [int(pdf["__bucket"].iloc[0])],
                 "m": [m],
                 "k": [k],
-                "n_items": [n_items + len(pdf)],
+                "n_items": [len(pdf)],
                 "bits": [bits.tobytes()],
             }
         )
 
-    folded = lanes.groupBy("__bucket").applyInPandas(fold, BLOOM_SCHEMA)
-    if existing is not None:
-        # groupBy only emits buckets present in the DELTA — carry prior
-        # filters of untouched buckets forward unchanged, or incremental
-        # maintenance silently forgets them (measured: a late-crawl
-        # iteration with a 2-row delta wiped 6 of 8 buckets and the
-        # dedup re-admitted seen URLs -> non-terminating crawl)
-        untouched = existing.join(
-            folded.select("bucket"), "bucket", "left_anti"
-        )
-        folded = folded.unionByName(untouched.select(*folded.columns))
-    return folded
+    return lanes.groupBy("__bucket").applyInPandas(fold, BLOOM_SCHEMA)
 
 
 def probe_blooms(
@@ -183,32 +146,3 @@ def probe_blooms(
         .applyInPandas(probe, out_schema)
         .drop("__h1", "__h2", "__bucket")
     )
-
-
-def dedup_push_bloom(
-    candidates: DataFrame,
-    seen: DataFrame,
-    blooms: DataFrame,
-    params: BloomParams | None = None,
-    identity_col: str = "identity",
-) -> DataFrame:
-    """Bloom-accelerated DuplicateRemovedScheduler.Push (§7.4 hybrid).
-
-    Observably identical to the exact ``dedup_push`` (first-push-wins
-    within batch, drop anything in ``seen``) — the bloom only routes rows
-    between the fast path (definitely new) and the exact anti-join.
-    """
-    from dotnetspider_spark.operators.frontier import dedup_push
-
-    first = dedup_push(candidates, seen=None, identity_col=identity_col)
-    probed = probe_blooms(first, blooms, params, identity_col)
-    # materialization barrier: both branches below re-read the probe
-    # result, and in iterative loops the un-truncated plan feeds
-    # Catalyst's multiplicative size estimation (see session.py notes)
-    probed = probed.localCheckpoint(eager=True)
-    fast_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    checked = maybe.join(
-        seen.select(identity_col).distinct(), on=identity_col, how="left_anti"
-    )
-    return fast_new.unionByName(checked)

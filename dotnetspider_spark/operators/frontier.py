@@ -45,8 +45,10 @@ def dedup_push(
     Scale note: both sides shuffle on ``identity`` only (narrow key); the
     anti-join never touches payload columns, and at 10^10 rows the seen
     side is pre-bucketed by identity so AQE plans a shuffle-free probe of
-    matching buckets. The bloom prefilter (operators.bloom) shrinks the
-    candidate side before this join at scale.
+    matching buckets. This anti-join is the crawl loop's only seen
+    check: a bloom prefilter (operators.bloom) in front of it measured
+    slower at every seen size tried, because the rows it cannot rule
+    out still need this O(seen) join.
 
     First-per-key is a ``min_by`` aggregation, not a window: aggregation
     gets a map-side partial combine (each task pre-reduces its duplicates
@@ -155,30 +157,6 @@ def select_fetch_batch(
         pre.withColumn("host_rank", F.row_number().over(w_host))
         .filter(F.col("host_rank") <= k_expr)
     )
-
-
-def eligible(
-    frontier: DataFrame,
-    max_depth: int | None = None,
-    max_retries: int = 5,
-    robots: DataFrame | None = None,
-) -> DataFrame:
-    """Pre-fetch gates: depth (Page.cs:151-152, Spider.cs:66), retry budget
-    (CycleRetryTimes default 5, Spider.cs:186), robots allow/deny (absent
-    in the reference; required by the north rule). Robots delegates to
-    the engine's real matcher (``crawler.loop._robots_gate``:
-    scheme-agnostic path match, longest-prefix-wins with the Google
-    allow tie-break) — this wrapper previously carried its OWN
-    literal-``http://``-LIKE, any-deny-wins matcher, which silently
-    ignored rules for https URLs and inverted equal-length verdicts."""
-    df = frontier.filter(F.col("retried") <= max_retries)
-    if max_depth is not None:
-        df = df.filter(F.col("depth") <= max_depth)
-    if robots is not None:
-        from dotnetspider_spark.crawler.loop import _robots_gate
-
-        df = _robots_gate(df, robots)
-    return df
 
 
 def revisit_schedule(

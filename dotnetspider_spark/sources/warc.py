@@ -21,12 +21,18 @@ file — matching how Common Crawl jobs shard: ~1 GB per .warc.gz, tens
 of thousands of files → natural partition parallelism). Gzip members
 (.warc.gz) are transparently decompressed per-file; record-level
 member-splitting (seekable gz) is out of scope here.
+
+Fail-closed: a file whose gzip stream is truncated or corrupt makes the
+splitter raise ``ValueError``, and :func:`read_warc` turns that into one
+row holding only the file's ``warc_path`` (every other column NULL), so
+one bad archive is visible in the output but never fails the job.
 """
 
 from __future__ import annotations
 
 import gzip
 import io
+import zlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -107,9 +113,13 @@ def split_warc_records(data: bytes, path: str = "") -> list[dict]:
     """Pure-function record splitter: walk WARC headers, slice each
     record body by its Content-Length (never regex over payload bytes —
     bodies may contain 'WARC/1.0'), keep ``response`` records, parse
-    the embedded HTTP status line + headers."""
+    the embedded HTTP status line + headers. A truncated or corrupt
+    gzip stream raises ``ValueError``."""
     if path.endswith(".gz") or data[:2] == b"\x1f\x8b":
-        data = gzip.decompress(data)
+        try:
+            data = gzip.decompress(data)
+        except (EOFError, zlib.error, gzip.BadGzipFile) as e:
+            raise ValueError(f"corrupt gzip stream in {path!r}: {e!r}") from None
     rows: list[dict] = []
     pos = 0
     n = len(data)
@@ -128,6 +138,8 @@ def split_warc_records(data: bytes, path: str = "") -> list[dict]:
             length = int(headers.get("content-length", ""))
         except ValueError:
             break  # malformed: cannot locate the next record safely
+        if length < 0:
+            break  # would walk backwards (and never end)
         body_start = hdr_end + 4
         body = data[body_start : body_start + length]
         pos = body_start + length + 4  # trailing CRLF CRLF
@@ -141,7 +153,9 @@ def split_warc_records(data: bytes, path: str = "") -> list[dict]:
             if hh_end != -1:
                 status_line = body[: body.find(_CRLF)]
                 parts = status_line.split(b" ")
-                if len(parts) >= 2 and parts[1].isdigit():
+                # three digits (RFC 9110 §15): anything longer may not
+                # fit the int column
+                if len(parts) >= 2 and len(parts[1]) == 3 and parts[1].isdigit():
                     http_status = int(parts[1])
                 http_ct = _parse_headers(body[:hh_end]).get("content-type")
                 payload = body[hh_end + 4 :]
@@ -160,7 +174,8 @@ def split_warc_records(data: bytes, path: str = "") -> list[dict]:
 
 
 def read_warc(spark, glob: str) -> DataFrame:
-    """binaryFile scan over ``glob`` → one row per WARC response record."""
+    """binaryFile scan over ``glob`` → one row per WARC response record,
+    plus one ``warc_path``-only row per archive the splitter rejects."""
     files = spark.read.format("binaryFile").load(glob).select("path", "content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -171,7 +186,10 @@ def read_warc(spark, glob: str) -> DataFrame:
         for pdf in batches:
             rows: list[dict] = []
             for _, r in pdf.iterrows():
-                rows.extend(split_warc_records(bytes(r["content"]), r["path"]))
+                try:
+                    rows.extend(split_warc_records(bytes(r["content"]), r["path"]))
+                except ValueError:
+                    rows.append(dict.fromkeys(cols) | {"warc_path": r["path"]})
             out = pd.DataFrame(rows, columns=cols)
             out["http_status"] = out["http_status"].astype("Int32")
             yield out

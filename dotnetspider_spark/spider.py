@@ -131,14 +131,6 @@ class Spider:
         )
         return self
 
-    def use_bloom(self, expected_per_bucket: int = 1_000_000, n_buckets: int = 32) -> "Spider":
-        self.config = replace(
-            self.config, use_bloom=True,
-            bloom_expected_per_bucket=expected_per_bucket,
-            bloom_n_buckets=n_buckets,
-        )
-        return self
-
     # ---------------------------------------------------------- sources
 
     def set_corpus(self, corpus: DataFrame) -> "Spider":

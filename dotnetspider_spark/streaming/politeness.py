@@ -21,8 +21,7 @@ thread between requests; here the throttle is the distributed twin).
   first sighting is within the watermark horizon. This is the HOT-PATH
   filter only; the durable, exact seen-set remains the batch anti-join
   against the seen table (crawler/loop.py) — the stream layer exists to
-  keep obvious dupes out of the fetch queue without unbounded state,
-  the same prune-not-drop layering as the bloom/exact hybrid.
+  keep obvious dupes out of the fetch queue without unbounded state.
 
 Both run identically under ``readStream`` (state/watermark active) and
 are pinned by tests through a real file-source stream with per-file

@@ -18,8 +18,8 @@ Pipeline (the engine's iteration, crawler/loop.py):
        (corpus side read in place: zero html-row exchange)
     -> fused link-parse/canonicalize pandas UDF (one Arrow crossing)
     -> child identity -> child dedup (min_by) -> anti-join vs the
-       iteration's seen delta (broadcast; the full 10^10 seen set is
-       the bloom prune path's job)
+       iteration's seen delta (broadcast; the check against the full
+       seen set is the crawl loop's exact anti-join, not timed here)
 """
 
 from __future__ import annotations

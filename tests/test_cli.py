@@ -84,6 +84,7 @@ def test_config_sets_only_what_the_file_sets(spark):
             "per_host_limit": 3,
             "max_iterations": "7",  # a quoted number is still coerced
             "compact_every": 1,  # not a CLI key: ignored
+            "use_bloom": True,  # a retired key: old config files still load
         },
     ).config
     assert cfg == CrawlConfig(dfs=False, per_host_limit=3, max_iterations=7)

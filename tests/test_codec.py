@@ -330,29 +330,54 @@ def test_exif_roundtrip_and_orientation_transforms():
         apply_orientation(px, 9)
 
 
-@pytest.mark.parametrize("codec", ["png", "jpeg"])
+def _exif_jpeg() -> bytes:
+    """An ``encode_jpeg`` stream with a ``build_exif`` APP1 segment
+    spliced in right after SOI."""
+    import struct
+
+    from dotnetspider_spark.codec.jpeg import build_exif, encode_jpeg
+
+    jpg = encode_jpeg(_smooth((16, 16, 3)), 85)
+    exif = build_exif(6, "2024:03:04 05:06:07", "acme", "cam-1")
+    return jpg[:2] + b"\xff\xe1" + struct.pack(">H", len(exif) + 2) + exif + jpg[2:]
+
+
+@pytest.mark.parametrize("codec", ["png", "jpeg", "exif", "dqt"])
 def test_decoder_fuzz_fails_closed(codec):
-    """Seeded corruption fuzz: whatever bytes arrive, a decoder may only
-    succeed or raise ValueError/NotImplementedError — any other
-    exception would escape the validate UDFs' fail-closed catch and
-    kill the executor task (the round-5 review found a KeyError in the
-    JPEG decoder this way, and a truncated PNG leaked zlib.error)."""
-    from dotnetspider_spark.codec.jpeg import decode_jpeg, encode_jpeg
+    """Seeded corruption fuzz: whatever bytes arrive, a decoder (or a
+    JPEG header reader) may only succeed or raise
+    ValueError/NotImplementedError — any other exception would escape
+    the validate UDFs' fail-closed catch and kill the executor task (the
+    round-5 review found a KeyError in the JPEG decoder this way, and a
+    truncated PNG leaked zlib.error)."""
+    from dotnetspider_spark.codec.jpeg import (
+        decode_jpeg, encode_jpeg, read_dqt, read_exif,
+    )
+
+    def ok(out):
+        return out.dtype == np.uint8 and out.ndim == 3
 
     if codec == "png":
         decode, base = decode_png, bytearray(encode_png(_smooth((16, 16, 3))))
-    else:
+    elif codec == "jpeg":
         decode = decode_jpeg
         base = bytearray(encode_jpeg(_smooth((16, 16, 3)), 85,
                                      restart_interval=2))
+    else:
+        decode = read_exif if codec == "exif" else read_dqt
+        base = bytearray(_exif_jpeg())
+        assert decode(bytes(base))  # the unmutated stream parses
+
+        def ok(out):
+            return isinstance(out, dict)
+
     rng = np.random.default_rng(1234)
     for trial in range(300):
         data = bytearray(base)
         for _ in range(rng.integers(1, 4)):
             data[rng.integers(2, len(data))] = rng.integers(0, 256)
         try:
-            out = decode(bytes(data))
-            assert out.dtype == np.uint8 and out.ndim == 3
+            assert ok(decode(bytes(data)))
         except (ValueError, NotImplementedError):
             pass  # the two documented fail-closed signals
     # truncation sweep at every 37th prefix length

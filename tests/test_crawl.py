@@ -92,26 +92,6 @@ def test_batched_crawl_matches_reference_sets(spark, small_corpus):
     assert sum(m["n_ok"] for m in res.metrics) == len(fetched)
 
 
-def test_bloom_crawl_matches_exact_crawl(spark, small_corpus):
-    """use_bloom=True routes dedup through the bloom hybrid; observable
-    crawl output must be identical to the exact path (SURVEY §7.4)."""
-    res = crawl(
-        spark,
-        small_corpus,
-        gen_seeds(spark, SMALL, k=5),
-        CrawlConfig(
-            dfs=True, max_depth=3, per_host_limit=8,
-            use_bloom=True, bloom_expected_per_bucket=10_000, bloom_n_buckets=8,
-        ),
-        robots=gen_robots(spark, SMALL),
-    )
-    pres = pycrawl(
-        SMALL, [Request(**r) for r in seed_rows(SMALL, 5)], dfs=True, max_depth=3
-    )
-    assert {r.url for r in res.fetched.select("url").collect()} == set(pres.fetch_order)
-    assert {r.identity for r in res.seen.collect()} == pres.seen
-
-
 def test_kill_and_resume_reaches_identical_state(spark, small_corpus, tmp_path_factory):
     ck = str(tmp_path_factory.mktemp("ckpt"))
     shutil.rmtree(ck, ignore_errors=True)
@@ -161,13 +141,13 @@ def test_delay_derived_politeness_budget(spark, small_corpus):
     assert fetched  # crawl actually ran
 
 
-def test_t2_closure_crawl_bloom_matches_oracle(spark):
-    """Larger-corpus crawl to closure (no depth cap) through the bloom
-    path: exact fetched-URL-set + seen-set equality vs the oracle, and
-    NO per-iteration wall blow-up (regression: Spark 4 localCheckpoint
-    carries pre-checkpoint stats onto the truncated plan; size estimates
-    compounded ~3x per iteration into million-digit BigIntegers until
-    the driver stalled — state now lives in parquet snapshot tables).
+def test_t2_closure_crawl_matches_oracle(spark):
+    """Larger-corpus crawl to closure (no depth cap): exact fetched-URL
+    set + seen-set equality vs the oracle, and NO per-iteration wall
+    blow-up (regression: Spark 4 localCheckpoint carries pre-checkpoint
+    stats onto the truncated plan; size estimates compounded ~3x per
+    iteration into million-digit BigIntegers until the driver stalled —
+    state now lives in parquet snapshot tables).
 
     NB: with a max_depth cap, batched and sequential crawls legitimately
     trim different subtrees (first-discovery depth is order-dependent),
@@ -185,7 +165,6 @@ def test_t2_closure_crawl_bloom_matches_oracle(spark):
         gen_seeds(spark, cfg, k=10),
         CrawlConfig(
             dfs=True, max_depth=None, per_host_limit=32, max_iterations=80,
-            use_bloom=True, bloom_expected_per_bucket=20_000, bloom_n_buckets=8,
         ),
         robots=gen_robots(spark, cfg),
     )
@@ -630,11 +609,6 @@ def test_robots_wildcard_rules_match_like_googlebot(spark):
         for r in _robots_flag(batch, rules).collect()
     }
     assert got == cases
-
-
-def test_bloom_and_bucketed_seen_mutually_exclusive():
-    with pytest.raises(ValueError, match="mutually exclusive"):
-        CrawlConfig(use_bloom=True, bucketed_seen=True)
 
 
 def test_semicolon_url_same_identity_via_both_parse_paths(spark):

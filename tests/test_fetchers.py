@@ -483,7 +483,7 @@ def test_media_body_is_not_charset_decoded(spark):
 def test_download_files_without_content_type_fails_loudly(spark):
     """download_files=True with a fetcher that cannot emit content_type
     previously completed with downloads=None and no diagnostic (r3
-    review #8) — same loudness contract as use_bloom+bucketed_seen."""
+    review #8)."""
     from dotnetspider_spark.crawler.loop import CrawlConfig, crawl
 
     corpus = spark.createDataFrame(
@@ -558,6 +558,34 @@ def test_read_warc_dataframe(spark, tmp_path):
     assert ("http://h1/p/2", 200, "<html>1-2</html>") in got
     assert ("http://h0/p/0", 500, "<html>0-0</html>") in got
     assert all(r.record_content_type == "application/http;msgtype=response" for r in rows)
+
+
+def test_read_warc_corrupt_gzip_yields_path_only_row(spark, tmp_path):
+    """A truncated .warc.gz fails closed: the good archive's records
+    still come back, and the bad one yields one row that holds only its
+    path (every other column NULL) instead of failing the job."""
+    import gzip
+
+    from dotnetspider_spark.sources.warc import build_warc, read_warc
+
+    gz = gzip.compress(
+        build_warc(
+            [
+                {"url": f"http://h.example/p/{j}", "date": "2024-01-01T00:00:00Z",
+                 "status": 200, "content_type": "text/html",
+                 "body": f"<html>{j}</html>".encode()}
+                for j in range(3)
+            ]
+        )
+    )
+    (tmp_path / "good.warc.gz").write_bytes(gz)
+    (tmp_path / "bad.warc.gz").write_bytes(gz[: len(gz) // 2])
+    rows = read_warc(spark, f"{tmp_path}/*.warc.gz").collect()
+    good = [r for r in rows if r.warc_path.endswith("good.warc.gz")]
+    bad = [r for r in rows if r.warc_path.endswith("bad.warc.gz")]
+    assert sorted(r.url for r in good) == [f"http://h.example/p/{j}" for j in range(3)]
+    assert len(bad) == 1
+    assert all(v is None for k, v in bad[0].asDict().items() if k != "warc_path")
 
 
 def test_write_warc_roundtrip_and_determinism(spark, tmp_path):

@@ -1,7 +1,7 @@
 """Property-based invariants (hypothesis) for the pure-Python cores of
-the seen-set filters and URL canonicalization — the components whose
-bugs corrupt a crawl silently (a false negative re-crawls; a wrong
-canonical form splits one URL into two frontier rows).
+URL canonicalization and the crawl's parsers — the components whose
+bugs corrupt a crawl silently (a wrong canonical form splits one URL
+into two frontier rows).
 
 These run WITHOUT Spark (numpy/stdlib only), so hundreds of generated
 cases cost milliseconds.
@@ -9,52 +9,8 @@ cases cost milliseconds.
 
 from __future__ import annotations
 
-import numpy as np
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
-
-from dotnetspider_spark.operators.cuckoo import CuckooFilter
-
-# unique=True: >8 copies of one value share a fingerprint and both its
-# buckets (2 buckets x 4 slots), so the kick loop can NEVER place a 9th
-# copy — the all-inserted assertion below is only a contract for
-# distinct hashes (the seen-set use case dedups upstream anyway)
-hashes = st.lists(
-    st.integers(min_value=-(2**63), max_value=2**63 - 1),
-    min_size=1,
-    max_size=200,
-    unique=True,
-)
-
-
-@settings(max_examples=60, deadline=None)
-@given(hashes)
-def test_cuckoo_no_false_negatives(hs):
-    """Every successfully inserted hash is found (the contract that
-    makes the prune-not-drop hybrid exact)."""
-    f = CuckooFilter(n_fp_buckets=1024)
-    arr = np.array(hs, dtype=np.int64)
-    inserted = f.add_many(arr)
-    assert inserted == len(arr)  # sized generously: all must fit
-    assert bool(f.contains(arr).all())
-
-
-@settings(max_examples=60, deadline=None)
-@given(hashes, hashes)
-def test_cuckoo_delete_removes_only_deleted(hs, to_delete):
-    """After deleting a disjoint set, originals still test positive;
-    deleted-and-reinserted keys test positive again (deletability is
-    WHY the north rule asks for cuckoo as the fallback)."""
-    keep = np.array(sorted(set(hs) - set(to_delete)), dtype=np.int64)
-    dele = np.array(sorted(set(to_delete)), dtype=np.int64)
-    f = CuckooFilter(n_fp_buckets=2048)
-    if len(keep):
-        f.add_many(keep)
-    if len(dele):
-        f.add_many(dele)
-        f.delete(dele)
-    if len(keep):
-        assert bool(f.contains(keep).all())
 
 
 @settings(max_examples=150, deadline=None)

@@ -1,25 +1,13 @@
-"""Partitioned bloom/cuckoo seen-set tests (SURVEY §7.4 hybrid contract)."""
+"""Partitioned bloom-filter membership tests."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
 
-from dotnetspider_spark.operators.bloom import (
-    BloomParams,
-    build_blooms,
-    dedup_push_bloom,
-    probe_blooms,
-)
-from dotnetspider_spark.operators.cuckoo import (
-    CuckooFilter,
-    CuckooParams,
-    build_cuckoo,
-    probe_cuckoo,
-)
+from dotnetspider_spark.operators.bloom import BloomParams, build_blooms, probe_blooms
 
 P = BloomParams(expected_per_bucket=5_000, fpp=0.01, n_buckets=8)
-CP = CuckooParams(expected_per_bucket=5_000, n_buckets=8)
 
 
 def _ids(spark, lo, hi, extra_cols=False):
@@ -46,74 +34,3 @@ def test_bloom_no_false_negatives_and_bounded_fpp(spark, seen):
     fp = probed.filter((F.col("seq") >= 20_000) & F.col("maybe_seen")).count()
     assert fp / 10_000 < 0.05  # fpp 0.01 nominal, wide margin
     probed.unpersist()
-
-
-def test_bloom_hybrid_dedup_is_exact(spark, seen):
-    blooms = build_blooms(seen, P)
-    cand = _ids(spark, 10_000, 30_000)
-    out = dedup_push_bloom(cand, seen, blooms, P)
-    got = {r.seq for r in out.select("seq").collect()}
-    assert got == set(range(20_000, 30_000))  # exactly the unseen ids
-
-
-def test_bloom_incremental_build_matches_full(spark, seen):
-    full = build_blooms(seen, P)
-    first = seen.filter(F.col("seq") < 15_000)
-    delta = seen.filter(F.col("seq") >= 15_000)
-    inc = build_blooms(delta, P, existing=build_blooms(first, P))
-    cand = _ids(spark, 0, 20_000)
-    a = probe_blooms(cand, full, P).filter(F.col("maybe_seen")).count()
-    b = probe_blooms(cand, inc, P).filter(F.col("maybe_seen")).count()
-    assert a == b == 20_000  # every seen id flagged by both
-
-
-def test_bloom_incremental_keeps_untouched_buckets(spark, seen):
-    """A tiny delta must not wipe buckets it doesn't touch (regression:
-    incremental build forgot absent buckets -> seen URLs re-admitted ->
-    non-terminating crawl)."""
-    base = build_blooms(seen, P)
-    one = seen.limit(1)  # hits at most one bucket
-    inc = build_blooms(one, P, existing=base)
-    assert inc.count() == base.count()
-    # every originally-seen id still flagged after the tiny delta
-    probed = probe_blooms(_ids(spark, 0, 20_000), inc, P)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_incremental_keeps_untouched_buckets(spark, seen):
-    base = build_cuckoo(seen, CP)
-    inc = build_cuckoo(seen.limit(1), CP, existing=base)
-    assert inc.count() == base.count()
-    probed = probe_cuckoo(_ids(spark, 0, 20_000), inc, CP)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_roundtrip_and_delete_incore():
-    import numpy as np
-
-    cf = CuckooFilter(1 << 12)
-    hs = np.arange(1, 10_001, dtype=np.int64) * 2654435761
-    assert cf.add_many(hs) == 10_000
-    assert cf.contains(hs).all()
-    removed = cf.delete(hs[:500])
-    assert removed.all()
-    assert not cf.contains(hs[:500]).all()  # most now absent (fp collisions aside)
-    assert cf.contains(hs[500:]).all()
-
-
-def test_cuckoo_partitioned_probe_and_delete(spark, seen):
-    filters = build_cuckoo(seen, CP).cache()
-    cand = _ids(spark, 10_000, 30_000)
-    probed = probe_cuckoo(cand, filters, CP).cache()
-    assert probed.filter((F.col("seq") < 20_000) & ~F.col("maybe_seen")).count() == 0
-    fp = probed.filter((F.col("seq") >= 20_000) & F.col("maybe_seen")).count()
-    assert fp / 10_000 < 0.01  # 16-bit fingerprints: ~1e-4 nominal
-    # delete the first 5k, rebuild, verify count drop
-    dels = seen.filter(F.col("seq") < 5_000)
-    empty = seen.filter(F.lit(False))
-    f2 = build_cuckoo(empty, CP, existing=filters, deletes=dels)
-    n0 = filters.agg(F.sum("n_items")).first()[0]
-    n1 = f2.agg(F.sum("n_items")).first()[0]
-    assert n0 == 20_000 and n1 == 15_000
-    probed.unpersist()
-    filters.unpersist()

@@ -31,11 +31,10 @@ Methodology notes (what made the number honest and scalable):
   (Scaling shuffle partitions with cores makes 2M-row tasks so small the
   single-threaded DAG scheduler becomes the bottleneck and scaling goes
   NEGATIVE — measured.)
-- the seen-side anti-join uses a broadcast hint: per-iteration dedup at
-  10^10 scale runs against the bloom filters (operators/bloom.py) plus
-  an exact check against the recent seen DELTA, which is
-  broadcast-sized; shipping the full seen table through a shuffle every
-  iteration is precisely the design this engine avoids.
+- the seen-side anti-join uses a broadcast hint: the job checks
+  children against the recent seen DELTA, which is broadcast-sized.
+  The crawl loop's exact check against the full seen set (a plain or
+  bucketed anti-join, crawler/loop.py) is not part of this job.
 - Arrow batch size is raised for the parse stage (html rows are small;
   the 2048 default is tuned for image payloads).
 - fresh JVM per level, one warmup pass, best of REPS timed reps, nothing
