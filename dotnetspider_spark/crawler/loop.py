@@ -10,15 +10,23 @@ The crawl's tables live as DELTA parquet snapshots under the checkpoint
 root, and the state holds their live part lists: the frontier is the
 union of additive parts (``frontier/init``/``frontier/compact=N`` plus
 ``fresh/iter=N`` appends) anti-joined against consumed batch identities
-(``consumed/iter=N``), compacted every ``compact_every`` iterations;
-``seen`` is the identity column of its parts (plus a bucketed compact
-table under ``bucketed_seen``), and the dedup phase checks candidates
-against it with one exact anti-join (``operators.frontier.dedup_push``);
-``fetched/iter=N``, ``errors/iter=N`` (the failing.log analog,
-Spider.cs:993-994) and ``downloads/iter=N`` are append-only fact logs.
+(``consumed/iter=N``, which also carries each batch row's robots verdict
+``__allowed``), compacted every ``compact_every`` iterations; ``seen`` is
+the identity column of its parts (plus a bucketed compact table under
+``bucketed_seen``), and the dedup phase checks candidates against it
+with one exact anti-join (``operators.frontier.dedup_push``).
+``fetched/iter=N`` is the iteration's fact log: every consumed row, with
+the fetch ``status`` (NULL for a robots-denied row) and a ``reason`` that
+is NULL on a success, ``retry`` on a row that comes back as a retry, and
+the failing.log reason (Spider.cs:993-994) on an error.
+:meth:`CrawlState.fetched` and :meth:`CrawlState.errors` are its success
+and error views (``errors/iter=N`` dirs of older checkpoints are still
+read); the iteration's metrics row is observed on the same write.
+``downloads/iter=N`` is the other append-only log.
 Per-iteration I/O is therefore O(batch + new links), not O(frontier) —
-the property that matters at the 10^10-row design point. The frontier size is tracked arithmetically (n - consumed
-+ fresh), so no count scan of the frontier exists at all. Every state
+the property that matters at the 10^10-row design point. The frontier
+size is tracked arithmetically (n - consumed + fresh), so no count scan
+of the frontier exists at all. Every state
 dir is written by :func:`_write_state`, counted (where a count is used)
 from the written files' parquet footers by :func:`_rows` (no count job),
 and re-read under an explicit schema (no schema-inference job). The
@@ -32,17 +40,21 @@ per-partition lineage; Iceberg in production — the sandbox ships no
 Iceberg runtime jar, so the delta layout emulates its
 manifest/snapshot/delete-file model over plain parquet).
 
-Step. :func:`crawl` validates its arguments, builds or restores the
-state, then repeats ``state, row = _step(ctx, state, it)`` until the
+Step. :func:`crawl` validates its arguments, pins its static inputs
+(the per-host robots rule table and ``host_delays``, persisted for the
+call and released on return: the first iteration materializes them and
+every later one reads them from memory instead of re-running their
+lineage), builds or restores the state, then repeats ``state, row = _step(ctx, state, it)`` until the
 frontier is empty or ``max_iterations`` is reached. Each row (the
 iteration's scalar metrics) goes to ``CrawlRunResult.metrics`` and to
 this module's logger at INFO.
 
 Phases. ``_step`` runs one ``_phase_*`` function per stage, in order:
 
-    backoff     last iteration's throttle statuses -> budget multipliers
-    rank        frontier --politeness, DFS/BFS--> batch (= consumed delta)
-    robots      batch -> allowed / denied (denied rows consumed + logged)
+    backoff     last iteration's fact log statuses -> budget multipliers
+    rank        frontier --politeness, DFS/BFS, robots verdict--> batch
+                (= consumed delta)
+    robots      batch -> allowed / denied (a filter on the stored verdict)
     fetch       allowed --fetcher (corpus join or HTTP)--> outcomes
     redirects   final URLs of redirected fetches -> seen
     media       file-type successes -> downloads (never parsed)
@@ -50,9 +62,7 @@ Phases. ``_step`` runs one ``_phase_*`` function per stage, in order:
     retries     transient / processor failures -> retried+1 (NEW identity)
     discover    successes --extract links, canonicalize, filters--> children
     dedup       (children ∪ retries) --exact anti-join vs seen--> fresh
-    write       fresh + fetched deltas
-    errors      errors delta
-    metrics     per-host lineage (written DISTRIBUTED, never collected)
+    write       fresh delta, then the fact log (metrics row observed)
     compact     frontier/seen compaction every ``compact_every``
     checkpoint  manifest
 
@@ -213,6 +223,7 @@ ERRORS_SCHEMA = (
     "url string, host string, identity string, depth int, retried int, "
     "status int, reason string, iter int"
 )
+_ERROR_COLS = [c.split()[0] for c in ERRORS_SCHEMA.split(", ")]
 
 
 @dataclass
@@ -313,14 +324,16 @@ def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
         # min_by(struct, seq) over an all-NULL key returns a NULL struct,
         # silently losing those seeds. Assign them the same deterministic
         # url-ranked seq as the no-seq path, offset past any explicit seq
-        # (2^40 — explicit seqs keep precedence; seq is a long)
-        with_seq = df.filter(F.col("seq").isNotNull())
-        null_seq = df.filter(F.col("seq").isNull()).drop("seq")
-        df = with_seq.unionByName(
-            _dense_seq_by_url(null_seq).withColumn(
-                "seq", (F.col("seq") + F.lit(1 << 40)).cast("long")
+        # (2^40 — explicit seqs keep precedence; seq is a long). When
+        # every seed has one, the ranking's sampling, checkpoint and
+        # collect jobs would only rank an empty set: skip them
+        null_seq = df.filter(F.col("seq").isNull())
+        if not null_seq.isEmpty():
+            df = df.filter(F.col("seq").isNotNull()).unionByName(
+                _dense_seq_by_url(null_seq.drop("seq")).withColumn(
+                    "seq", (F.col("seq") + F.lit(1 << 40)).cast("long")
+                )
             )
-        )
     df = df.withColumn("host", url_host(F.col("url"))).withColumn(
         "identity", _identity()
     )
@@ -335,27 +348,37 @@ def _status_ok():
     return (F.col("status") >= 200) & (F.col("status") < 300)
 
 
-def _robots_flag(batch: DataFrame, robots: DataFrame | None) -> DataFrame:
-    """Annotate each row with boolean ``__allowed``. Rules are tiny config
-    (host, path_prefix, allow[, path_re]) — aggregated per host and
-    BROADCAST equi-joined, then the most specific matching rule is
-    picked by a JVM-side array fold: zero exchanges, zero windows, stays
-    inside whole-stage codegen (the previous per-identity window added
-    one shuffle per crawl iteration). Plain rules match by path prefix;
-    wildcard rules (RFC 9309 ``*``/``$``) carry their anchored regex in
-    ``path_re`` and match via ``rlike`` — specificity is the ORIGINAL
-    pattern length in both cases and ties break to allow, same as
-    Google's matcher. The match subject is path?query (Googlebot
-    matches rules against the query string too — a plain prefix rule's
-    verdict is unchanged by the appended suffix). A rules table without
-    the ``path_re`` column (hand-built configs, older fixtures) is
-    treated as all-prefix. No rule = allow. Denied rows are kept
-    (flagged) so the loop can consume them AND log them to the errors
-    table (failing.log analog) without recomputing the gate."""
-    if robots is None:
-        return batch.withColumn("__allowed", F.lit(True))
+_RULE_T = "struct<path_prefix:string,allow:boolean,path_re:string>"
+
+
+def _robot_rules(robots: DataFrame) -> DataFrame:
+    """The per-host rule table ``(host, __rules)`` that :func:`_robots_flag`
+    broadcasts, from a rules table (host, path_prefix, allow[, path_re]).
+    Rules are tiny config; ``crawl()`` pins this table once per call. A
+    rules table without the ``path_re`` column (hand-built configs, older
+    fixtures) is treated as all-prefix."""
     if "path_re" not in robots.columns:
         robots = robots.withColumn("path_re", F.lit(None).cast("string"))
+    return robots.groupBy("host").agg(
+        F.collect_list(F.struct("path_prefix", "allow", "path_re")).alias("__rules")
+    )
+
+
+def _robots_flag(batch: DataFrame, rules: DataFrame) -> DataFrame:
+    """Annotate each row with boolean ``__allowed`` against the per-host
+    rule table ``rules`` (:func:`_robot_rules`): BROADCAST equi-joined,
+    then the most specific matching rule is picked by a JVM-side array
+    fold: zero exchanges, zero windows, stays inside whole-stage codegen
+    (the previous per-identity window added one shuffle per crawl
+    iteration). Plain rules match by path prefix; wildcard rules (RFC
+    9309 ``*``/``$``) carry their anchored regex in ``path_re`` and match
+    via ``rlike`` — specificity is the ORIGINAL pattern length in both
+    cases and ties break to allow, same as Google's matcher. The match
+    subject is path?query (Googlebot matches rules against the query
+    string too — a plain prefix rule's verdict is unchanged by the
+    appended suffix). No rule = allow. Denied rows are kept (flagged):
+    the rank phase stores the verdict with the batch, so the loop
+    consumes them AND logs them without recomputing the gate."""
     # try_parse_url: an unparseable frontier URL (space, bad %-escape)
     # must not abort the iteration — it degrades to subject "/" and the
     # host's rules decide (no rules = allow), instead of killing the job
@@ -364,24 +387,15 @@ def _robots_flag(batch: DataFrame, robots: DataFrame | None) -> DataFrame:
     subject = F.when(
         query.isNull() | (query == F.lit("")), path
     ).otherwise(F.concat(path, F.lit("?"), query))
-    by_host = robots.groupBy("host").agg(
-        F.collect_list(F.struct("path_prefix", "allow", "path_re")).alias(
-            "__rules"
-        )
-    )
     joined = batch.withColumn("__path", subject).join(
-        F.broadcast(by_host), "host", "left"
+        F.broadcast(rules), "host", "left"
     )
     p = F.col("__path")
-    _arr_t = "array<struct<path_prefix:string,allow:boolean,path_re:string>>"
     matched = F.filter(
-        F.coalesce(F.col("__rules"), F.array().cast(_arr_t)),
+        F.coalesce(F.col("__rules"), F.array().cast(f"array<{_RULE_T}>")),
         lambda r: F.when(
             r["path_re"].isNull(), p.startswith(r["path_prefix"])
         ).otherwise(F.rlike(p, r["path_re"])),
-    )
-    none_t = F.lit(None).cast(
-        "struct<path_prefix:string,allow:boolean,path_re:string>"
     )
     # longest prefix wins; equal lengths tie-break to ALLOW (the Google
     # robots.txt spec's rule for equally-specific rules) — collect_list
@@ -389,7 +403,7 @@ def _robots_flag(batch: DataFrame, robots: DataFrame | None) -> DataFrame:
     # allow/deny pair of identical length could flip between runs
     best = F.aggregate(
         matched,
-        none_t,
+        F.lit(None).cast(_RULE_T),
         lambda acc, r: F.when(
             acc.isNull()
             | (F.length(r["path_prefix"]) > F.length(acc["path_prefix"]))
@@ -533,8 +547,10 @@ class Checkpointer:
     """Manifest writer over the parquet delta-snapshot layout.
 
     The crawl loop writes the state tables (fresh/consumed/seen_extra/
-    fetched/errors/metrics as ``<root>/<table>/iter=N`` parquet dirs,
-    frontier compactions as ``frontier/compact=N``); this class adds one
+    downloads and the fetched fact log as ``<root>/<table>/iter=N``
+    parquet dirs, frontier compactions as ``frontier/compact=N``; older
+    checkpoints also hold ``errors/iter=N``, which their manifests list,
+    and ``metrics/iter=N``, which nothing reads); this class adds one
     atomically-renamed ``manifests/iter=N.json`` per COMPLETE iteration
     holding the live state-part lists (written after that iteration's
     state dirs, so a crash mid-iteration resumes from the previous
@@ -580,6 +596,11 @@ class Checkpointer:
 _FETCHED_SCHEMA = (
     FRONTIER_SCHEMA + ", status int, rank int, target_url string, iter int"
 )
+#: the fact log ``fetched/iter=N``: every consumed row (module docstring);
+#: a ``fetched`` dir of an older checkpoint holds successes only and
+#: reads with ``reason`` NULL
+_LOG_SCHEMA = _FETCHED_SCHEMA + ", reason string"
+_RETRY = "retry"  # the log reason of a row that comes back as a retry
 
 
 def _read(spark: SparkSession, schema: str | StructType, paths: list[str]) -> DataFrame:
@@ -635,7 +656,8 @@ class CrawlState:
     consumed_parts: list[str]
     seen_parts: list[str]
     fetched_paths: list[str]
-    #: absent from manifests written before these logs existed
+    #: absent from manifests written before these logs existed; no
+    #: longer appended to (errors live in the fetched fact log)
     errors_paths: list[str] = field(default_factory=list)
     downloads_paths: list[str] = field(default_factory=list)
     n_frontier: int
@@ -666,8 +688,23 @@ class CrawlState:
         return fr
 
     def fetched(self, spark: SparkSession) -> DataFrame:
-        """Every fetched row of the fact log's listed iterations."""
-        return _read(spark, _FETCHED_SCHEMA, self.fetched_paths)
+        """The fact log's success view: every fetched 2xx row (media
+        included) of its listed iterations, in ``_FETCHED_SCHEMA``."""
+        log = _read(spark, _LOG_SCHEMA, self.fetched_paths)
+        return log.filter(F.col("reason").isNull() & _status_ok()).drop("reason")
+
+    def errors(self, spark: SparkSession) -> DataFrame:
+        """The fact log's error view, the failing.log analog
+        (``ERRORS_SCHEMA``), plus the ``errors`` dirs that checkpoints
+        written before the single fact log listed."""
+        errs = (
+            _read(spark, _LOG_SCHEMA, self.fetched_paths)
+            .filter(F.col("reason") != _RETRY)  # NULL (success) drops too
+            .select(*_ERROR_COLS)
+        )
+        if self.errors_paths:
+            errs = _read(spark, ERRORS_SCHEMA, self.errors_paths).unionByName(errs)
+        return errs
 
     def seen(self, spark: SparkSession) -> DataFrame:
         """Every seen identity (1 column). The bucketed compact is read by
@@ -689,7 +726,9 @@ class _Ctx:
     root: str
     ckpt: Checkpointer
     fetcher: object
+    #: the pinned per-host robots rule table (:func:`_robot_rules`)
     robots: DataFrame | None
+    #: the pinned (host, crawl_delay_ms) table
     host_delays: DataFrame | None
     processor: object
 
@@ -746,7 +785,12 @@ def _initial_state(ctx: _Ctx, seeds: DataFrame, resume: bool) -> tuple[CrawlStat
         return state, m["last_iter"] + 1
     ctx.ckpt.clear()
     init = f"{ctx.root}/frontier/init"
-    _write_state(seeds_to_frontier(seeds), init)
+    # seeds_to_frontier may scan the seeds more than once
+    seeds = seeds.persist()
+    try:
+        _write_state(seeds_to_frontier(seeds), init)
+    finally:
+        seeds.unpersist()
     state = CrawlState(
         frontier_parts=[init], consumed_parts=[], seen_parts=[init], fetched_paths=[],
         n_frontier=_rows(init),
@@ -764,11 +808,15 @@ def _phase_backoff(ctx: _Ctx, state: CrawlState) -> DataFrame | None:
     PREVIOUS iteration's fetch statuses (column-pruned host+status
     reads); None when off. The one-iteration window keeps the control
     loop self-correcting (see ``CrawlConfig.adaptive_backoff``)."""
-    # throttle statuses (429/503) are NOT successes, so the observation
-    # log is fetched (2xx/media) UNION errors: the last part of each
-    logs = state.fetched_paths[-1:] + state.errors_paths[-1:]
+    # the last fact log holds every status the last iteration saw,
+    # 503s that come back as retries included
+    logs = state.fetched_paths[-1:]
     if not ctx.cfg.adaptive_backoff or not logs:
         return None
+    # an older checkpoint's log held successes only, with that
+    # iteration's failures in a separate errors dir of the same name
+    name = os.path.basename(logs[0])
+    logs += [p for p in state.errors_paths[-1:] if os.path.basename(p) == name]
     # robots-denied rows log status NULL and were never SENT — counting
     # them dilutes the throttle rate and can suppress a deserved cooldown
     sent = _read(ctx.spark, "host string, status int", logs).filter(
@@ -794,10 +842,11 @@ def _with_budget(ctx: _Ctx, frontier: DataFrame, backoff) -> DataFrame:
         )
         if cfg.per_host_limit is not None:
             budget = F.least(budget, F.lit(cfg.per_host_limit))
-        delays = F.broadcast(ctx.host_delays.select("host", "crawl_delay_ms"))
-        frontier = frontier.join(delays, "host", "left").withColumn(
-            "__budget", budget
-        ).drop("crawl_delay_ms")
+        frontier = (
+            frontier.join(F.broadcast(ctx.host_delays), "host", "left")
+            .withColumn("__budget", budget)
+            .drop("crawl_delay_ms")
+        )
     elif backoff is not None:
         frontier = frontier.withColumn("__budget", F.lit(cfg.per_host_limit))
     else:
@@ -808,11 +857,14 @@ def _with_budget(ctx: _Ctx, frontier: DataFrame, backoff) -> DataFrame:
 def _phase_rank(
     ctx: _Ctx, state: CrawlState, it: int, frontier: DataFrame, backoff
 ) -> tuple[DataFrame, int]:
-    """Select this iteration's batch and persist it as the consumed delta
-    in ONE job: the parquet write is the checkpoint (the batch is re-read
-    from it, truncating the rank plan) and its identity column IS the
-    consumed anti-join part. O(batch) I/O; the frontier is NOT rewritten.
-    Returns the batch and its size."""
+    """Select this iteration's batch, flag each row's robots verdict
+    (``__allowed``) and persist it as the consumed delta in ONE job: the
+    parquet write is the checkpoint (the batch is re-read from it,
+    truncating the rank plan), its identity column IS the consumed
+    anti-join part, and the stored verdict is what the robots phase and
+    the fact log read, so the rules are joined once per iteration.
+    O(batch) I/O; the frontier is NOT rewritten. Returns the batch and
+    its size."""
     cfg = ctx.cfg
     if cfg.global_limit is not None:
         # exact reference poll order — ONE global window; test scale only
@@ -835,20 +887,22 @@ def _phase_rank(
             .withColumnRenamed("host_rank", "rank")
             .drop("__budget")
         )
+    if ctx.robots is not None:
+        batch = _robots_flag(batch, ctx.robots)
     path = f"{ctx.root}/consumed/iter={it}"
     _write_state(batch, path)
     state.consumed_parts.append(path)
     return _read(ctx.spark, batch.schema, [path]), _rows(path)
 
 
-def _phase_robots(ctx: _Ctx, batch: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(allowed, denied): denied rows are consumed, not fetched, and
-    logged to the errors table."""
-    flagged = _robots_flag(batch, ctx.robots)
-    return (
-        flagged.filter(F.col("__allowed")).drop("__allowed"),
-        flagged.filter(~F.col("__allowed")).drop("__allowed"),
-    )
+def _phase_robots(batch: DataFrame) -> tuple[DataFrame, DataFrame | None]:
+    """(allowed, denied or None without robots rules): a filter on the
+    verdict the rank phase stored. Denied rows are consumed, not
+    fetched, and logged as ``robots_denied``."""
+    if "__allowed" not in batch.columns:
+        return batch, None
+    ok = F.col("__allowed")
+    return batch.filter(ok).drop("__allowed"), batch.filter(~ok).drop("__allowed")
 
 
 def _phase_fetch(ctx: _Ctx, allowed: DataFrame) -> tuple[DataFrame, bool]:
@@ -930,30 +984,39 @@ def _phase_media(
 
 
 def _phase_processor(
-    ctx: _Ctx, success: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    ctx: _Ctx, fetched: DataFrame, success: DataFrame, media: DataFrame | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Page-processor hook (Spider.cs:1129-1163): (successes, successes
-    to extract links from, processor failures or None)."""
+    to extract links from, outcomes). The outcomes are the fetched rows
+    with the processed ones replaced by the processor's output, which
+    flags its failures in ``proc_error``."""
     if ctx.processor is None:
-        return success, success, None
+        return success, success, fetched
     proc = ctx.processor(success).localCheckpoint(eager=True)
+    outcomes = fetched.filter(~_status_ok())
+    if media is not None:
+        outcomes = outcomes.unionByName(media)
+    outcomes = outcomes.unionByName(proc, allowMissingColumns=True)
     success = proc.filter(~F.col("proc_error"))
     linkable = success
     if ctx.cfg.skip_targets_when_result_empty:
         # SkipTargetRequestsWhenResultIsEmpty (Spider.cs:397,1155)
         linkable = success.filter(F.col("n_results") > 0)
-    return success, linkable, proc.filter(F.col("proc_error"))
+    return success, linkable, outcomes
 
 
-def _phase_retries(
-    ctx: _Ctx, fetched: DataFrame, proc_failed: DataFrame | None, iter_base: Column
-) -> DataFrame:
+def _proc_failed(outcomes: DataFrame) -> Column:
+    """Whether an outcome row is a processor failure."""
+    if "proc_error" not in outcomes.columns:
+        return F.lit(False)
+    return F.coalesce(F.col("proc_error"), F.lit(False))
+
+
+def _phase_retries(ctx: _Ctx, outcomes: DataFrame, iter_base: Column) -> DataFrame:
     """Transient fetches (5xx) and processor failures within the retry
     budget come back with retried+1, i.e. a NEW identity."""
-    retry = F.col("retried") < ctx.cfg.cycle_retry_times
-    src = fetched.filter(F.col("status") >= 500).filter(retry)
-    if proc_failed is not None:
-        src = src.unionByName(proc_failed.filter(retry), allowMissingColumns=True)
+    failed = (F.col("status") >= 500) | _proc_failed(outcomes)
+    src = outcomes.filter(failed & (F.col("retried") < ctx.cfg.cycle_retry_times))
     return src.select(
         "url", "host", "method", "referer", "origin", "content", "headers",
         "priority", "depth",
@@ -1025,13 +1088,51 @@ def _phase_dedup(
     return dedup_push(candidates, state.seen(spark))
 
 
+def _fact_log(
+    ctx: _Ctx, it: int, outcomes: DataFrame, denied: DataFrame | None
+) -> DataFrame:
+    """Iteration ``it``'s fact log (``_LOG_SCHEMA``): every outcome row
+    with its ``reason`` — NULL on a success, ``retry`` on a row that
+    comes back as a retry, else the failing.log reason (Spider.cs:993-994:
+    missing / retries exhausted / unclassified status / processor
+    exception) — and every robots-denied row, status NULL."""
+    status, crt = F.col("status"), ctx.cfg.cycle_retry_times
+    exhausted = F.col("retried") >= crt
+    reason = (
+        F.when(
+            _proc_failed(outcomes),
+            F.when(exhausted, F.lit("processor_exception")).otherwise(F.lit(_RETRY)),
+        )
+        .when(status == 404, F.lit("missing"))
+        .when(
+            status >= 500,
+            F.when(exhausted, F.lit("retries_exhausted")).otherwise(F.lit(_RETRY)),
+        )
+        .when(~_status_ok(), F.concat(F.lit("http_"), status.cast("string")))
+    )
+    cols = [*_FRONTIER_COLS, "status", "rank", "target_url"]
+    log = outcomes.select(*cols, reason.alias("reason"))
+    if denied is not None:
+        log = log.unionByName(
+            denied.select(
+                *_FRONTIER_COLS,
+                F.lit(None).cast("int").alias("status"),
+                "rank",
+                F.lit(None).cast("string").alias("target_url"),
+                F.lit("robots_denied").alias("reason"),
+            )
+        )
+    return log.select(*cols, F.lit(it).alias("iter"), "reason")
+
+
 def _phase_write(
     ctx: _Ctx, state: CrawlState, it: int, fresh: DataFrame,
-    trap_cached: DataFrame | None, success: DataFrame, media: DataFrame | None,
-) -> int:
+    trap_cached: DataFrame | None, log: DataFrame, n_consumed: int,
+) -> tuple[int, dict]:
     """Persist the fresh delta and append it to the frontier and seen,
-    then persist the fetched delta; returns the fresh row count. The
-    write IS the materialization (one job)."""
+    then persist the fact log, observing the iteration's scalar metrics
+    on that same write. Each write IS the materialization (one job).
+    Returns the fresh row count and the scalars."""
     root = ctx.root
     path = f"{root}/fresh/iter={it}"
     _write_state(fresh, path)
@@ -1041,96 +1142,38 @@ def _phase_write(
     if n_fresh > 0:
         state.frontier_parts.append(path)
         state.seen_parts.append(path)
-    cols = [*_FRONTIER_COLS, "status", "rank", "target_url", F.lit(it).alias("iter")]
-    fetched_out = success.select(*cols)
-    if media is not None:
-        fetched_out = fetched_out.unionByName(media.select(*cols))
-    path = f"{root}/fetched/iter={it}"
-    _write_state(fetched_out, path)
-    state.fetched_paths.append(path)
-    return n_fresh
-
-
-def _phase_errors(
-    ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame,
-    denied: DataFrame, proc_failed: DataFrame | None,
-) -> None:
-    """The failing.log analog (Spider.cs:993-994): failed rows PERSISTED,
-    not just counted — missing / retries exhausted / unclassified status
-    / robots-denied / processor exception."""
-    crt = ctx.cfg.cycle_retry_times
-    reason = (
-        F.when(F.col("status") == 404, F.lit("missing"))
-        .when(
-            (F.col("status") >= 500) & (F.col("retried") >= crt),
-            F.lit("retries_exhausted"),
-        )
-        .when(
-            ~_status_ok() & (F.col("status") < 500),
-            F.concat(F.lit("http_"), F.col("status").cast("string")),
-        )
-    )
-    cols = ["url", "host", "identity", "depth", "retried"]
-    errs = (
-        fetched.withColumn("reason", reason)
-        .filter(F.col("reason").isNotNull())
-        .select(*cols, "status", "reason")
-    )
-    errs = errs.unionByName(
-        denied.select(
-            *cols,
-            F.lit(None).cast("int").alias("status"),
-            F.lit("robots_denied").alias("reason"),
-        )
-    )
-    if proc_failed is not None:
-        errs = errs.unionByName(
-            proc_failed.filter(F.col("retried") >= crt).select(
-                *cols, "status", F.lit("processor_exception").alias("reason")
-            )
-        )
-    path = f"{ctx.root}/errors/iter={it}"
-    _write_state(errs.withColumn("iter", F.lit(it)), path)
-    state.errors_paths.append(path)
-
-
-def _phase_metrics(ctx: _Ctx, it: int, fetched: DataFrame, n_consumed: int) -> dict:
-    """Per-host lineage rows written DISTRIBUTED to metrics/iter=N (north
-    rule: per-partition lineage; never collected — at 10^6+ hosts a
-    collect here is a driver bottleneck). The iteration's scalars
-    piggyback on the SAME job via observe(); n_hosts is the per-host
-    table's row count. Returns those scalars."""
-    ok = _status_ok().cast("int")
-    transient = (F.col("status") >= 500).cast("int")
-    missing = (F.col("status") == 404).cast("int")
+    status = F.col("status")
+    sent = ~F.col("reason").eqNullSafe("robots_denied")
     obs = Observation(f"crawl-iter-{it}")
-    src = fetched
     if n_consumed > 0:
         # a zero-row batch (every host parked by adaptive backoff) runs
         # the write as a zero-task job, so the Observation never fires
         # and .get ASSERTS instead of returning zeros — observe only
         # when there is something to observe
-        src = src.observe(
+        log = log.observe(
             obs,
-            F.count(F.lit(1)).alias("n_fetch"),
-            F.sum(ok).alias("n_ok"),
-            F.sum(transient).alias("n_transient"),
-            F.sum(missing).alias("n_missing"),
+            F.sum(sent.cast("int")).alias("n_fetch"),
+            F.sum(_status_ok().cast("int")).alias("n_ok"),
+            F.sum((status >= 500).cast("int")).alias("n_transient"),
+            F.sum((status == 404).cast("int")).alias("n_missing"),
+            # distinct hosts fetched (a NULL host counts as one, as in a
+            # groupBy); the set is bounded by the hosts of one batch
+            (
+                F.size(F.collect_set(F.when(sent, F.col("host"))))
+                + F.coalesce(
+                    F.max((sent & F.col("host").isNull()).cast("int")), F.lit(0)
+                )
+            ).alias("n_hosts"),
         )
-    path = f"{ctx.root}/metrics/iter={it}"
-    per_host = src.groupBy("host").agg(
-        F.count("*").alias("n_batch"),
-        F.sum(ok).alias("n_ok"),
-        F.sum(transient).alias("n_transient"),
-        F.sum(missing).alias("n_missing"),
-    ).withColumn("iter", F.lit(it))
-    _write_state(per_host, path)
-    n_hosts = _rows(path)
+    path = f"{root}/fetched/iter={it}"
+    _write_state(log, path)
+    state.fetched_paths.append(path)
     scal = obs.get if n_consumed > 0 else {}
-    n_fetch, n_ok, n_tr, n_miss = (
-        int(scal.get(k) or 0) for k in ("n_fetch", "n_ok", "n_transient", "n_missing")
+    n_fetch, n_ok, n_tr, n_miss, n_hosts = (
+        int(scal.get(k) or 0)
+        for k in ("n_fetch", "n_ok", "n_transient", "n_missing", "n_hosts")
     )
-    return {
+    return n_fresh, {
         "n_batch": n_fetch,
         "n_ok": n_ok,
         "n_transient": n_tr,
@@ -1180,22 +1223,24 @@ def _step(ctx: _Ctx, state: CrawlState, it: int) -> tuple[CrawlState, dict]:
     frontier = state.frontier(ctx.spark)
     backoff = _phase_backoff(ctx, state)
     batch, n_consumed = _phase_rank(ctx, state, it, frontier, backoff)
-    allowed, denied = _phase_robots(ctx, batch)
+    allowed, denied = _phase_robots(batch)
     fetched, redirects = _phase_fetch(ctx, allowed)
     if redirects:
         _phase_redirects(ctx, state, it, fetched)
     success, media = _phase_media(ctx, state, it, fetched)
-    success, linkable, proc_failed = _phase_processor(ctx, success)
-    retries = _phase_retries(ctx, fetched, proc_failed, iter_base)
+    success, linkable, outcomes = _phase_processor(ctx, fetched, success, media)
+    retries = _phase_retries(ctx, outcomes, iter_base)
     children, n_trap_hosts, trap_cached = _phase_discover(ctx, linkable, iter_base)
     fresh = _phase_dedup(ctx, state, children, retries)
-    n_fresh = _phase_write(ctx, state, it, fresh, trap_cached, success, media)
+    n_fresh, scalars = _phase_write(
+        ctx, state, it, fresh, trap_cached, _fact_log(ctx, it, outcomes, denied),
+        n_consumed,
+    )
     state.n_frontier += n_fresh - n_consumed
-    _phase_errors(ctx, state, it, fetched, denied, proc_failed)
     row = {
         "iter": it,
         "n_frontier": n_start,
-        **_phase_metrics(ctx, it, fetched, n_consumed),
+        **scalars,
         "n_new": n_fresh,
         "n_trap_hosts": n_trap_hosts,
         "wall_ms": int((time.monotonic() - t0) * 1000),
@@ -1270,19 +1315,34 @@ def crawl(
             )
         fetcher = CorpusFetcher(corpus)  # projects (url, status, html) only
     root = cfg.checkpoint_dir or tempfile.mkdtemp(prefix="spark-crawl-state-")
-    ctx = _Ctx(
-        spark=spark, cfg=cfg, root=root, ckpt=Checkpointer(spark, root),
-        fetcher=fetcher, robots=robots, host_delays=host_delays,
-        processor=processor,
-    )
-    state, start_iter = _initial_state(ctx, seeds, resume)
-    metrics: list[dict] = []
-    it = start_iter
-    while it < cfg.max_iterations and state.n_frontier > 0:
-        state, row = _step(ctx, state, it)
-        _log.info("crawl %s", row)
-        metrics.append(row)
-        it += 1
+    # the static inputs, persisted for this call: the first iteration
+    # materializes them and every later one reads them from memory instead
+    # of re-running their lineage (a Python-RDD scan of a createDataFrame
+    # list, a mapInPandas robots parse). Both are broadcast sides, read
+    # whole on every use, so each is kept as one partition (one task)
+    rules = delays = None
+    if robots is not None:
+        rules = _robot_rules(robots).coalesce(1).persist()
+    if host_delays is not None:
+        delays = host_delays.select("host", "crawl_delay_ms").coalesce(1).persist()
+    try:
+        ctx = _Ctx(
+            spark=spark, cfg=cfg, root=root, ckpt=Checkpointer(spark, root),
+            fetcher=fetcher, robots=rules, host_delays=delays,
+            processor=processor,
+        )
+        state, start_iter = _initial_state(ctx, seeds, resume)
+        metrics: list[dict] = []
+        it = start_iter
+        while it < cfg.max_iterations and state.n_frontier > 0:
+            state, row = _step(ctx, state, it)
+            _log.info("crawl %s", row)
+            metrics.append(row)
+            it += 1
+    finally:
+        for df in (rules, delays):
+            if df is not None:
+                df.unpersist()
     return CrawlRunResult(
         fetched=state.fetched(spark),
         seen=state.seen(spark),
@@ -1291,7 +1351,7 @@ def crawl(
             if state.n_frontier
             else spark.createDataFrame([], FRONTIER_SCHEMA)
         ),
-        errors=_read(spark, ERRORS_SCHEMA, state.errors_paths),
+        errors=state.errors(spark),
         downloads=(
             spark.read.parquet(*state.downloads_paths)
             if state.downloads_paths

@@ -54,10 +54,12 @@ __all__ = [
     "expire_snapshots",
 ]
 
-#: state-table subdirs that compaction supersedes (expiry candidates);
-#: fact logs (fetched/errors/metrics/downloads) are never compacted
-#: away, so every live manifest references their full history and
-#: unreference-based expiry leaves them alone by construction.
+#: subdirs whose unreferenced children expiry deletes: the state tables
+#: compaction supersedes, plus ``blooms`` and ``metrics``, which older
+#: versions of the loop wrote and no manifest lists. The fact logs
+#: (fetched/errors/downloads) are never compacted away, so every live
+#: manifest references their full history and unreference-based expiry
+#: leaves them alone by construction.
 _STATE_SUBDIRS = (
     "frontier",
     "fresh",
@@ -65,6 +67,8 @@ _STATE_SUBDIRS = (
     "seen",
     "seen_extra",
     "seen_bucketed",
+    "blooms",
+    "metrics",
 )
 
 
@@ -105,9 +109,9 @@ def seen_as_of(spark: SparkSession, root: str, iteration: int) -> DataFrame:
 def fetched_as_of(
     spark: SparkSession, root: str, iteration: int
 ) -> DataFrame | None:
-    """All rows fetched in iterations <= ``iteration`` (the fact log's
-    prefix, read from the manifest's path list); None before the first
-    fetch."""
+    """All rows fetched in iterations <= ``iteration`` (the success view
+    of the fact log's prefix, read from the manifest's path list); None
+    before the first fetch."""
     state = _state_as_of(root, iteration)
     return state.fetched(spark) if state.fetched_paths else None
 
@@ -116,10 +120,10 @@ def expire_snapshots(root: str, keep_last: int = 2) -> dict:
     """Reclaim history: keep the newest ``keep_last`` manifests (the
     one a resume reads is always among them — it is the newest), delete
     older manifest files, then delete any STATE part dir no kept
-    manifest references. Fact-log dirs
-    (fetched/errors/metrics/downloads) are only ever deleted if
-    unreferenced too — which, being append-only lists, cannot happen
-    while any manifest survives.
+    manifest references (``blooms``/``metrics`` dirs of older
+    checkpoints are never referenced, so they all go). Fact-log dirs
+    (fetched/errors/downloads) are never candidates: being append-only
+    lists, every surviving manifest references them.
 
     Returns {"kept": [iters], "deleted_manifests": n, "deleted_dirs":
     [paths]} for the caller's audit log. Delete-by-unreference only: a

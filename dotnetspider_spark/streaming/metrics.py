@@ -3,10 +3,10 @@
 The reference's monitor flushes ``{success, error, avgDownloadSpeed,
 avgProcessorSpeed, ...}`` counters every N handled requests
 (Spider.cs:1500-1518,1524-1538; LogMonitor/HttpMonitor). The batch loop
-already persists per-iteration metrics rows distributed
-(crawler/loop.py ``metrics/iter=N``); this module is the CONTINUOUS
-view of the same telemetry for a long-running deployment where fetch
-events land as a stream:
+already records per-iteration metrics rows, observed on the write of
+its fact log (crawler/loop.py ``fetched/iter=N``); this module is the
+CONTINUOUS view of the same telemetry for a long-running deployment
+where fetch events land as a stream:
 
 - :func:`windowed_host_metrics` — per-host tumbling/sliding event-time
   windows with a WATERMARK bounding state: late fetch events within the

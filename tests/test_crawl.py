@@ -552,7 +552,7 @@ def test_robots_equal_length_tie_prefers_allow(spark):
     """Equal-length allow and deny prefixes must resolve deterministically
     to ALLOW (the robots.txt spec's tie-break) regardless of the rule
     collection order collect_list happens to produce."""
-    from dotnetspider_spark.crawler.loop import _robots_flag
+    from dotnetspider_spark.crawler.loop import _robot_rules, _robots_flag
 
     batch = spark.createDataFrame(
         [("http://h.example/p/x", "h.example")], "url string, host string"
@@ -564,14 +564,14 @@ def test_robots_equal_length_tie_prefers_allow(spark):
         robots = spark.createDataFrame(
             rules, "host string, path_prefix string, allow boolean"
         )
-        (row,) = _robots_flag(batch, robots).collect()
+        (row,) = _robots_flag(batch, _robot_rules(robots)).collect()
         assert row["__allowed"] is True
     # longer deny still beats shorter allow
     robots = spark.createDataFrame(
         [("h.example", "/p/", True), ("h.example", "/p/x", False)],
         "host string, path_prefix string, allow boolean",
     )
-    (row,) = _robots_flag(batch, robots).collect()
+    (row,) = _robots_flag(batch, _robot_rules(robots)).collect()
     assert row["__allowed"] is False
 
 
@@ -579,7 +579,7 @@ def test_robots_wildcard_rules_match_like_googlebot(spark):
     """RFC 9309 wildcard rules: '*' spans any run, trailing '$' anchors
     at the END of path?query, specificity is pattern length, and a
     wildcard rule matches the query string too."""
-    from dotnetspider_spark.crawler.loop import _robots_flag
+    from dotnetspider_spark.crawler.loop import _robot_rules, _robots_flag
     from dotnetspider_spark.functions.robots import robots_rules_table
 
     docs = spark.createDataFrame(
@@ -606,7 +606,7 @@ def test_robots_wildcard_rules_match_like_googlebot(spark):
     )
     got = {
         r["url"]: r["__allowed"]
-        for r in _robots_flag(batch, rules).collect()
+        for r in _robots_flag(batch, _robot_rules(rules)).collect()
     }
     assert got == cases
 
@@ -732,16 +732,9 @@ def test_trap_guard_drops_exploding_host_children(spark):
     assert unguarded.metrics[0]["n_new"] == 150  # trap children flood in
 
 
-def test_adaptive_backoff_parks_throttled_host_then_reprobes(spark):
-    """Opt-in adaptive backoff (CrawlConfig.adaptive_backoff): a host
-    answering 429 to a full iteration's batch is parked the NEXT
-    iteration (no rows consumed — they wait in the frontier), then
-    re-probed the iteration after (the one-iteration observation window
-    is the AIMD probe). Nothing is lost: every URL is eventually
-    consumed. With the flag off, the throttled host polls every
-    iteration."""
-    import pyspark.sql.functions as F
-
+def _throttle_web(spark, throttle_status):
+    """A 12-page host answering ``throttle_status`` to every request and
+    a 12-page host answering 200, every page a seed at depth 1."""
     from dotnetspider_spark.testing.datagen import CORPUS_SCHEMA, SEED_SCHEMA
 
     def mk(pid, host, path, status):
@@ -753,7 +746,7 @@ def test_adaptive_backoff_parks_throttled_host_then_reprobes(spark):
             "status": status, "crawl_delay_ms": 0,
         }
 
-    rows = [mk(i, "throttled.example", f"/p/{i}", 429) for i in range(12)]
+    rows = [mk(i, "throttled.example", f"/p/{i}", throttle_status) for i in range(12)]
     rows += [mk(100 + i, "good.example", f"/p/{i}", 200) for i in range(12)]
     corpus = spark.createDataFrame(
         rows, CORPUS_SCHEMA.replace(", redirect_to string", "")
@@ -769,6 +762,20 @@ def test_adaptive_backoff_parks_throttled_host_then_reprobes(spark):
         + [seed(f"http://good.example/p/{i}", 100 + i) for i in range(12)],
         SEED_SCHEMA,
     )
+    return corpus, seeds
+
+
+def test_adaptive_backoff_parks_throttled_host_then_reprobes(spark):
+    """Opt-in adaptive backoff (CrawlConfig.adaptive_backoff): a host
+    answering 429 to a full iteration's batch is parked the NEXT
+    iteration (no rows consumed — they wait in the frontier), then
+    re-probed the iteration after (the one-iteration observation window
+    is the AIMD probe). Nothing is lost: every URL is eventually
+    consumed. With the flag off, the throttled host polls every
+    iteration."""
+    import pyspark.sql.functions as F
+
+    corpus, seeds = _throttle_web(spark, 429)
     cfg = CrawlConfig(
         max_depth=1, per_host_limit=4,
         adaptive_backoff=True, backoff_min_observations=4,
@@ -805,6 +812,30 @@ def test_adaptive_backoff_parks_throttled_host_then_reprobes(spark):
     assert off_iter1 == 4
 
 
+def test_adaptive_backoff_parks_503_host_then_reprobes(spark):
+    """The 503 twin of the 429 test: a 503 within the retry budget is
+    neither a success nor an error (it comes back as a retry), yet the
+    backoff must see it — the fact log holds every status the last
+    iteration saw. The host answering 503 to its whole batch is parked
+    the next iteration and re-probed the one after; with the flag off
+    it is polled every iteration."""
+    corpus, seeds = _throttle_web(spark, 503)
+    cfg = CrawlConfig(
+        max_depth=1, per_host_limit=4, cycle_retry_times=1, max_iterations=3,
+        adaptive_backoff=True, backoff_min_observations=4,
+    )
+    res = crawl(spark, corpus, seeds, cfg)
+    # every 503 is a transient fetch of the throttled host; the good
+    # host polls its 4-slot budget every iteration
+    assert [m["n_transient"] for m in res.metrics] == [4, 0, 4]
+    assert [m["n_ok"] for m in res.metrics] == [4, 4, 4]
+
+    res_off = crawl(spark, corpus, seeds, CrawlConfig(
+        max_depth=1, per_host_limit=4, cycle_retry_times=1, max_iterations=2,
+    ))
+    assert [m["n_transient"] for m in res_off.metrics] == [4, 4]
+
+
 def test_invalid_urls_degrade_instead_of_aborting(spark):
     """Java's URI parser rejects URLs the wild emits constantly (spaces,
     dangling '%'). Every parse_url site uses try_parse_url, so such a
@@ -813,7 +844,7 @@ def test_invalid_urls_degrade_instead_of_aborting(spark):
     IllegalArgumentException aborting the whole iteration."""
     import pyspark.sql.functions as F
 
-    from dotnetspider_spark.crawler.loop import _robots_flag
+    from dotnetspider_spark.crawler.loop import _robot_rules, _robots_flag
     from dotnetspider_spark.functions.urlops import url_host
 
     urls = [
@@ -831,7 +862,8 @@ def test_invalid_urls_degrade_instead_of_aborting(spark):
         "host string, path_prefix string, allow boolean",
     )
     verdicts = {
-        r["url"]: r["__allowed"] for r in _robots_flag(df, robots).collect()
+        r["url"]: r["__allowed"]
+        for r in _robots_flag(df, _robot_rules(robots)).collect()
     }
     # the parseable URL under /a is denied; the unparseable ones degrade
     # to subject '/' which no rule matches -> allowed
@@ -910,3 +942,48 @@ def test_resume_preserves_link_policy_semantics(spark, small_corpus,
     assert {r["identity"] for r in resumed.seen.collect()} == {
         r["identity"] for r in straight.seen.collect()
     }
+
+
+def test_static_inputs_evaluated_once_per_crawl(spark, tiny_corpus):
+    """The robots rules and the host delays are evaluated once per
+    crawl() call, not once per iteration: each comes from a mapInPandas
+    that counts the rows it emits."""
+    from dotnetspider_spark.testing.datagen import robots_rows
+
+    def counted(df, acc):
+        def run(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        return df.mapInPandas(run, df.schema)
+
+    sc = spark.sparkContext
+    n_rules, n_delays = sc.accumulator(0), sc.accumulator(0)
+    delays = spark.createDataFrame(
+        [(f"host{h}.example", 100) for h in range(TINY.n_hosts)],
+        "host string, crawl_delay_ms int",
+    )
+    res = crawl(
+        spark, tiny_corpus, gen_seeds(spark, TINY, k=2),
+        CrawlConfig(dfs=True, max_depth=3, per_host_limit=4),
+        robots=counted(gen_robots(spark, TINY), n_rules),
+        host_delays=counted(delays, n_delays),
+    )
+    assert res.iterations >= 3
+    assert n_rules.value == len(robots_rows(TINY))
+    assert n_delays.value == TINY.n_hosts
+
+
+def test_seeds_with_seq_skip_the_url_ranking(spark, monkeypatch):
+    """seeds_to_frontier ranks only the seeds that lack a seq: when none
+    does, the ranking (a sampling job, a checkpoint and a collect) is
+    never built."""
+    from dotnetspider_spark.crawler import loop
+
+    def no_ranking(df):
+        raise AssertionError("_dense_seq_by_url ran on seeds that all carry a seq")
+
+    monkeypatch.setattr(loop, "_dense_seq_by_url", no_ranking)
+    fr = loop.seeds_to_frontier(gen_seeds(spark, TINY, k=5))
+    assert sorted(r.seq for r in fr.collect()) == list(range(5))

@@ -59,7 +59,9 @@ def test_small_dim_broadcasts(spark):
 
 
 def test_robots_gate_uses_broadcast(spark):
-    from dotnetspider_spark.crawler.loop import _robots_flag, seeds_to_frontier
+    from dotnetspider_spark.crawler.loop import (
+        _robot_rules, _robots_flag, seeds_to_frontier,
+    )
     from dotnetspider_spark.testing.datagen import (
         CorpusConfig, gen_robots, gen_seeds,
     )
@@ -68,7 +70,8 @@ def test_robots_gate_uses_broadcast(spark):
     frontier = seeds_to_frontier(gen_seeds(spark, cfg, 10)).withColumn(
         "rank", F.lit(1)
     )
-    gated = _robots_flag(frontier, gen_robots(spark, cfg)).filter("__allowed")
+    rules = _robot_rules(gen_robots(spark, cfg))
+    gated = _robots_flag(frontier, rules).filter("__allowed")
     plan = _plan(gated)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     # the gate itself must add no shuffle: longest-prefix pick is an

@@ -162,7 +162,7 @@ def _py_robots_verdict(subject: str, rules) -> bool:
 def test_robots_gate_agrees_with_python_matcher(spark, raw_rules, paths):
     import pyspark.sql.functions as F
 
-    from dotnetspider_spark.crawler.loop import _robots_flag
+    from dotnetspider_spark.crawler.loop import _robot_rules, _robots_flag
     from dotnetspider_spark.functions.robots import pattern_to_regex
 
     rules = []
@@ -183,7 +183,8 @@ def test_robots_gate_agrees_with_python_matcher(spark, raw_rules, paths):
         [(u, "h.example") for u in urls], "url string, host string"
     )
     got = {
-        r["url"]: r["__allowed"] for r in _robots_flag(batch, robots).collect()
+        r["url"]: r["__allowed"]
+        for r in _robots_flag(batch, _robot_rules(robots)).collect()
     }
     from urllib.parse import urlsplit
 

@@ -9,6 +9,8 @@ snapshots must remain fully readable afterwards.
 from __future__ import annotations
 
 import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -167,6 +169,32 @@ MANIFEST_KEYS = [
 ]
 
 
+def _to_parent_layout(spark, ck: str) -> None:
+    """Rewrite the checkpoint under ``ck`` into the layout written before
+    the single fact log: ``fetched/iter=N`` holds the successes only,
+    ``errors/iter=N`` the failures, and the manifest lists the latter
+    under ``errors_paths``."""
+    m = Checkpointer(spark, ck).load_manifest()
+    m["errors_paths"] = []
+    for path in m["fetched_paths"]:
+        log = spark.read.parquet(path)
+        errors = path.replace("/fetched/", "/errors/")
+        log.filter("reason IS NULL").drop("reason").write.parquet(path + ".old")
+        log.filter("reason <> 'retry'").select(
+            "url", "host", "identity", "depth", "retried", "status", "reason",
+            "iter",
+        ).write.parquet(errors)
+        shutil.rmtree(path)
+        os.rename(path + ".old", path)
+        m["errors_paths"].append(errors)
+    with open(f"{ck}/manifests/iter={m['last_iter']}.json", "w") as f:
+        json.dump(m, f)
+
+
+def _errors(df):
+    return {(r.url, r.retried, r.reason, r.iter) for r in df.collect()}
+
+
 def test_manifest_format_pinned_and_old_manifest_resumes(
     spark, corpus, tmp_path_factory
 ):
@@ -175,17 +203,28 @@ def test_manifest_format_pinned_and_old_manifest_resumes(
     m = Checkpointer(spark, ck).load_manifest()
     assert list(m) == MANIFEST_KEYS
     assert m["last_iter"] == 1
+    full = _run(spark, corpus, str(tmp_path_factory.mktemp("tt_fmt_full")))
+    full_urls = {r.url for r in full.fetched.select("url").collect()}
 
-    # a manifest written before the errors/downloads logs existed
+    # a checkpoint in the layout of separate errors dirs, and a copy of
+    # it whose manifest predates the errors/downloads logs altogether
+    _to_parent_layout(spark, ck)
+    ck_old = str(tmp_path_factory.mktemp("tt_fmt_old")) + "/ckpt"
+    shutil.copytree(ck, ck_old)
+    with open(f"{ck_old}/manifests/iter=1.json") as f:
+        m = json.loads(f.read().replace(ck, ck_old))
     for key in ("errors_paths", "downloads_paths"):
         del m[key]
-    with open(f"{ck}/manifests/iter=1.json", "w") as f:
+    with open(f"{ck_old}/manifests/iter=1.json", "w") as f:
         json.dump(m, f)
+
     res = _run(spark, corpus, ck, resume=True)
-    full = _run(spark, corpus, str(tmp_path_factory.mktemp("tt_fmt_full")))
-    assert {r.url for r in res.fetched.select("url").collect()} == {
-        r.url for r in full.fetched.select("url").collect()
-    }
+    assert {r.url for r in res.fetched.select("url").collect()} == full_urls
+    assert _ids(res.seen) == _ids(full.seen)
+    assert _errors(res.errors) == _errors(full.errors)
+
+    res = _run(spark, corpus, ck_old, resume=True)
+    assert {r.url for r in res.fetched.select("url").collect()} == full_urls
     assert _ids(res.seen) == _ids(full.seen)
     # the errors of the two iterations before the resume are unlisted
     assert res.errors.filter(F.col("iter") < 2).count() == 0
@@ -227,3 +266,32 @@ def test_state_writer_counts_rows_from_footers(spark, tmp_path):
         path = str(tmp_path / f"t{i}")
         _write_state(df, path)
         assert _rows(path) == df.count()
+
+
+def test_expire_reclaims_blooms_and_metrics_dirs(spark, corpus, tmp_path_factory):
+    """``blooms/iter=N`` and ``metrics/iter=N`` dirs, which older versions
+    of the loop wrote and no manifest lists, are deleted on expiry, and
+    every kept snapshot stays readable."""
+    ck = str(tmp_path_factory.mktemp("tt_old_dirs"))
+    _run(spark, corpus, ck)
+    old_dirs = [
+        f"{ck}/{sub}/iter={it}" for sub in ("blooms", "metrics") for it in (0, 1)
+    ]
+    for path in old_dirs:
+        spark.range(3).write.parquet(path)
+    keep = list_snapshots(ck)[-2:]
+
+    def snapshot(it):
+        return (
+            _ids(frontier_as_of(spark, ck, it)),
+            _ids(seen_as_of(spark, ck, it)),
+            {r.url for r in fetched_as_of(spark, ck, it).select("url").collect()},
+        )
+
+    before = {it: snapshot(it) for it in keep}
+
+    out = expire_snapshots(ck, keep_last=2)
+    assert out["kept"] == keep
+    assert set(old_dirs) <= set(out["deleted_dirs"])
+    assert not any(os.path.exists(p) for p in old_dirs)
+    assert {it: snapshot(it) for it in keep} == before
