@@ -909,7 +909,7 @@ def _phase_fetch(ctx: _Ctx, allowed: DataFrame) -> tuple[DataFrame, bool]:
     """Fetch via the pluggable fetcher (corpus-join replay or mapInPandas
     HTTP per host-partition), checkpointed because later phases re-read
     it. Also says whether the fetcher can redirect (emits ``target_url``);
-    when it cannot, the redirect phase (a count job and maybe a delta
+    when it cannot, the redirect phase (a probe job and maybe a delta
     write) is skipped."""
     fetched = ctx.fetcher.fetch(allowed)
     redirects = "target_url" in fetched.columns
@@ -923,8 +923,13 @@ def _phase_redirects(ctx: _Ctx, state: CrawlState, it: int, fetched: DataFrame) 
     successful fetches that landed elsewhere mark the FINAL url's
     identity seen — a virgin GET with the metadata the row's children
     would inherit — so later links to it are not fetched twice. Runs
-    before this iteration's dedup (children may already link to it)."""
+    before this iteration's dedup (children may already link to it).
+    Most iterations redirect nothing: a one-task probe of the
+    checkpointed rows says so, and then no ``seen_extra`` dir is
+    written."""
     redirected = fetched.filter(_status_ok() & (F.col("target_url") != F.col("url")))
+    if redirected.coalesce(1).isEmpty():
+        return
     if "redirect_hops" in fetched.columns:
         # multi-hop chains: EVERY visited hop (intermediates + final) is
         # marked seen, so a later link to any point of the chain is a

@@ -29,6 +29,9 @@ reads), nothing is copied at snapshot time. Retention is the only real
 cost (un-expired parts hold disk), which is what
 :func:`expire_snapshots` bounds — delete-by-unreference, never
 delete-by-age-of-file, so a kept manifest can never dangle.
+
+No entry point imports this module; it is kept because the north rule's
+checkpointed snapshots are read back through it.
 """
 
 from __future__ import annotations

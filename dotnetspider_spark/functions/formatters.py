@@ -75,8 +75,9 @@ def displace_fmt(col: Column, equal_to: str, displacement: str) -> Column:
 
 def digit_unit_fmt(col: Column) -> Column:
     """DigitUnitFormatter.cs — Chinese numeric units: '3.5万'→35000,
-    '2亿'→200000000; plain numbers pass through. Returns double."""
-    num = F.regexp_extract(col, r"^([0-9.]+)", 1).cast("double")
+    '2亿'→200000000; plain numbers pass through. Returns double, NULL
+    when the leading digits are not a number ('1.2.3万')."""
+    num = F.regexp_extract(col, r"^([0-9.]+)", 1).try_cast("double")
     return (
         F.when(col.endswith("亿"), num * F.lit(1e8))
         .when(col.endswith("万"), num * F.lit(1e4))

@@ -7,6 +7,9 @@ implementations stop the pagination walk
 (Core/Processor/LastPageChecker/*.cs). All are pure column predicates
 here — a paginated crawl is ``frontier ∪ next_page_candidates.filter(
 ~is_last_page)`` inside the normal loop.
+
+No entry point imports this module yet; it is kept because SURVEY.md
+(§2.4, lines 193-197) maps AutoIncrement and the LastPageCheckers to it.
 """
 
 from __future__ import annotations
@@ -35,18 +38,19 @@ def uncontains_last_page(content: Column, *markers: str) -> Column:
 
 def max_page_reached(url: Column, page_pattern: str, max_page: int) -> Column:
     """MaxPageLastPageChecker.cs:30-38 — page number extracted from the
-    URL >= max. ``page_pattern`` has one capture group for the number."""
-    cur = F.regexp_extract(url, page_pattern, 1)
-    return F.when(cur == "", F.lit(False)).otherwise(
-        cur.cast("bigint") >= F.lit(max_page)
-    )
+    URL >= max. ``page_pattern`` has one capture group for the number;
+    a URL without one, or whose number does not fit a bigint, is not the
+    last page."""
+    cur = F.regexp_extract(url, page_pattern, 1).try_cast("bigint")
+    return F.coalesce(cur >= F.lit(max_page), F.lit(False))
 
 
 def pagination_exhausted(current: Column, total: Column) -> Column:
     """PaginationLastPageChecker.cs — selector-extracted current page vs
-    total page count (two extracted int columns)."""
+    total page count (two extracted int columns). A missing or malformed
+    value exhausts the walk: no next page."""
     return F.coalesce(
-        current.cast("bigint") >= total.cast("bigint"), F.lit(True)
+        current.try_cast("bigint") >= total.try_cast("bigint"), F.lit(True)
     )
 
 

@@ -130,24 +130,26 @@ def pattern_filter(
 def next_page_url(url: Column, pagination_str: str, interval: int = 1) -> Column:
     """AutoIncrementRequestExtractor (AutoIncrementRequestExtractor.cs:35-46):
     find the numeric part of ``pagination_str`` inside the url and add
-    ``interval`` — pure built-ins (regexp_extract + replace + arithmetic)."""
+    ``interval`` — pure built-ins (regexp_extract + replace + arithmetic).
+    No entry point calls it yet; it is kept because SURVEY.md (§2.4,
+    lines 193-197) maps AutoIncrement to it."""
     import re as _re
 
     esc = _re.escape(pagination_str).replace(r"\*", r"(\d+)")
     # pagination_str like "p/*" or "_*.html": '*' marks the page number.
-    # regexp_extract yields '' (not NULL) on non-matching URLs; nullif
-    # before the cast — under ANSI mode ''::BIGINT throws. A URL without
-    # the pagination substring yields no next page, matching
-    # AutoIncrementRequestExtractor.cs:35-46 (returns null, never throws).
-    cur = F.nullif(F.regexp_extract(url, esc, 1), F.lit("")).cast("long")
-    nxt = (cur + F.lit(interval)).cast("string")
+    # regexp_extract yields '' (not NULL) on non-matching URLs, and the
+    # digits may overflow a long; under ANSI mode a plain cast or add of
+    # either throws. A URL without a usable page number yields no next
+    # page, matching AutoIncrementRequestExtractor.cs:35-46 (returns
+    # null, never throws).
+    nxt = F.try_add(F.regexp_extract(url, esc, 1).try_cast("long"), F.lit(interval))
     old = F.regexp_extract(url, esc, 0)
     new = F.concat(
         F.lit(pagination_str.split("*")[0]),
-        nxt,
+        nxt.cast("string"),
         F.lit(pagination_str.split("*")[1] if "*" in pagination_str else ""),
     )
-    return F.when(cur.isNotNull(), F.replace(url, old, new)).otherwise(F.lit(None))
+    return F.when(nxt.isNotNull(), F.replace(url, old, new)).otherwise(F.lit(None))
 
 
 #: tracking/click-id query parameters stripped by URL normalization —

@@ -14,6 +14,9 @@ single-appended-file shapes are single-writer bottlenecks at 10^10 rows;
 part-files per identity preserve the contract that matters (all of an
 identity's results live under its own directory, line-per-result) while
 staying parallel.
+
+No entry point imports this module yet; it is kept because SURVEY.md
+(§2.8, line 263) maps File/JsonFilePipeline to it.
 """
 
 from __future__ import annotations

@@ -30,9 +30,14 @@ mode                  Iceberg statement
 Batch-internal duplicate resolution (first/last per key by ``seq_col``)
 is shared with ``ParquetTable`` so both backends resolve identically.
 
-Time travel: ``read(version=...)`` maps to ``VERSION AS OF`` — the
-native form of what ``crawler/timetravel.py`` provides over the
+Time travel: ``read(snapshot_id=...)`` reads an Iceberg snapshot —
+the native form of what ``crawler/timetravel.py`` provides over the
 delta-parquet manifests.
+
+No root reaches this module (the crawl loop persists its state as
+delta-parquet dirs); it is kept because the ``BASELINE.json`` north rule
+names Iceberg tables as the frontier/corpus substrate, and this is the
+only Iceberg implementation.
 """
 
 from __future__ import annotations
@@ -111,10 +116,7 @@ class IcebergTable:
         """Current table, or time travel to an Iceberg SNAPSHOT ID via
         the documented ``snapshot-id`` read option. Note this is
         Iceberg's generated long id, NOT the parquet layer's sequential
-        iteration number — map iterations to snapshot ids through the
-        ``TableCheckpointer`` manifests (which record what was current
-        at each checkpoint), the same indirection
-        ``crawler/timetravel.py`` uses over delta-parquet manifests."""
+        iteration number."""
         if snapshot_id is None:
             return self.spark.read.table(self.ident)
         return (
@@ -174,73 +176,6 @@ class IcebergTable:
         sets = ", ".join(f"t.{c} = s.{c}" for c in update_cols)
         # no NOT MATCHED clause: unknown keys dropped (Update mode)
         self._merge(batch, f"WHEN MATCHED THEN UPDATE SET {sets}")
-
-
-class TableCheckpointer:
-    """``Checkpointer``-interface twin (crawler/loop.py) that stores
-    the per-iteration manifests as ROWS of a keyed table instead of
-    ``manifests/iter=N.json`` files — the backend comes from
-    :func:`open_table`, so on an Iceberg-equipped cluster each
-    ``save_manifest`` is a native ``MERGE INTO`` commit (snapshot
-    history = Iceberg's own snapshot list), while the sandbox leg runs
-    on the atomic-swap parquet table and is fully testable offline. The
-    manifest payload layout is
-    byte-identical to the file-based Checkpointer's JSON, so
-    ``crawler/timetravel.py`` consumers can parse either source.
-    """
-
-    def __init__(self, spark: SparkSession, location: str,
-                 backend: str = "auto"):
-        self.spark = spark
-        self.table = open_table(spark, location, ["iter"], backend=backend)
-
-    def save_manifest(self, it: int, state: dict) -> None:
-        import json
-        import time
-
-        payload = json.dumps({"last_iter": it, "ts": time.time(), **state})
-        df = self.spark.createDataFrame(
-            [(it, payload)], "iter long, payload string"
-        )
-        # upsert: re-running an iteration after a crash overwrites its
-        # manifest row (same idempotence as os.replace on the JSON file)
-        self.table.upsert(df)
-
-    def load_manifest(self) -> dict | None:
-        import json
-
-        if not self.table.exists():
-            return None
-        from pyspark.sql import functions as F
-
-        rows = (
-            self.table.read().orderBy(F.col("iter").desc()).limit(1).collect()
-        )
-        if not rows:
-            return None
-        try:
-            m = json.loads(rows[0]["payload"])
-            m["last_iter"]
-            return m
-        except (ValueError, KeyError):
-            return None
-
-    def last_iter(self) -> int | None:
-        m = self.load_manifest()
-        return None if m is None else m["last_iter"]
-
-    def manifest_for(self, it: int) -> dict | None:
-        """Versioned-manifest read (the ``manifests/iter=N.json`` analog
-        — every row is retained, so any checkpointed iteration is
-        reconstructable)."""
-        import json
-
-        if not self.table.exists():
-            return None
-        from pyspark.sql import functions as F
-
-        rows = self.table.read().filter(F.col("iter") == it).collect()
-        return json.loads(rows[0]["payload"]) if rows else None
 
 
 def open_table(

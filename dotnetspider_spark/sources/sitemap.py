@@ -62,7 +62,8 @@ def _entries(xml_col: str, kind: str):
             F.lit(kind).alias("kind"),
             _xml_unescape_loc(field(b, "loc")).alias("loc"),
             field(b, "lastmod").alias("lastmod"),
-            field(b, "priority").cast("double").alias("priority"),
+            # network text: a malformed priority reads as NULL
+            field(b, "priority").try_cast("double").alias("priority"),
         ),
     )
 

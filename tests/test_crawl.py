@@ -987,3 +987,20 @@ def test_seeds_with_seq_skip_the_url_ranking(spark, monkeypatch):
     monkeypatch.setattr(loop, "_dense_seq_by_url", no_ranking)
     fr = loop.seeds_to_frontier(gen_seeds(spark, TINY, k=5))
     assert sorted(r.seq for r in fr.collect()) == list(range(5))
+
+
+def test_overlapping_seed_reloads_push_each_url_once(spark):
+    """Reload semantics (QueueDuplicateRemovedScheduler.cs:137-155): a
+    second seed list that overlaps the first, pushed against the first
+    list's identities, adds only its new URLs — each URL lands once."""
+    from dotnetspider_spark.crawler.loop import seeds_to_frontier
+    from dotnetspider_spark.operators.frontier import dedup_push
+
+    cfg = CorpusConfig(n_pages=100, n_hosts=4)
+    first = seeds_to_frontier(gen_seeds(spark, cfg, k=10))
+    second = dedup_push(
+        seeds_to_frontier(gen_seeds(spark, cfg, k=15)),  # 10 overlap
+        first.select("identity"),
+    )
+    urls = [r.url for r in first.unionByName(second).collect()]
+    assert len(urls) == len(set(urls)) == 15

@@ -8,7 +8,7 @@ extensions, timezone offsets, and CDATA titles.
 
 from __future__ import annotations
 
-from dotnetspider_spark.sources.feeds import _parse_feed, parse_feeds
+from dotnetspider_spark.sources.feeds import _parse_feed, feed_seeds, parse_feeds
 
 
 def test_malformed_xml_yields_no_rows():
@@ -104,6 +104,41 @@ def test_naive_rfc822_dates_pin_utc():
     (e,) = _parse_feed(xml)
     # '-0000' parses naive; must be pinned to UTC, not worker-local tz
     assert e["published"] == 1577836805
+
+
+def test_feed_seeds_gate_unfetchable_links_and_order_by_freshness(spark):
+    """feed_seeds: one seed per fetchable entry — ``mailto:`` and
+    relative links are dropped — with ``seq`` the published epoch, so a
+    fresher entry gets a larger seq, and 0 for a missing or unparseable
+    date."""
+    dated = (
+        '<rss version="2.0"><channel>'
+        "<item><link>http://a.example/p1</link>"
+        "<pubDate>Wed, 01 Jan 2020 00:00:10 GMT</pubDate></item>"
+        "<item><link>http://a.example/p2</link>"
+        "<pubDate>Wed, 01 Jan 2020 00:00:05 GMT</pubDate></item>"
+        "</channel></rss>"
+    )
+    undated = (
+        '<rss version="2.0"><channel>'
+        "<item><link>http://a.example/p3</link>"
+        "<pubDate>garbage</pubDate></item>"
+        "<item><link>http://a.example/ok</link></item>"
+        "<item><link>mailto:ed@a.example</link></item>"
+        "<item><link>/relative/path</link></item>"
+        "</channel></rss>"
+    )
+    feeds = spark.createDataFrame(
+        [("a.example", dated), ("a.example", undated)],
+        "host string, feed_xml string",
+    )
+    seqs = {r.url: r.seq for r in feed_seeds(feeds).collect()}
+    assert seqs == {
+        "http://a.example/p1": 1577836810,
+        "http://a.example/p2": 1577836805,
+        "http://a.example/p3": 0,
+        "http://a.example/ok": 0,
+    }
 
 
 def _urlset(host, urls):

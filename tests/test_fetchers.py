@@ -450,6 +450,34 @@ def test_non_200_2xx_statuses_are_fetched_successes(spark):
     assert res.errors.count() == 0
 
 
+def test_crawl_without_redirects_writes_no_seen_extra(spark, tmp_path):
+    """HttpFetcher always emits ``target_url``, but an iteration in which
+    nothing redirected has no post-redirect identities to mark seen: it
+    writes no ``seen_extra`` dir at all."""
+    from dotnetspider_spark.crawler.loop import CrawlConfig, crawl
+
+    pages = {
+        "http://h.example/": {
+            "body": "<html><a href='/a'>a</a><a href='/b'>b</a></html>",
+            "content_type": "text/html",
+        },
+        "http://h.example/a": {"body": "<html>a</html>", "content_type": "text/html"},
+        "http://h.example/b": {"status": 404},
+    }
+    seeds = spark.createDataFrame([("http://h.example/", 0)], "url string, seq long")
+    ck = str(tmp_path / "ck")
+    res = crawl(
+        spark, None, seeds,
+        CrawlConfig(dfs=True, max_depth=2, per_host_limit=4, checkpoint_dir=ck),
+        fetcher=HttpFetcher(DictTransport(pages), n_partitions=2),
+    )
+    assert res.iterations >= 2
+    assert {r.url for r in res.fetched.select("url").collect()} == {
+        "http://h.example/", "http://h.example/a",
+    }
+    assert not (tmp_path / "ck" / "seen_extra").exists()
+
+
 def test_media_body_is_not_charset_decoded(spark):
     """A media-type response carries bytes only: decoding a binary body
     into a garbage html string ships a second payload-sized column

@@ -123,40 +123,6 @@ def test_merge_statement_shapes(spark, monkeypatch):
     ]
 
 
-def test_table_checkpointer_matches_file_checkpointer_semantics(
-    spark, tmp_path
-):
-    """TableCheckpointer (sinks/iceberg.py) vs the file Checkpointer
-    (crawler/loop.py): same save/load/last_iter contract, including
-    crash-rerun idempotence and per-iteration versioned reads."""
-    from dotnetspider_spark.crawler.loop import Checkpointer
-    from dotnetspider_spark.sinks.iceberg import TableCheckpointer
-
-    fc = Checkpointer(spark, str(tmp_path / "file_ckpt"))
-    tc = TableCheckpointer(spark, str(tmp_path / "table_ckpt"))
-    (tmp_path / "file_ckpt").mkdir()
-
-    assert tc.load_manifest() is None and tc.last_iter() is None
-
-    for it in (1, 2, 3):
-        state = {"frontier_parts": [f"fresh/iter={it}"], "n": it * 10}
-        fc.save_manifest(it, state)
-        tc.save_manifest(it, state)
-
-    fm, tm = fc.load_manifest(), tc.load_manifest()
-    assert tm["last_iter"] == fm["last_iter"] == 3
-    assert tm["frontier_parts"] == fm["frontier_parts"]
-    assert tc.last_iter() == fc.last_iter() == 3
-
-    # crash-rerun of iteration 3 overwrites its manifest (idempotent)
-    tc.save_manifest(3, {"frontier_parts": ["fresh/iter=3b"], "n": 99})
-    assert tc.load_manifest()["n"] == 99 and tc.last_iter() == 3
-
-    # versioned history: every checkpointed iteration reconstructable
-    assert tc.manifest_for(2)["n"] == 20
-    assert tc.manifest_for(7) is None
-
-
 def test_open_table_routes_paths_to_parquet_even_in_auto(spark, tmp_path):
     # review fix: a filesystem path is not a valid SQL identifier; on a
     # catalog-equipped cluster 'auto' must still route paths to the

@@ -1,9 +1,12 @@
-"""Pagination operator tests (AutoIncrement + the four last-page checkers)."""
+"""Pagination operator tests (AutoIncrement + the four last-page checkers),
+and how the column parsers of network text read a malformed number."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
+from dotnetspider_spark.functions.formatters import digit_unit_fmt
 from dotnetspider_spark.functions.pagination import (
     contains_last_page,
     max_page_reached,
@@ -12,6 +15,7 @@ from dotnetspider_spark.functions.pagination import (
     uncontains_last_page,
 )
 from dotnetspider_spark.functions.urlops import next_page_url
+from dotnetspider_spark.sources.sitemap import parse_sitemaps
 
 
 def _df(spark):
@@ -68,3 +72,56 @@ def test_paginate_gates_on_stop(spark):
     got = {r.url: r.nxt for r in df.collect()}
     assert got["http://h/list_1.html"] == "http://h/list_2.html"
     assert got["http://h/list_4.html"] is None  # checker fired
+
+
+_HUGE_PAGE = "http://h/list_99999999999999999999.html"  # > 2^63
+
+
+def _on(expr):
+    """A one-column query: ``expr`` over the input string column ``v``."""
+    return lambda df: df.select(expr(F.col("v")))
+
+
+def _sitemap_priority(df):
+    docs = df.select(F.lit("h").alias("host"), F.col("v").alias("sitemap_xml"))
+    return parse_sitemaps(docs).select("priority")
+
+
+@pytest.mark.parametrize(
+    "query, value, expected",
+    [
+        pytest.param(
+            _sitemap_priority,
+            "<urlset><url><loc>http://h/a</loc><priority>high</priority></url></urlset>",
+            None,
+            id="sitemap_priority",
+        ),
+        pytest.param(
+            _on(lambda c: next_page_url(c, "list_*.html")), _HUGE_PAGE, None,
+            id="next_page_url_overflow",
+        ),
+        pytest.param(
+            _on(lambda c: next_page_url(c, "list_*.html")),
+            "http://h/list_9223372036854775807.html", None,
+            id="next_page_url_increment_overflow",
+        ),
+        pytest.param(
+            _on(lambda c: max_page_reached(c, r"list_(\d+)\.html", 5)),
+            _HUGE_PAGE, False,
+            id="max_page_reached_overflow",
+        ),
+        pytest.param(
+            _on(lambda c: pagination_exhausted(c, F.lit("5"))), "4 of", True,
+            id="pagination_exhausted_text",
+        ),
+        pytest.param(
+            _on(digit_unit_fmt), "1.2.3万", None, id="digit_unit_fmt_two_points",
+        ),
+    ],
+)
+def test_malformed_numbers_read_as_null(spark, query, value, expected):
+    """Spark runs with ANSI mode on, where a plain cast of bad text fails
+    the whole job. The parsers read it as NULL instead: no next page,
+    not the last page, a NULL priority or value."""
+    (row,) = query(spark.createDataFrame([(value,)], "v string")).collect()
+    assert row[0] == expected

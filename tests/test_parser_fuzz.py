@@ -1,10 +1,11 @@
 """Seeded byte fuzz over the parsers that read network bytes: WARC
-records (plain and gzip), RSS/Atom feeds, robots.txt and the crawl's
-link parser. Whatever bytes arrive, each may only return a result or
-raise ValueError/NotImplementedError; any other exception escapes the
-callers' fail-closed handling and fails the Spark task.
+records (plain and gzip), RSS/Atom feeds, robots.txt, the crawl's
+link parser and sitemaps. Whatever bytes arrive, each may only return a
+result or raise ValueError/NotImplementedError; any other exception
+escapes the callers' fail-closed handling and fails the Spark task.
 
-No Spark: each trial is a pure-function call.
+Each trial of the Python parsers is a pure-function call. The sitemap
+parser is Spark column expressions, so its trials run as one DataFrame.
 """
 
 from __future__ import annotations
@@ -17,6 +18,7 @@ import pytest
 from dotnetspider_spark.crawler.parse import _canonize, _hot_hrefs
 from dotnetspider_spark.functions.robots import parse_robots_txt, pattern_to_regex
 from dotnetspider_spark.sources.feeds import _parse_feed
+from dotnetspider_spark.sources.sitemap import parse_sitemaps
 from dotnetspider_spark.sources.warc import (
     build_warc, format_warc_record, split_warc_records,
 )
@@ -75,6 +77,19 @@ _LINKS_MARKED = _LINKS.replace(
     b"<body>", b"<body><script>var a='<a href=\"/s\">';</script><!-- c -->"
 )
 
+_URLSET = b"""<?xml version="1.0" encoding="UTF-8"?>
+<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
+<url><loc>http://s.example/a?x=1&amp;y=2</loc><lastmod>2024-01-01</lastmod>
+<priority>0.8</priority></url>
+<url><loc> http://s.example/b </loc><priority>1.0</priority></url>
+<url><lastmod>2024-02-02T10:00:00+00:00</lastmod></url>
+</urlset>"""
+
+_SITEMAPINDEX = b"""<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
+<sitemap><loc>http://s.example/maps/1.xml</loc><lastmod>2024-01-01</lastmod></sitemap>
+<sitemap><loc>http://s.example/maps/2.xml</loc></sitemap>
+</sitemapindex>"""
+
 
 def _text(data: bytes) -> str:
     return data.decode("latin-1")  # every byte value becomes a char
@@ -129,15 +144,47 @@ def _fails_closed(parse, data: bytes) -> bool:
         return False
 
 
+def _trials(base: bytes) -> list[bytes]:
+    """1500 seeded mutations of ``base``, then every truncation."""
+    rng = np.random.default_rng(20260)
+    return [_mutate(rng, base) for _ in range(1500)] + [
+        base[:cut] for cut in range(len(base))
+    ]
+
+
 @pytest.mark.parametrize("name", sorted(CASES))
 def test_parser_fuzz_fails_closed(name):
     base, parse = CASES[name]
     assert _fails_closed(parse, base)  # the unmutated input parses
-    rng = np.random.default_rng(20260)
-    for _ in range(1500):
-        _fails_closed(parse, _mutate(rng, base))
-    for cut in range(len(base)):
-        _fails_closed(parse, base[:cut])
+    for data in _trials(base):
+        _fails_closed(parse, data)
+
+
+def test_sitemap_fuzz_fails_closed(spark):
+    """parse_sitemaps over every trial of a urlset and a sitemapindex in
+    one DataFrame: the job succeeds, and every row it yields has the
+    output schema's shape — a kind, a non-NULL url, a string or NULL
+    lastmod, a double or NULL priority."""
+    docs = [
+        (f"{name}-{i}", _text(data))
+        for name, base in (("urlset", _URLSET), ("index", _SITEMAPINDEX))
+        for i, data in enumerate([base, *_trials(base)])
+    ]
+    out = parse_sitemaps(spark.createDataFrame(docs, "host string, sitemap_xml string"))
+    assert out.columns == ["host", "kind", "url", "lastmod", "priority"]
+    rows = out.collect()
+    for r in rows:
+        assert r.kind in ("url", "sitemap") and isinstance(r.url, str)
+        assert r.lastmod is None or isinstance(r.lastmod, str)
+        assert r.priority is None or isinstance(r.priority, float)
+    # the unmutated documents parse: two urlset entries with a <loc>,
+    # both sitemapindex entries
+    assert sorted((r.kind, r.url, r.priority) for r in rows if r.host == "urlset-0") == [
+        ("url", "http://s.example/a?x=1&y=2", 0.8), ("url", "http://s.example/b", 1.0),
+    ]
+    assert sorted(r.url for r in rows if r.host == "index-0") == [
+        "http://s.example/maps/1.xml", "http://s.example/maps/2.xml",
+    ]
 
 
 def test_robots_crawl_delay_is_clamped_to_int_ms():

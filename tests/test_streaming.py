@@ -1,39 +1,8 @@
-"""Streaming seed ingestion test (exactly-once reload into frontier)."""
+"""Structured Streaming fetch telemetry (streaming/metrics.py): the
+windowed per-host metrics and the gap-session operator, each driven
+through a real file-source stream with one file per micro-batch."""
 
 from __future__ import annotations
-
-import pyspark.sql.functions as F
-
-from dotnetspider_spark.streaming.ingest import stream_seeds_into_frontier
-from dotnetspider_spark.testing.datagen import SEED_SCHEMA, CorpusConfig, seed_rows
-
-
-def test_stream_seeds_dedup_across_batches(spark, tmp_path):
-    cfg = CorpusConfig(n_pages=100, n_hosts=4)
-    seed_dir = tmp_path / "seeds"
-    seed_dir.mkdir()
-    # two overlapping reloads as separate files (maxFilesPerTrigger=1
-    # makes them separate micro-batches)
-    b1 = spark.createDataFrame(seed_rows(cfg, 10), SEED_SCHEMA)
-    b2 = spark.createDataFrame(seed_rows(cfg, 15), SEED_SCHEMA)  # 10 overlap
-    b1.coalesce(1).write.parquet(str(seed_dir / "f1"))
-    b2.coalesce(1).write.parquet(str(seed_dir / "f2"))
-
-    q = stream_seeds_into_frontier(
-        spark,
-        f"{seed_dir}/*",
-        str(tmp_path / "frontier"),
-        str(tmp_path / "seen"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    frontier = spark.read.parquet(str(tmp_path / "frontier"))
-    seen = spark.read.parquet(str(tmp_path / "seen"))
-    # overlap deduped: 15 unique urls total, each exactly once
-    assert frontier.count() == 15
-    assert frontier.select("url").distinct().count() == 15
-    assert seen.count() == 15
 
 
 def _write_events(spark, path, rows, mtime):
@@ -221,222 +190,3 @@ def test_sessionize_hosts_state_survives_micro_batches(spark, tmp_path):
         ("a.example", "2024-01-01T00:02:00", "2024-01-01T00:02:00", 2),
     }  # late 01:30 merged into [02:00] without corrupting boundaries;
     #    open tails (a@03:00, b@00:05) not emitted
-
-
-def test_commit_batch_replay_is_idempotent(spark, tmp_path):
-    """A replayed micro-batch (driver crash between the frontier and
-    seen appends) must converge to exactly one copy — including after a
-    partial first attempt left stale batch files behind."""
-    from dotnetspider_spark.streaming.ingest import _commit_batch
-
-    table = str(tmp_path / "frontier")
-    df = spark.range(100).select(F.col("id"), F.lit("x").alias("v"))
-    _commit_batch(df, table, batch_id=3)
-    _commit_batch(df, table, batch_id=3)          # full replay
-    assert spark.read.parquet(table).count() == 100
-    _commit_batch(df.limit(40), table, batch_id=4)  # distinct batch appends
-    assert spark.read.parquet(table).count() == 140
-    # partial attempt: a leftover file from a crashed commit of batch 5
-    # is cleared when batch 5 replays
-    df.limit(10).write.mode("overwrite").parquet(str(tmp_path / "scratch"))
-    import glob as g
-    import os
-    part = sorted(g.glob(str(tmp_path / "scratch" / "part-*")))[0]
-    os.replace(part, f"{table}/batch5-99999.parquet")
-    _commit_batch(df.limit(25), table, batch_id=5)
-    assert spark.read.parquet(table).count() == 165
-
-
-def test_throttle_hosts_state_carries_across_batches(spark, tmp_path):
-    """Custom stateful throttle: per-host min spacing enforced WITHIN a
-    micro-batch (sorted ts,url) and ACROSS micro-batches (one-long
-    state); admitted timestamps per host strictly increase."""
-    from datetime import datetime as dt
-
-    from dotnetspider_spark.streaming.politeness import throttle_hosts
-
-    ev_dir = tmp_path / "req"
-    ev_dir.mkdir()
-    t = lambda s: dt.fromisoformat(f"2024-01-01 00:00:{s}")
-    # batch 1: a gets 3 requests 100ms apart with delay=150ms ->
-    # admit @ .000, deny @ .100, admit @ .200 (>= .000+.150... no:
-    # next_allowed after .000 is .150; .100 denied; .200 admitted).
-    _write_events(
-        spark,
-        ev_dir / "f1",
-        [
-            ("a.example", t("00.000"), 200, 10, 5),
-            ("a.example", t("00.100"), 200, 10, 5),
-            ("a.example", t("00.200"), 200, 10, 5),
-            ("b.example", t("00.000"), 200, 10, 5),
-        ],
-        mtime=1_700_000_000,
-    )
-    # batch 2: a @ .300 — next_allowed carried = .350 -> DENIED (the
-    # cross-batch state carry is the point); a @ .400 admitted.
-    _write_events(
-        spark,
-        ev_dir / "f2",
-        [
-            ("a.example", t("00.300"), 200, 10, 5),
-            ("a.example", t("00.400"), 200, 10, 5),
-        ],
-        mtime=1_700_000_100,
-    )
-    from dotnetspider_spark.streaming.metrics import FETCH_EVENT_SCHEMA
-
-    stream = (
-        spark.readStream.schema(FETCH_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{ev_dir}/*")
-        .select("host", "url", "ts")
-    )
-    q = (
-        throttle_hosts(stream, delay_ms=150)
-        .writeStream.format("memory")
-        .queryName("throttle")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r.host, r.ts.isoformat(timespec="milliseconds"), r.admitted)
-        for r in spark.sql("SELECT * FROM throttle").collect()
-    }
-    assert got == {
-        ("a.example", "2024-01-01T00:00:00.000", True),
-        ("a.example", "2024-01-01T00:00:00.100", False),
-        ("a.example", "2024-01-01T00:00:00.200", True),
-        ("a.example", "2024-01-01T00:00:00.300", False),
-        ("a.example", "2024-01-01T00:00:00.400", True),
-        ("b.example", "2024-01-01T00:00:00.000", True),
-    }
-    # admitted per host strictly increasing (the spacing invariant)
-    admits = sorted(
-        r.ts for r in spark.sql("SELECT * FROM throttle").collect()
-        if r.admitted and r.host == "a.example"
-    )
-    deltas = [
-        (b - a).total_seconds() for a, b in zip(admits, admits[1:])
-    ]
-    assert all(d >= 0.150 for d in deltas)
-
-
-def test_stream_request_dedup_drops_within_horizon(spark, tmp_path):
-    """Watermarked streaming dedup: a duplicate identity in a LATER
-    micro-batch within the horizon is dropped; first sighting passes."""
-    from datetime import datetime as dt
-
-    from dotnetspider_spark.streaming.metrics import FETCH_EVENT_SCHEMA
-    from dotnetspider_spark.streaming.politeness import stream_request_dedup
-
-    ev_dir = tmp_path / "reqd"
-    ev_dir.mkdir()
-    t = lambda m: dt.fromisoformat(f"2024-01-01 00:0{m}:00")
-    _write_events(
-        spark,
-        ev_dir / "f1",
-        [("a.example", t(0), 200, 10, 5), ("b.example", t(1), 200, 10, 5)],
-        mtime=1_700_000_000,
-    )
-    # same urls replayed 2 minutes later in a later micro-batch
-    _write_events(
-        spark,
-        ev_dir / "f2",
-        [("a.example", t(3), 200, 10, 5), ("c.example", t(3), 200, 10, 5)],
-        mtime=1_700_000_100,
-    )
-    stream = (
-        spark.readStream.schema(FETCH_EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{ev_dir}/*")
-        .select("host", "ts")
-    )
-    q = (
-        stream_request_dedup(stream, identity_col="host", horizon="10 minutes")
-        .writeStream.format("memory")
-        .queryName("sdedup")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        (r.host, r.ts.isoformat()) for r in spark.sql("SELECT * FROM sdedup").collect()
-    )
-    assert got == [
-        ("a.example", "2024-01-01T00:00:00"),
-        ("b.example", "2024-01-01T00:01:00"),
-        ("c.example", "2024-01-01T00:03:00"),
-    ]
-
-
-def test_stream_feeds_dedup_and_freshness_seq(spark, tmp_path):
-    from dotnetspider_spark.streaming.ingest import stream_feeds_into_frontier
-
-    feed_dir = tmp_path / "feeds"
-    feed_dir.mkdir()
-    rss = (
-        '<rss version="2.0"><channel>'
-        "<item><link>http://a.example/p1</link>"
-        "<pubDate>Wed, 01 Jan 2020 00:00:10 GMT</pubDate></item>"
-        "<item><link>http://a.example/p2</link>"
-        "<pubDate>Wed, 01 Jan 2020 00:00:05 GMT</pubDate></item>"
-        "</channel></rss>"
-    )
-    # second poll re-announces p2 and adds p3 with an unparseable date
-    rss2 = (
-        '<rss version="2.0"><channel>'
-        "<item><link>http://a.example/p2</link></item>"
-        "<item><link>http://a.example/p3</link>"
-        "<pubDate>garbage</pubDate></item>"
-        "</channel></rss>"
-    )
-    spark.createDataFrame([("a.example", rss)], "host string, feed_xml string") \
-        .coalesce(1).write.parquet(str(feed_dir / "f1"))
-    spark.createDataFrame([("a.example", rss2)], "host string, feed_xml string") \
-        .coalesce(1).write.parquet(str(feed_dir / "f2"))
-
-    q = stream_feeds_into_frontier(
-        spark,
-        f"{feed_dir}/*",
-        str(tmp_path / "frontier"),
-        str(tmp_path / "seen"),
-        str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination(120)
-
-    fr = spark.read.parquet(str(tmp_path / "frontier"))
-    rows = {r["url"]: r["seq"] for r in fr.collect()}
-    # p2 re-announced -> exactly once; bad date -> seq 0, never dropped
-    assert set(rows) == {
-        "http://a.example/p1", "http://a.example/p2", "http://a.example/p3",
-    }
-    assert rows["http://a.example/p3"] == 0
-    # published epochs become seq: fresher entry polls first under DFS
-    assert rows["http://a.example/p1"] > rows["http://a.example/p2"] > 0
-    assert spark.read.parquet(str(tmp_path / "seen")).count() == 3
-
-
-def test_stream_feeds_gates_unfetchable_entries(spark, tmp_path):
-    from dotnetspider_spark.streaming.ingest import stream_feeds_into_frontier
-
-    feed_dir = tmp_path / "feeds"
-    feed_dir.mkdir()
-    rss = (
-        '<rss version="2.0"><channel>'
-        "<item><link>http://a.example/ok</link></item>"
-        "<item><link>mailto:ed@a.example</link></item>"
-        "<item><link>/relative/path</link></item>"
-        "</channel></rss>"
-    )
-    spark.createDataFrame([("a.example", rss)], "host string, feed_xml string") \
-        .coalesce(1).write.parquet(str(feed_dir / "f1"))
-    q = stream_feeds_into_frontier(
-        spark, f"{feed_dir}/*", str(tmp_path / "fr"),
-        str(tmp_path / "seen"), str(tmp_path / "ck"),
-    )
-    q.awaitTermination(120)
-    urls = [r["url"] for r in spark.read.parquet(str(tmp_path / "fr")).collect()]
-    assert urls == ["http://a.example/ok"]
