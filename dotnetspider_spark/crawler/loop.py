@@ -7,29 +7,34 @@ iteration (SURVEY §3.1/§7).
 
 State. :class:`CrawlState` is everything one iteration hands the next.
 The crawl's tables live as DELTA parquet snapshots under the checkpoint
-root, and the state holds their live part lists: the frontier is the
-union of additive parts (``frontier/init``/``frontier/compact=N`` plus
-``fresh/iter=N`` appends) anti-joined against consumed batch identities
-(``consumed/iter=N``, which also carries each batch row's robots verdict
-``__allowed``), compacted every ``compact_every`` iterations; ``seen`` is
-the identity column of its parts (plus a bucketed compact table under
-``bucketed_seen``), and the dedup phase checks candidates against it
-with one exact anti-join (``operators.frontier.dedup_push``).
-``fetched/iter=N`` is the iteration's fact log: every consumed row, with
-the fetch ``status`` (NULL for a robots-denied row) and a ``reason`` that
-is NULL on a success, ``retry`` on a row that comes back as a retry, and
-the failing.log reason (Spider.cs:993-994) on an error.
-:meth:`CrawlState.fetched` and :meth:`CrawlState.errors` are its success
-and error views (``errors/iter=N`` dirs of older checkpoints are still
-read); the iteration's metrics row is observed on the same write.
-``downloads/iter=N`` is the other append-only log.
+root, and the state holds their live part lists.
+``fetched/iter=N`` is the iteration's fact log: every row of its batch,
+written once, with the fetch ``status`` (NULL for a robots-denied row)
+and a ``reason`` that is NULL on a success, ``retry`` on a row that
+comes back as a retry, and the failing.log reason (Spider.cs:993-994)
+on an error. :meth:`CrawlState.fetched` and :meth:`CrawlState.errors`
+are its success and error views (``errors/iter=N`` dirs of older
+checkpoints are still read); the iteration's metrics row is observed on
+the same write. The frontier is the union of additive parts
+(``frontier/init``/``frontier/compact=N`` plus ``fresh/iter=N``
+appends) anti-joined against the identities of the consumed parts —
+the fact logs since the last compaction, the delete files of the
+Iceberg model (older checkpoints list the ``consumed/iter=N`` batch
+dirs they wrote instead) — and is compacted every ``compact_every``
+iterations; ``seen`` is the identity column of its parts (plus a
+bucketed compact table under ``bucketed_seen``), and the dedup phase
+checks candidates against it with one exact anti-join
+(``operators.frontier.dedup_push``). ``downloads/iter=N`` is the other
+append-only log.
 Per-iteration I/O is therefore O(batch + new links), not O(frontier) —
 the property that matters at the 10^10-row design point. The frontier
 size is tracked arithmetically (n - consumed + fresh), so no count scan
-of the frontier exists at all. Every state
-dir is written by :func:`_write_state`, counted (where a count is used)
-from the written files' parquet footers by :func:`_rows` (no count job),
-and re-read under an explicit schema (no schema-inference job). The
+of the frontier exists at all. Every state dir is written by
+:func:`_write_state` (no ``_SUCCESS`` marker; the fact log as one part
+file per ``_ROWS_PER_FILE`` rows of its batch), counted (where a
+count is used) from the written files' parquet footers by :func:`_rows`
+(no count job), and re-read under an explicit schema (no
+schema-inference job). The
 state's fields ARE the checkpoint manifest: :meth:`CrawlState.to_manifest` /
 :meth:`CrawlState.from_manifest` are its only codec, shared by the fresh
 start, resume, :class:`Checkpointer` and ``crawler.timetravel``. Each
@@ -53,7 +58,6 @@ Phases. ``_step`` runs one ``_phase_*`` function per stage, in order:
 
     backoff     last iteration's fact log statuses -> budget multipliers
     rank        frontier --politeness, DFS/BFS, robots verdict--> batch
-                (= consumed delta)
     robots      batch -> allowed / denied (a filter on the stored verdict)
     fetch       allowed --fetcher (corpus join or HTTP)--> outcomes
     redirects   final URLs of redirected fetches -> seen
@@ -62,7 +66,8 @@ Phases. ``_step`` runs one ``_phase_*`` function per stage, in order:
     retries     transient / processor failures -> retried+1 (NEW identity)
     discover    successes --extract links, canonicalize, filters--> children
     dedup       (children ∪ retries) --exact anti-join vs seen--> fresh
-    write       fresh delta, then the fact log (metrics row observed)
+    write       fresh delta, then the fact log (metrics row observed),
+                which is the consumed delta
     compact     frontier/seen compaction every ``compact_every``
     checkpoint  manifest
 
@@ -91,6 +96,7 @@ from __future__ import annotations
 import hashlib
 import json
 import logging
+import math
 import os
 import re
 import shutil
@@ -101,7 +107,6 @@ from dataclasses import dataclass, field, fields
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from dotnetspider_spark.crawler.parse import extract_canonical_links_udf
 from dotnetspider_spark.functions.content import download_file_path, is_media_type
@@ -136,6 +141,8 @@ _ITER_SHIFT = 45  # (iter+1) << 45; block*2^20+pos stays under 2^45
 _BLOCK_BITS = 24  # parent block
 _POS_BITS = 20  # link position / retry marker
 _MAX_LINK_POS = (1 << _POS_BITS) - 2  # link positions clamp here
+#: rows per part file of a state write whose size the driver bounds
+_ROWS_PER_FILE = 1 << 20
 
 
 @dataclass
@@ -546,11 +553,12 @@ def read_manifest(root: str, it: int) -> dict | None:
 class Checkpointer:
     """Manifest writer over the parquet delta-snapshot layout.
 
-    The crawl loop writes the state tables (fresh/consumed/seen_extra/
-    downloads and the fetched fact log as ``<root>/<table>/iter=N``
-    parquet dirs, frontier compactions as ``frontier/compact=N``; older
-    checkpoints also hold ``errors/iter=N``, which their manifests list,
-    and ``metrics/iter=N``, which nothing reads); this class adds one
+    The crawl loop writes the state tables (fresh/seen_extra/downloads
+    and the fetched fact log as ``<root>/<table>/iter=N`` parquet dirs,
+    frontier compactions as ``frontier/compact=N``; older checkpoints
+    also hold ``consumed/iter=N`` and ``errors/iter=N``, which their
+    manifests list, and ``metrics/iter=N``, which nothing reads); this
+    class adds one
     atomically-renamed ``manifests/iter=N.json`` per COMPLETE iteration
     holding the live state-part lists (written after that iteration's
     state dirs, so a crash mid-iteration resumes from the previous
@@ -603,7 +611,7 @@ _LOG_SCHEMA = _FETCHED_SCHEMA + ", reason string"
 _RETRY = "retry"  # the log reason of a row that comes back as a retry
 
 
-def _read(spark: SparkSession, schema: str | StructType, paths: list[str]) -> DataFrame:
+def _read(spark: SparkSession, schema: str, paths: list[str]) -> DataFrame:
     """Parquet ``paths`` under an explicit schema (no schema-inference
     job; an iteration dir may hold no part files; a narrower schema is a
     column-pruned read), or an empty frame when there are none."""
@@ -612,11 +620,23 @@ def _read(spark: SparkSession, schema: str | StructType, paths: list[str]) -> Da
     return spark.read.schema(schema).parquet(*paths)
 
 
-def _write_state(df: DataFrame, path: str) -> None:
+def _write_state(df: DataFrame, path: str, rows: int | None = None) -> None:
     """Write ``df`` as the parquet state dir ``path``, replacing it.
     Every state-dir write goes through here; the one other state write
-    is the bucketed-seen catalog table (:func:`_write_seen_table`)."""
-    df.write.mode("overwrite").parquet(path)
+    is the bucketed-seen catalog table (:func:`_write_seen_table`).
+
+    ``rows`` is an upper bound on the row count that the driver already
+    knows (the fact log passes its batch size); the write then makes one
+    part per ``_ROWS_PER_FILE`` rows instead of one per input partition
+    (a small delta is one file, whose parquet footer would otherwise be
+    most of its bytes). No
+    ``_SUCCESS`` marker is written: the manifest rename is the commit
+    point, and no reader asks for one."""
+    if rows is not None:
+        df = df.coalesce(max(1, math.ceil(rows / _ROWS_PER_FILE)))
+    df.write.mode("overwrite").option(
+        "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+    ).parquet(path)
 
 
 def _rows(path: str) -> int:
@@ -638,7 +658,9 @@ class CrawlState:
     live part lists of the delta tables (module docstring), the frontier
     size, and the bucketed compact of ``seen`` under ``bucketed_seen``
     (catalog name, the bucket count its files were written with, and
-    its path).
+    its path). A dir may sit in more than one list: ``frontier/init``
+    and ``fresh/iter=N`` are frontier and seen parts, and a fact log
+    ``fetched/iter=N`` is a consumed part until the next compaction.
 
     Cross-iteration state lives in parquet, NOT in checkpointed RDDs.
     Spark 4's ``localCheckpoint`` copies the pre-checkpoint plan's
@@ -653,6 +675,9 @@ class CrawlState:
     """
 
     frontier_parts: list[str]
+    #: dirs whose ``identity`` column is consumed since the last frontier
+    #: compaction: the fact logs; older manifests list the
+    #: ``consumed/iter=N`` batch dirs they wrote instead
     consumed_parts: list[str]
     seen_parts: list[str]
     fetched_paths: list[str]
@@ -673,14 +698,14 @@ class CrawlState:
         return {k: getattr(self, k) for k in _MANIFEST_KEYS}
 
     def paths(self) -> list[str]:
-        """Every parquet dir this state references."""
+        """Every parquet dir this state references, each once."""
         lists = [k for k in _MANIFEST_KEYS if k.endswith(("_parts", "_paths"))]
         table = [self.seen_table_path] if self.seen_table_path else []
-        return [p for k in lists for p in getattr(self, k)] + table
+        return list(dict.fromkeys([p for k in lists for p in getattr(self, k)] + table))
 
     def frontier(self, spark: SparkSession) -> DataFrame:
-        """The live frontier: its parts anti-joined against the consumed
-        batch identities."""
+        """The live frontier: its parts anti-joined against the
+        identities of the consumed parts."""
         fr = _read(spark, FRONTIER_SCHEMA, self.frontier_parts)
         if self.consumed_parts:
             cons = _read(spark, "identity string", self.consumed_parts)
@@ -855,16 +880,15 @@ def _with_budget(ctx: _Ctx, frontier: DataFrame, backoff) -> DataFrame:
 
 
 def _phase_rank(
-    ctx: _Ctx, state: CrawlState, it: int, frontier: DataFrame, backoff
+    ctx: _Ctx, it: int, frontier: DataFrame, backoff
 ) -> tuple[DataFrame, int]:
-    """Select this iteration's batch, flag each row's robots verdict
-    (``__allowed``) and persist it as the consumed delta in ONE job: the
-    parquet write is the checkpoint (the batch is re-read from it,
-    truncating the rank plan), its identity column IS the consumed
-    anti-join part, and the stored verdict is what the robots phase and
-    the fact log read, so the rules are joined once per iteration.
-    O(batch) I/O; the frontier is NOT rewritten. Returns the batch and
-    its size."""
+    """Select this iteration's batch and flag each row's robots verdict
+    (``__allowed``) in ONE job: a local checkpoint truncates the rank
+    plan, the batch size is observed on it, and the kept verdict is what
+    the robots phase and the fact log read, so the rules are joined once
+    per iteration. Nothing is written here: the batch becomes consumed
+    when its fact log is (:func:`_phase_write`), and the frontier is NOT
+    rewritten. Returns the batch and its size."""
     cfg = ctx.cfg
     if cfg.global_limit is not None:
         # exact reference poll order — ONE global window; test scale only
@@ -889,16 +913,22 @@ def _phase_rank(
         )
     if ctx.robots is not None:
         batch = _robots_flag(batch, ctx.robots)
-    path = f"{ctx.root}/consumed/iter={it}"
-    _write_state(batch, path)
-    state.consumed_parts.append(path)
-    return _read(ctx.spark, batch.schema, [path]), _rows(path)
+    obs = Observation(f"crawl-rank-{it}")
+    batch = batch.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    # AQE may plan an empty batch (every host parked by adaptive
+    # backoff) as zero partitions: no task runs, so the Observation
+    # never fires and .get has nothing to return
+    if batch.rdd.getNumPartitions() == 0:
+        return batch, 0
+    return batch, obs.get["n"]
 
 
 def _phase_robots(batch: DataFrame) -> tuple[DataFrame, DataFrame | None]:
     """(allowed, denied or None without robots rules): a filter on the
-    verdict the rank phase stored. Denied rows are consumed, not
-    fetched, and logged as ``robots_denied``."""
+    verdict the rank phase kept. Denied rows are consumed, not fetched,
+    and logged as ``robots_denied``."""
     if "__allowed" not in batch.columns:
         return batch, None
     ok = F.col("__allowed")
@@ -998,7 +1028,9 @@ def _phase_processor(
     if ctx.processor is None:
         return success, success, fetched
     proc = ctx.processor(success).localCheckpoint(eager=True)
-    outcomes = fetched.filter(~_status_ok())
+    # a NULL status is no success: it stays an outcome, as without a
+    # processor
+    outcomes = fetched.filter(~_status_ok() | F.col("status").isNull())
     if media is not None:
         outcomes = outcomes.unionByName(media)
     outcomes = outcomes.unionByName(proc, allowMissingColumns=True)
@@ -1136,8 +1168,12 @@ def _phase_write(
 ) -> tuple[int, dict]:
     """Persist the fresh delta and append it to the frontier and seen,
     then persist the fact log, observing the iteration's scalar metrics
-    on that same write. Each write IS the materialization (one job).
-    Returns the fresh row count and the scalars."""
+    on that same write. Each write IS the materialization (one job). The
+    fact log holds every batch row, so it is also the iteration's
+    consumed part; a log of any other size (a fetcher or ``processor``
+    that drops or adds rows) could leave rows in the frontier to be
+    fetched again every iteration, and raises instead. Returns the fresh row count and
+    the scalars."""
     root = ctx.root
     path = f"{root}/fresh/iter={it}"
     _write_state(fresh, path)
@@ -1151,10 +1187,10 @@ def _phase_write(
     sent = ~F.col("reason").eqNullSafe("robots_denied")
     obs = Observation(f"crawl-iter-{it}")
     if n_consumed > 0:
-        # a zero-row batch (every host parked by adaptive backoff) runs
-        # the write as a zero-task job, so the Observation never fires
-        # and .get ASSERTS instead of returning zeros — observe only
-        # when there is something to observe
+        # a zero-row batch (every host parked by adaptive backoff) may
+        # run the write as a zero-task job, so the Observation never
+        # fires and .get does not return zeros — observe only when
+        # there is something to observe
         log = log.observe(
             obs,
             F.sum(sent.cast("int")).alias("n_fetch"),
@@ -1171,8 +1207,17 @@ def _phase_write(
             ).alias("n_hosts"),
         )
     path = f"{root}/fetched/iter={it}"
-    _write_state(log, path)
+    _write_state(log, path, rows=n_consumed)
+    n_log = _rows(path)
+    if n_log != n_consumed:
+        raise ValueError(
+            f"iteration {it} logged {n_log} rows for a batch of {n_consumed}: "
+            "a fetcher must return one row per batch row, and a processor "
+            "the success rows, same rows, two added columns (n_results, "
+            "proc_error)"
+        )
     state.fetched_paths.append(path)
+    state.consumed_parts.append(path)
     scal = obs.get if n_consumed > 0 else {}
     n_fetch, n_ok, n_tr, n_miss, n_hosts = (
         int(scal.get(k) or 0)
@@ -1192,7 +1237,7 @@ def _phase_write(
 
 def _phase_compact(ctx: _Ctx, state: CrawlState, it: int) -> None:
     """Every ``compact_every`` iterations, rewrite the live frontier as
-    ONE part, bounding the part lists and plan depth. Past
+    ONE part and start the consumed list afresh, bounding the part lists and plan depth. Past
     ``seen_compact_parts`` seen deltas, fold those too (LSM-style
     tiering: an O(seen) rewrite amortized over >=32 iterations keeps the
     dedup anti-join a bounded-fan-in union at the 1000-iteration design
@@ -1227,7 +1272,7 @@ def _step(ctx: _Ctx, state: CrawlState, it: int) -> tuple[CrawlState, dict]:
     iter_base = F.lit((it + 1) << _ITER_SHIFT)
     frontier = state.frontier(ctx.spark)
     backoff = _phase_backoff(ctx, state)
-    batch, n_consumed = _phase_rank(ctx, state, it, frontier, backoff)
+    batch, n_consumed = _phase_rank(ctx, it, frontier, backoff)
     allowed, denied = _phase_robots(batch)
     fetched, redirects = _phase_fetch(ctx, allowed)
     if redirects:

@@ -58,8 +58,10 @@ __all__ = [
 ]
 
 #: subdirs whose unreferenced children expiry deletes: the state tables
-#: compaction supersedes, plus ``blooms`` and ``metrics``, which older
-#: versions of the loop wrote and no manifest lists. The fact logs
+#: compaction supersedes, plus ``consumed`` (the batch dirs older
+#: versions of the loop wrote as the frontier's delete files, where the
+#: fact logs serve now), and ``blooms`` and ``metrics``, which older
+#: versions wrote and no manifest lists. The fact logs
 #: (fetched/errors/downloads) are never compacted away, so every live
 #: manifest references their full history and unreference-based expiry
 #: leaves them alone by construction.
@@ -97,8 +99,10 @@ def frontier_as_of(
     spark: SparkSession, root: str, iteration: int
 ) -> DataFrame:
     """The PENDING frontier exactly as iteration ``iteration+1`` would
-    have seen it: fresh parts anti-joined against consumed identities,
-    the same reconstruction a resume performs."""
+    have seen it: frontier and fresh parts anti-joined against the
+    identities of the fact logs written since the last compaction (an
+    older snapshot's ``consumed`` dirs), the same reconstruction a
+    resume performs."""
     return _state_as_of(root, iteration).frontier(spark)
 
 

@@ -56,6 +56,10 @@ class CorpusFetcher:
     redirecting rows — a small fraction of any real corpus — with an
     early exit when every chain is resolved; per-iteration fetch cost
     stays two hash joins regardless of chain depth.
+
+    A corpus that repeats a url serves one of its rows, so a fetch
+    returns exactly one row per batch row (the crawl loop's fact log,
+    which is also its consumed set, counts on that).
     """
 
     def __init__(
@@ -72,6 +76,10 @@ class CorpusFetcher:
         self._follow = follow_redirects
         self.max_redirects = max_redirects
         self._closure: DataFrame | None = None
+
+    def _pages(self, *cols: str) -> DataFrame:
+        """The corpus's ``url`` and ``cols``, one row per url."""
+        return self.corpus.select("url", *cols).dropDuplicates(["url"])
 
     def _has_redirects(self) -> bool:
         if self._follow is None:
@@ -92,10 +100,7 @@ class CorpusFetcher:
         """
         if self._closure is not None:
             return self._closure
-        edges = (
-            self.corpus.filter(F.col("redirect_to").isNotNull())
-            .select(F.col("url"), F.col("redirect_to"))
-        )
+        edges = self._pages("redirect_to").filter(F.col("redirect_to").isNotNull())
         state = edges.select(
             "url",
             F.col("redirect_to").alias("final_url"),
@@ -131,7 +136,7 @@ class CorpusFetcher:
     def fetch(self, batch: DataFrame) -> DataFrame:
         has_redirects = self._has_redirects()
         if not has_redirects:
-            pages = self.corpus.select("url", *self.content_cols)
+            pages = self._pages(*self.content_cols)
             out = batch.join(pages, "url", "left")
         else:
             closure = self._redirect_closure()
@@ -142,7 +147,7 @@ class CorpusFetcher:
                 )
                 .drop("final_url")
             )
-            tgt = self.corpus.select(
+            tgt = self._pages(*self.content_cols).select(
                 F.col("url").alias("target_url"),
                 *[F.col(c).alias(f"__t_{c}") for c in self.content_cols],
             )

@@ -54,6 +54,15 @@ if point == "after_fact_log":
         return out
 
     loop._phase_write = dying_write
+elif point == "after_compact":
+    compact = loop._phase_compact
+
+    def dying_compact(ctx, state, it):
+        compact(ctx, state, it)  # frontier/compact=N is written
+        if it == KILL_AT:
+            die()
+
+    loop._phase_compact = dying_compact
 else:
     checkpoint = loop._phase_checkpoint
 
@@ -71,20 +80,27 @@ spark = get_spark(
 cfg = CorpusConfig(n_pages=%(n_pages)d, n_hosts=%(n_hosts)d)
 loop.crawl(
     spark, gen_corpus(spark, cfg, parallelism=2), gen_seeds(spark, cfg, k=4),
-    loop.CrawlConfig(dfs=True, max_depth=3, per_host_limit=8, checkpoint_dir=ck),
+    loop.CrawlConfig(
+        dfs=True, max_depth=3, per_host_limit=8, checkpoint_dir=ck,
+        compact_every=int(sys.argv[3]),
+    ),
     robots=gen_robots(spark, cfg),
 )
 """ % {"killed": KILLED, "n_pages": TINY.n_pages, "n_hosts": TINY.n_hosts}
 
+#: kill point -> the crawl's ``compact_every``; the compaction point's
+#: crawl compacts at the second iteration, where the child dies
+POINTS = {"after_fact_log": 8, "before_manifest_rename": 8, "after_compact": 2}
 
-@pytest.mark.parametrize("point", ["after_fact_log", "before_manifest_rename"])
+
+@pytest.mark.parametrize("point", list(POINTS))
 def test_resume_after_process_death_matches_oracle(spark, tmp_path, point):
-    ck = str(tmp_path / "ckpt")
+    ck, compact_every = str(tmp_path / "ckpt"), POINTS[point]
     env = dict(os.environ, PYTHONPATH=os.pathsep.join(
         p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
     ))
     child = subprocess.run(
-        [sys.executable, "-c", CHILD, ck, point],
+        [sys.executable, "-c", CHILD, ck, point, str(compact_every)],
         cwd=ROOT, env=env, capture_output=True, text=True, timeout=900,
     )
     assert child.returncode == KILLED, child.stderr[-3000:]
@@ -93,10 +109,16 @@ def test_resume_after_process_death_matches_oracle(spark, tmp_path, point):
     assert os.path.isdir(f"{ck}/fetched/iter=1")
     if point == "before_manifest_rename":
         assert os.path.exists(f"{ck}/manifests/.iter=1.json.tmp")
+    if point == "after_compact":
+        # the compaction emptied the consumed list the fact logs fill
+        assert os.path.isdir(f"{ck}/frontier/compact=1")
 
     res = crawl(
         spark, gen_corpus(spark, TINY, parallelism=2), gen_seeds(spark, TINY, k=4),
-        CrawlConfig(dfs=True, max_depth=3, per_host_limit=8, checkpoint_dir=ck),
+        CrawlConfig(
+            dfs=True, max_depth=3, per_host_limit=8, checkpoint_dir=ck,
+            compact_every=compact_every,
+        ),
         robots=gen_robots(spark, TINY), resume=True,
     )
     pres = pycrawl(

@@ -1004,3 +1004,97 @@ def test_overlapping_seed_reloads_push_each_url_once(spark):
     )
     urls = [r.url for r in first.unionByName(second).collect()]
     assert len(urls) == len(set(urls)) == 15
+
+
+def test_processor_that_drops_a_row_fails_loudly(spark, tiny_corpus):
+    """The fact log is the consumed set: a processor that returns fewer
+    rows than it was given would leave the missing row in the frontier,
+    to be fetched again every iteration. The crawl raises at the first
+    such iteration instead."""
+    import pyspark.sql.functions as F
+
+    from dotnetspider_spark.testing.datagen import page_url
+
+    dropped = page_url(1, TINY)  # a seed, fetched with status 200
+    calls = []
+
+    def lossy(df):
+        calls.append(1)
+        return _engine_processor(df).filter(F.col("url") != dropped)
+
+    with pytest.raises(ValueError, match="same rows, two added columns"):
+        crawl(
+            spark, tiny_corpus, gen_seeds(spark, TINY, k=2),
+            CrawlConfig(dfs=True, max_depth=3, per_host_limit=8, max_iterations=20),
+            robots=gen_robots(spark, TINY), processor=lossy,
+        )
+    assert len(calls) == 1
+
+
+def test_corpus_that_repeats_a_url_crawls_like_the_plain_corpus(spark, tiny_corpus):
+    """A corpus that lists some urls twice still fetches one row per
+    batch row: the crawl finishes with the reference's fetched set, one
+    fetched row per url, and no error rows."""
+    corpus = tiny_corpus.unionByName(tiny_corpus.limit(20))
+    assert corpus.select("url").distinct().count() < corpus.count()
+    res = crawl(
+        spark, corpus, gen_seeds(spark, TINY, k=2),
+        CrawlConfig(dfs=True, max_depth=3, per_host_limit=8),
+        robots=gen_robots(spark, TINY),
+    )
+    pres = pycrawl(
+        TINY, [Request(**r) for r in seed_rows(TINY, 2)], dfs=True, max_depth=3
+    )
+    urls = [r.url for r in res.fetched.select("url").collect()]
+    assert len(urls) == len(set(urls))
+    assert set(urls) == set(pres.fetch_order)
+    assert {r.identity for r in res.seen.collect()} == pres.seen
+
+
+def test_state_layout_one_part_per_small_delta(spark, tmp_path):
+    """Each crawled row is written once, in its iteration's fact log,
+    which is also the consumed part the frontier anti-joins against: no
+    ``consumed`` dir is written. A small fact log or fresh delta is one
+    parquet part, although the fetch runs in four partitions, and no
+    state dir carries a ``_SUCCESS`` marker (checked on every fact log
+    and on every fresh delta a manifest lists)."""
+    import glob
+    import json
+    import os
+    import re
+
+    from dotnetspider_spark.sources.fetchers import DictTransport, HttpFetcher
+    from dotnetspider_spark.testing.datagen import gen_corpus_local
+
+    cfg = CorpusConfig(n_pages=40, n_hosts=3, with_payload=False)
+    pages = {
+        r["url"]: {"status": r["status"], "body": r["html"], "content_type": "text/html"}
+        for r in gen_corpus_local(cfg)
+    }
+    ck = str(tmp_path / "ckpt")
+    res = crawl(
+        spark, None, gen_seeds(spark, cfg, 3),
+        CrawlConfig(dfs=True, max_depth=3, per_host_limit=8, checkpoint_dir=ck),
+        robots=gen_robots(spark, cfg),
+        fetcher=HttpFetcher(DictTransport(pages), n_partitions=4),
+    )
+    assert res.iterations >= 2
+    assert not os.path.exists(f"{ck}/consumed")
+    manifests = glob.glob(f"{ck}/manifests/iter=*.json")
+    assert len(manifests) == res.iterations
+    fresh = set()
+    for path in manifests:
+        with open(path) as f:
+            m = json.load(f)
+        consumed = m["consumed_parts"]
+        assert consumed and all(
+            re.search(r"/fetched/iter=\d+$", p) for p in consumed
+        ), consumed
+        fresh |= {p for p in m["frontier_parts"] if re.search(r"/fresh/iter=\d+$", p)}
+    logs = glob.glob(f"{ck}/fetched/iter=*")
+    assert len(logs) == res.iterations
+    assert fresh
+    for d in logs + sorted(fresh):
+        names = os.listdir(d)
+        assert "_SUCCESS" not in names, d
+        assert len([n for n in names if n.endswith(".parquet")]) == 1, (d, names)

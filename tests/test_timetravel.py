@@ -172,12 +172,19 @@ MANIFEST_KEYS = [
 def _to_parent_layout(spark, ck: str) -> None:
     """Rewrite the checkpoint under ``ck`` into the layout written before
     the single fact log: ``fetched/iter=N`` holds the successes only,
-    ``errors/iter=N`` the failures, and the manifest lists the latter
-    under ``errors_paths``."""
+    ``errors/iter=N`` the failures, ``consumed/iter=N`` every batch row,
+    and the manifest lists the errors dirs under ``errors_paths`` and
+    the consumed dirs under ``consumed_parts``."""
     m = Checkpointer(spark, ck).load_manifest()
     m["errors_paths"] = []
+    consumed = set(m["consumed_parts"])
+    m["consumed_parts"] = []
     for path in m["fetched_paths"]:
         log = spark.read.parquet(path)
+        if path in consumed:
+            batch = path.replace("/fetched/", "/consumed/")
+            log.drop("reason", "status", "target_url", "iter").write.parquet(batch)
+            m["consumed_parts"].append(batch)
         errors = path.replace("/fetched/", "/errors/")
         log.filter("reason IS NULL").drop("reason").write.parquet(path + ".old")
         log.filter("reason <> 'retry'").select(
